@@ -61,7 +61,39 @@ object Prep {
       .withColumn("SampleDate", date_format(col("d"), "MMM"))
       .drop("FullDate", "d")
 
-  val referenceCsv = "/root/reference/kafka/sorted_water_quality.csv"
+  /** The river corpus: the reference's own output CSV when the
+    * reference checkout sits beside this repository, else the seeded
+    * fixture with the same header and shape
+    * (`src/main/resources/river/`, written by
+    * `scripts/gen_river_fixture.py`). Absolute, because the oracle SQL
+    * embeds it for DuckDB.
+    */
+  lazy val referenceCsv: String = {
+    val checkout = java.nio.file.Paths.get("..", "reference", "kafka",
+      "sorted_water_quality.csv").toAbsolutePath.normalize
+    if (java.nio.file.Files.isRegularFile(checkout)) checkout.toString
+    else fixtureCsv
+  }
+
+  private def fixtureCsv: String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val url = getClass.getResource("/river/sorted_water_quality.csv")
+    if (url.getProtocol == "file") Paths.get(url.toURI).toString
+    else {
+      // packaged in a jar: extract to a file named by its content, kept
+      // after exit because the oracle SQL reads it once the engine is done
+      val in = url.openStream()
+      val bytes = try in.readAllBytes() finally in.close()
+      val name = f"graft-river-${java.util.Arrays.hashCode(bytes)}%08x.csv"
+      val out = Paths.get(sys.props("java.io.tmpdir"), name)
+      if (!Files.exists(out) || Files.size(out) != bytes.length) {
+        val part = Files.write(Files.createTempFile(out.getParent, name, ".part"), bytes)
+        Files.move(part, out, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+      out.toString
+    }
+  }
 
   /** The complete reference ETL exercised end-to-end on the
     * reference's own corpus. Oracle reads the same CSV via DuckDB

@@ -13,6 +13,17 @@ import org.apache.spark.sql.SparkSession
   * nanos-parquet read silently change type depending on call order.
   * With the conf pinned up front, ALL nanos columns uniformly arrive
   * as LongType and `graft.ingest.Sources.events` converts explicitly.
+  *
+  * The `file://` scheme is bound HERE to [[NioLocalFileSystem]] (the
+  * `FileSystem` API) and [[NioLocalFs]] (the `FileContext` API). Without
+  * libhadoop, stock Hadoop forks a `chmod` on every local file create
+  * and a `readlink` on both ends of every `FileContext.rename`; the
+  * streaming checkpoint logs and state-store deltas do both on every
+  * micro-batch, so a river stream run spawned thousands of processes
+  * and spent most of each batch's commit time waiting on them. The
+  * replacements answer those two calls through `java.nio.file` and
+  * leave everything else, no-overwrite rename and checksum files
+  * included, to the stock classes.
   */
 object Sessions {
 
@@ -25,9 +36,13 @@ object Sessions {
     * `experimental.extraOptimizations` fallback (a late, separate
     * batch) cannot do.
     */
-  def builder(): SparkSession.Builder =
+  def builder(): SparkSession.Builder = {
+    QuietLogs.apply()
     SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -39,6 +54,25 @@ object Sessions {
       // full-rescan stats path (see ManifestTable.footerStats) and
       // blinds row-group skipping on event-time predicates at scale.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+  }
+
+  /** `WindowExec` WARNs "No Partition Defined" once per plan for every
+    * window without PARTITION BY. The engine's single-partition windows
+    * run over aggregated, corpus-size-independent inputs, and
+    * `graft.tools.WindowBounds` gates exactly that (it fails the gate
+    * when such a window's input grows with the corpus), so the WARN
+    * carries no signal and only floods the test and entry logs. Spark
+    * initializes log4j on first use and would drop a level set before
+    * that, hence the explicit initialization first.
+    */
+  private object QuietLogs extends org.apache.spark.internal.Logging {
+    def apply(): Unit = {
+      initializeLogIfNecessary(isInterpreter = false)
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        org.apache.logging.log4j.Level.ERROR)
+    }
+  }
 
   /** The standard local session used by Verify/Bench/tools. */
   def local(cores: String, shufflePartitions: String): SparkSession = {

@@ -42,11 +42,15 @@ object Pipeline {
   /** Wire→typed parse. The producer emits every field as a JSON string
     * under the CSV header names (reference: kafka/producer.py:24,37);
     * the canonical schema demands typed sensor readings — so parse
-    * with the wire schema and coerce explicitly (J2–J4, P2–P4).
+    * with the wire schema and coerce explicitly (J2–J4, P2–P4). The
+    * parse is `from_json` row for row, through
+    * [[graft.functions.JsonToStructsString]], which skips the per-row
+    * reader allocation of the built-in.
     */
   def parseWire(raw: DataFrame): DataFrame =
     raw.selectExpr("CAST(value AS STRING) AS value")
-      .select(from_json(col("value"), Schemas.wireSchema).alias("data"))
+      .select(graft.functions.JsonOps.fromJson(col("value"), Schemas.wireSchema)
+        .alias("data"))
       .select("data.*")
       .select(
         col("WaterbodyName").as("sensor_id"),

@@ -38,6 +38,13 @@ object GraftBridge {
                b: org.apache.spark.sql.types.DataType): Boolean =
     a.sameType(b)
 
+  /** `DataType.asNullable` (every nested field nullable) is
+    * `private[spark]` — bridged for expressions that, like Spark's own
+    * `from_json`, declare their output schema nullable throughout.
+    */
+  def asNullable(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
+    t.asNullable
+
   /** The planner strategies a SparkSessionExtensions instance would
     * contribute to a session built `.withExtensions` — `private[sql]`,
     * exposed so specs can prove the injection actually registers the
