@@ -32,7 +32,7 @@ object StreamBench {
   /** Replay the river corpus as wire JSON through parse→parquet sink;
     * returns rows/sec.
     */
-  private[graft] def parquetSinkRate(spark: SparkSession): Double = {
+  private def parquetSinkRate(spark: SparkSession): Double = {
     import spark.implicits._
     import graft.streaming.Pipeline
     // Producer role (driver-side by design, like kafka/producer.py:
@@ -71,16 +71,16 @@ object StreamBench {
   /** Probe a document batch against the full corpus' band-bucket
     * index; returns probe rows/sec.
     */
-  private[graft] def dedupProbeRate(spark: SparkSession, sfDir: String): Double = {
+  private def dedupProbeRate(spark: SparkSession, sfDir: String): Double = {
     import spark.implicits._
     import graft.analytics.TextOps
     val docs = graft.ingest.Sources.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     // static history index: built once, cached in the JOIN's layout —
     // the serving shape (a daily pipeline reads the materialized index,
-    // not rebuilds it; round-12 DedupProfile measured the join-layout
-    // cache worth ~9% because the static side then satisfies the join's
-    // distribution+ordering from the cache every micro-batch)
+    // not rebuilds it). The layout is a measured wash here, where the
+    // micro-batch join broadcasts the probe side (README "Dedup-probe
+    // lane profile (round 12)"); it binds in the sort-merge regime.
     val index = graft.streaming.Pipeline.dedupIndexLayout(
       TextOps.bandIndexOf(docs)).cache()
     index.count()
@@ -111,20 +111,15 @@ object StreamBench {
     * atomic commit all on the clock — the end-to-end cost of the
     * exactly-once alert table, not just the parse.
     */
-  private[graft] def alertUpsertRate(spark: SparkSession,
-      nSensors: Int = 64, tws: Boolean = false): Double = {
+  private def alertUpsertRate(spark: SparkSession): Double = {
     import spark.implicits._
     import graft.streaming.Pipeline
     import graft.model.Schemas.SensorReading
     val input = MemoryStream[SensorReading](spark)
-    // nSensors IS the state size (one AlertState per key): 64 = the
-    // toy floor every round has tracked; pass 2048 for the many-key
-    // shape where per-key store overhead dominates (the round-12
-    // HDFS-vs-RocksDB decision needs both points). Total rows stay
-    // 8192 so rates compare across state sizes — which caps nSensors
-    // at 2048: below 4 readings per key the 3-consecutive streak
-    // never completes and the produced-no-alerts require below fires
-    // (correctly — a bench that emits nothing measured nothing).
+    // 64 sensors = 64 AlertStates: the toy state size every round has
+    // tracked (README "Streaming alert-sink throughput" has the
+    // many-key and RocksDB points)
+    val nSensors = 64
     val rows = (0 until 8192).map { i =>
       val bad = (i / nSensors) % 8 < 4 // alternating bad/healthy runs
       SensorReading(f"S${i % nSensors}%04d",
@@ -132,9 +127,7 @@ object StreamBench {
         Some(if (bad) 5.0f else 7.5f), Some(50f), Some(100f))
     }
     val dir = tempDir("alertwh")
-    val mk = if (tws) Pipeline.alertsToWarehouseTws _
-             else Pipeline.alertsToWarehouse _
-    val q = mk(input.toDS(), s"$dir/gold",
+    val q = Pipeline.alertsToWarehouse(input.toDS(), s"$dir/gold",
       s"$dir/chk", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     val t0 = System.nanoTime()
     try {
@@ -154,7 +147,7 @@ object StreamBench {
     * fold + snapshot emission in Update mode — the cost of keeping a
     * live regression per sensor.
     */
-  private[graft] def ar1Rate(spark: SparkSession): Double = {
+  private def ar1Rate(spark: SparkSession): Double = {
     import spark.implicits._
     import graft.streaming.Pipeline
     import graft.model.Schemas.SensorReading

@@ -69,23 +69,11 @@ object TextOps {
 
   /** Driver-set ceiling for the scan-side dup-hash attach: up to this
     * many duplicated keys ride the plan as a [[graft.functions.DupPositions]]
-    * reference (8 MiB of longs at the default — the same order as a
-    * comfortable broadcast build side); past it [[dupSpans]] falls
-    * back to the distributed join lane. Env-overridable for larger
-    * drivers (`graft.dupspan.maxDriverKeys` system property).
+    * reference (8 MiB of longs — the same order as a comfortable
+    * broadcast build side); past it [[dupSpans]] falls back to the
+    * distributed join lane.
     */
-  val DupSpanMaxDriverKeys: Int =
-    sys.props.get("graft.dupspan.maxDriverKeys").map { s =>
-      // fail with the knob's name, not an ExceptionInInitializerError
-      // that poisons the whole TextOps object for every query
-      val n = try s.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.dupspan.maxDriverKeys must be an int key COUNT, got '$s'")
-      }
-      require(n >= 0 && n < Int.MaxValue, // < MaxValue: the +1 overfetch
-        s"graft.dupspan.maxDriverKeys out of range: $n")
-      n
-    }.getOrElse(1 << 20)
+  val DupSpanMaxDriverKeys: Int = 1 << 20
 
   /** Oracle doc-length cap: the SQL twin enumerates window positions
     * from a constant series of this length (DuckDB v1.0 has no
@@ -2510,9 +2498,10 @@ object TextOps {
     * envelopes covering one bkey — is the metric that matters (not raw
     * tranche count): it bounds the files a single probe key can match,
     * i.e. exactly the kept-file/readFiles-bytes growth appends cost
-    * (measured by `tools/PruneBound`'s appended lane: kept files and
-    * probe seconds grow ~linearly with depth at fixed corpus size,
-    * and one re-lay restores the write-layout floor).
+    * (measured in README "Round 14: the closed accretion loop, and
+    * the tranche-growth bound": kept files and probe seconds grow
+    * ~linearly with depth at fixed corpus size, and one re-lay
+    * restores the write-layout floor).
     */
   val DedupRelayDepth = 8
 
@@ -2822,19 +2811,18 @@ object TextOps {
     } finally sigs.unpersist(blocking = false): Unit
   }
 
-  /** Per-JVM committed-index cache for [[incrementalDedupPruned]],
-    * keyed by corpus dir and gated on `-Dgraft.bench.cacheDedupIndex`
-    * (set ONLY by [[graft.Bench]] — VERDICT r12 #4): the bench's
-    * repeated passes were measuring an index REBUILD every pass
-    * (~85% of the query's 2.5–4 s), a build metric standing in for
-    * the serving metric. With the cache, pass 1 builds + commits the
-    * index once and later passes measure what a serving deployment
-    * pays per batch: the probe. Verify/oracle runs never set the flag
-    * and keep the build-probe-delete shape. Cached dirs are removed by
-    * a JVM shutdown hook.
+  /** Build-probe-delete plumbing shared by the serving-index queries:
+    * `build` commits an index under a fresh temp dir, `use` probes it
+    * (the probe returns an eagerly materialized frame, so it still
+    * collects once the dir is gone), and the dir is removed either way.
     */
-  private val dedupIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def withServingIndex(build: java.io.File => String)
+      (use: String => DataFrame): DataFrame = {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft_dedup_idx_").toFile
+    try use(build(tmp))
+    finally graft.sinks.Sinks.deleteRecursively(tmp)
+  }
 
   /** [[incrementalDedup]] through the disk-backed serving index:
     * history is committed with [[dedupIndexWrite]], the probe runs
@@ -2843,36 +2831,12 @@ object TextOps {
     * this query adds over q_incr_dedup is the PHYSICAL claim: file
     * skipping changes which bytes are read, never which rows match.
     */
-  /** Build-or-reuse plumbing shared by the serving-index queries:
-    * under the bench flag the committed index is served from
-    * [[dedupIndexCache]] (keyed so the write-path and append-path
-    * indexes never collide); otherwise build-probe-delete.
-    */
-  private def withServingIndex(cacheKey: String)
-      (build: java.io.File => String)
-      (use: String => DataFrame): DataFrame =
-    if (sys.props.get("graft.bench.cacheDedupIndex").contains("true")) {
-      val path = dedupIndexCache.computeIfAbsent(cacheKey, { _ =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_dedup_idx_cache_").toFile
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          graft.sinks.Sinks.deleteRecursively(tmp)))
-        build(tmp)
-      })
-      use(path)
-    } else {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_dedup_idx_").toFile
-      try use(build(tmp))
-      finally graft.sinks.Sinks.deleteRecursively(tmp)
-    }
-
   def incrementalDedupPruned(spark: SparkSession, dir: String,
                              minEstJaccard: Double = 0.75): DataFrame = {
     val docs = documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     val isBatch = graft.operators.Scale.isBatch(col("doc_id"))
-    withServingIndex(dir) { into =>
+    withServingIndex { into =>
       val path = new java.io.File(into, "dedup_index").toString
       dedupIndexWrite(bandIndexOf(docs.filter(!isBatch)), path)
       path
@@ -2897,7 +2861,7 @@ object TextOps {
     val docs = documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     val isBatch = graft.operators.Scale.isBatch(col("doc_id"))
-    withServingIndex(s"$dir#appended") { into =>
+    withServingIndex { into =>
       val path = new java.io.File(into, "dedup_index").toString
       val hist = bandIndexOf(docs.filter(!isBatch))
         .localCheckpoint(eager = true) // two tranche writes, one sig pass
@@ -2926,7 +2890,7 @@ object TextOps {
     val docs = documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     val isBatch = graft.operators.Scale.isBatch(col("doc_id"))
-    withServingIndex(s"$dir#compacted") { into =>
+    withServingIndex { into =>
       val path = new java.io.File(into, "dedup_index").toString
       val hist = bandIndexOf(docs.filter(!isBatch))
         .localCheckpoint(eager = true) // four tranche writes, one sig pass

@@ -257,11 +257,10 @@ private[ingest] class ManifestChangeReaderFactory(schema: StructType)
   // path's per-file fixed costs (second footer read, vector init,
   // ColumnarToRow) measurably exceed its decode win — the A/B at
   // ~600 KB files read ×1.05 AGAINST columnar while ≥MB-scale files
-  // read ×1.47 for it (DvBound sourcenoop). The gate is driver-side
-  // file length at planning time, one metadata call per CHANGED file.
-  // -Dgraft.stream.rowDecode=true forces the legacy row lane (debug /
-  // A-B measurement valve; DvBound's sourcenoop lane uses it for the
-  // before/after evidence).
+  // read ×1.47 for it (OPTIMIZATION_r15.md §5, "Columnar feed lane
+  // gate"). The gate is driver-side file length at planning time, one
+  // metadata call per CHANGED file; ChangeFeedLaneSpec pins both lanes
+  // to the same change set.
   private val ColumnarMinBytes = 4L << 20
   // hoisted: a fresh Configuration per call is an XML parse, and
   // Spark consults supportColumnarReads repeatedly during planning.
@@ -270,15 +269,13 @@ private[ingest] class ManifestChangeReaderFactory(schema: StructType)
   @transient private lazy val statusConf =
     new org.apache.hadoop.conf.Configuration()
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    !sys.props.get("graft.stream.rowDecode").contains("true") && {
-      val p = partition.asInstanceOf[ManifestChangePartition]
-      try {
-        val hp = new org.apache.hadoop.fs.Path(p.filePath)
-        hp.getFileSystem(statusConf).getFileStatus(hp)
-          .getLen >= ColumnarMinBytes
-      } catch { case scala.util.control.NonFatal(_) =>
-        false // unreadable status: keep the row lane (read fails loud later)
-      }
+    try {
+      val hp = new org.apache.hadoop.fs.Path(
+        partition.asInstanceOf[ManifestChangePartition].filePath)
+      hp.getFileSystem(statusConf).getFileStatus(hp)
+        .getLen >= ColumnarMinBytes
+    } catch { case scala.util.control.NonFatal(_) =>
+      false // unreadable status: keep the row lane (read fails loud later)
     }
 
   override def createColumnarReader(

@@ -260,7 +260,7 @@ object Scale {
     * table as a reference object, replacing the original
     * sum-of-when-terms whose ~cuts-sized expression tree cost ~1 s of
     * pure Catalyst/Janino overhead per query (measured
-    * data-independent in tools/WinsProbe).
+    * data-independent; README "The 100× runbook").
     */
   private[graft] def shardCol(bnds: Seq[(Long, Long)], b: Column,
                               k: Column): Column =

@@ -359,8 +359,8 @@ object ManifestTable {
   private val LatestHint = "_latest"
   private val MaxHintProbes = 64
 
-  private[graft] def writeLatestHint(spark: SparkSession, path: String,
-                                     v: Long): Unit =
+  private def writeLatestHint(spark: SparkSession, path: String,
+                              v: Long): Unit =
     try {
       val mdir = new org.apache.hadoop.fs.Path(s"$path/$ManifestDir")
       val fs = fsOf(spark, mdir)

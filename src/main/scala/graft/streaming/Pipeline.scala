@@ -131,15 +131,36 @@ object Pipeline {
         col("session_window.end").as("session_end"),
         col("sensor_id"), col("n"), col("avg_ph"))
 
-  /** Out-of-band predicate (F1 thresholds; missing values don't vote).
-    * `private[graft]` so [[graft.tools.TwsProfile]]'s stripped-down
-    * processor variants fold the IDENTICAL predicate — a profile that
-    * re-implemented it would measure its own copy.
-    */
-  private[graft] def isOutOfBand(r: SensorReading): Boolean = {
+  /** Out-of-band predicate (F1 thresholds; missing values don't vote). */
+  private def isOutOfBand(r: SensorReading): Boolean = {
     val phBad = r.ph_value.exists(p => p < 6.5f || p > 8.5f)
     val doBad = r.do_value.exists(_ < 30f)
     phBad || doBad
+  }
+
+  /** The alert streak fold shared by [[alerts]] and [[AlertProcessor]]:
+    * one sensor's micro-batch rows in event-time order, folded from
+    * `start` — an out-of-band reading extends the streak (firing an
+    * alert when it reaches [[AlertThreshold]]), a healthy one resets
+    * it. Returns the new state and the alerts fired.
+    */
+  private def foldStreak(sensorId: String, rows: Iterator[SensorReading],
+                         start: AlertState): (AlertState, Iterator[Alert]) = {
+    val sorted = rows.toSeq.sortBy(r =>
+      (Option(r.timestamp).map(_.getTime).getOrElse(0L), r.sensor_id))
+    var st = start
+    val out = Seq.newBuilder[Alert]
+    sorted.foreach { r =>
+      val ms = Option(r.timestamp).map(_.getTime).getOrElse(st.lastEventMs)
+      st =
+        if (isOutOfBand(r)) {
+          val n = st.consecutive + 1
+          if (n == AlertThreshold)
+            out += Alert(sensorId, r.timestamp, n, r.ph_value, r.do_value)
+          AlertState(n, ms)
+        } else AlertState(0, ms)
+    }
+    (st, out.result().iterator)
   }
 
   /** T7: per-sensor alert state machine via flatMapGroupsWithState —
@@ -152,30 +173,22 @@ object Pipeline {
     val spark = readings.sparkSession
     import spark.implicits._
 
-    def fn(sensorId: String, rows: Iterator[SensorReading],
-           state: GroupState[AlertState]): Iterator[Alert] = {
+    // a function value, not a local def: scalac reaches the module's
+    // private foldStreak from a lambda body through its static
+    // instance, while a lifted local def would call it on `this` and
+    // the closure Spark serializes would capture the Pipeline object
+    val fn: (String, Iterator[SensorReading], GroupState[AlertState]) =>
+        Iterator[Alert] = (sensorId, rows, state) => {
       if (state.hasTimedOut) {
         state.remove()
         Iterator.empty
       } else {
-        val sorted = rows.toSeq.sortBy(r =>
-          (Option(r.timestamp).map(_.getTime).getOrElse(0L), r.sensor_id))
-        var st = state.getOption.getOrElse(AlertState(0, 0L))
-        val out = Seq.newBuilder[Alert]
-        sorted.foreach { r =>
-          val ms = Option(r.timestamp).map(_.getTime).getOrElse(st.lastEventMs)
-          st =
-            if (isOutOfBand(r)) {
-              val n = st.consecutive + 1
-              if (n == AlertThreshold)
-                out += Alert(sensorId, r.timestamp, n, r.ph_value, r.do_value)
-              AlertState(n, ms)
-            } else AlertState(0, ms)
-        }
+        val (st, out) = foldStreak(sensorId, rows,
+          state.getOption.getOrElse(AlertState(0, 0L)))
         state.update(st)
         if (st.lastEventMs > 0)
           state.setTimeoutTimestamp(st.lastEventMs + 3600 * 1000)
-        out.result().iterator
+        out
       }
     }
 
@@ -213,37 +226,24 @@ object Pipeline {
     override def handleInputRows(key: String,
         rows: Iterator[SensorReading],
         timerValues: TimerValues): Iterator[Alert] = {
-      val sorted = rows.toSeq.sortBy(r =>
-        (Option(r.timestamp).map(_.getTime).getOrElse(0L), r.sensor_id))
       val prev =
         if (state.exists()) state.get() else AlertState(0, 0L)
-      var st = prev
-      val out = Seq.newBuilder[Alert]
-      sorted.foreach { r =>
-        val ms = Option(r.timestamp).map(_.getTime).getOrElse(st.lastEventMs)
-        st =
-          if (isOutOfBand(r)) {
-            val n = st.consecutive + 1
-            if (n == AlertThreshold)
-              out += Alert(key, r.timestamp, n, r.ph_value, r.do_value)
-            AlertState(n, ms)
-          } else AlertState(0, ms)
-      }
+      val (st, out) = foldStreak(key, rows, prev)
       state.update(st)
       // chained eviction timer (round 12): register ONCE on a key's
       // first event; [[handleExpiredTimer]] re-arms while the key is
       // active, so the deadline is exact ON FIRE without being
       // re-written every batch. Removes 2 RocksDB timer writes per
       // key per micro-batch. Throughput effect at toy scale: a WASH —
-      // an alternating old/new StreamProbe A/B at 2048 keys measured
-      // means within 1% (694 vs 699 rows/s), so the tws lane's gap to
-      // fmgws is NOT timer traffic (per-key typed-state encoding and
-      // the timer-CF scan are what remain). Kept because fewer state
-      // writes is strictly no worse and the fire-time chain is the
-      // simpler contract.
+      // an alternating old/new A/B at 2048 keys measured means within
+      // 1% (694 vs 699 rows/s; README "Streaming alert-sink
+      // throughput"), so the tws lane's gap to fmgws is NOT timer
+      // traffic (per-key typed-state encoding and the timer-CF scan
+      // are what remain). Kept because fewer state writes is strictly
+      // no worse and the fire-time chain is the simpler contract.
       if (prev.lastEventMs == 0 && st.lastEventMs > 0)
         getHandle.registerTimer(st.lastEventMs + EvictAfterMs)
-      out.result().iterator
+      out
     }
 
     override def handleExpiredTimer(key: String,
@@ -584,8 +584,9 @@ object Pipeline {
   /** Serving layout for [[dedupProbeStream]]'s history index: the
     * cache materialized in the join's distribution + ordering
     * (hash-partitioned and sorted on the four join keys). Honest
-    * measurement (round-12 `DedupProfile`, INTERLEAVED 6-pass A/B —
-    * the first sequential cut's apparent ~9% was warmup ordering):
+    * measurement (README "Dedup-probe lane profile (round 12)",
+    * INTERLEAVED 6-pass A/B — the first sequential cut's apparent ~9%
+    * was warmup ordering):
     * throughput is a WASH vs the plain cache, because the executed
     * plan broadcasts the batch-sized PROBE side and streams the index
     * through the join — the static side's partitioning never binds.
@@ -823,9 +824,10 @@ object Pipeline {
     *
     * txnIds are scoped by batchId, so ONE accreting stream per index
     * (the manifest's single-writer contract anyway). Growing tranche
-    * count degrades kept-files per probe ~linearly (measured:
-    * `tools/PruneBound` appended lane); the append path re-lays the
-    * index via [[graft.analytics.TextOps.compactDedupIndex]] once
+    * count degrades kept-files per probe ~linearly (measured: README
+    * "Round 14: the closed accretion loop, and the tranche-growth
+    * bound"); the append path re-lays the index via
+    * [[graft.analytics.TextOps.compactDedupIndex]] once
     * envelope overlap depth exceeds `relayDepth`.
     */
   def dedupProbeAppendToWarehouse(docs: DataFrame, indexPath: String,
@@ -892,8 +894,8 @@ object Pipeline {
     * and [[graft.sinks.ManifestTable.deleteWhereMor]] commits their
     * (file, position) pairs as a deletion-vector sidecar — O(matching
     * rows) bytes per batch, never a file rewrite, so the lane's cost
-    * is independent of table size (the DvBound-measured ~5 KB per
-    * thousand scattered keys).
+    * is independent of table size (~5 KB per thousand scattered keys,
+    * README "Round 14 (continued)", "Measured bounds").
     *
     * Exactly-once WITHOUT a txn marker: foreachBatch replays are
     * idempotent BY CONSTRUCTION, because the delete scan is itself

@@ -1052,7 +1052,16 @@ class TextOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1),
         Option(r.get(r.fieldIndex("dup_of"))),
         Option(r.get(r.fieldIndex("est_jaccard"))))).toSet
-    val pruned = TextOps.incrementalDedupPruned(spark, sf).collect()
+    // build-probe-delete: the call leaves no index dir behind, and the
+    // frame it returns is materialized, so it collects without one
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def idxDirs(): Set[String] = Option(tmp.list()).toSet.flatten
+      .filter(_.startsWith("graft_dedup_idx_"))
+    val before = idxDirs()
+    val prunedDf = TextOps.incrementalDedupPruned(spark, sf)
+    val leaked = idxDirs() -- before
+    assert(leaked.isEmpty, s"serving index dirs left in $tmp: $leaked")
+    val pruned = prunedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1),
         Option(r.get(r.fieldIndex("dup_of"))),
         Option(r.get(r.fieldIndex("est_jaccard"))))).toSet
