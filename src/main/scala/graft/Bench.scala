@@ -76,6 +76,11 @@ object Bench {
   private def calibrationWarmup(spark: SparkSession): Unit =
     (1 to 24).foreach(_ => calibrationOnce(spark): Unit)
 
+  /** Timed passes per query: the min of 3 interleaved passes is the
+    * reported time.
+    */
+  private val Runs = 3
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -113,19 +118,6 @@ object Bench {
     // Sorted-name order: Map iteration order is arbitrary and changes as
     // queries are added, which made run-to-run artifacts incomparable.
     val names = picked.toSeq.sortBy(_._1)
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // floor-measurement / load-experiment mode: print N probe times and
-    // exit (used to record CalibrationFloorSecs and to verify the
-    // factor tracks a deliberately loaded machine)
-    if (sys.env.contains("SPARK_GRAFT_CALIBRATE_ONLY")) {
-      val n = sys.env("SPARK_GRAFT_CALIBRATE_ONLY").toInt
-      calibrationWarmup(spark)
-      (1 to n).foreach { i =>
-        println(f"[calibrate] probe$i%02d: ${calibrationSecs(spark)}%.4f s")
-      }
-      spark.stop()
-      return
-    }
     val acc = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
       names.map { case (n, _) => n -> Vector.empty[Double] }: _*)
     // one ambient probe BEFORE each pass and one after the last, so
@@ -136,7 +128,7 @@ object Bench {
     // (measured ~2 s first run vs ~0.5 s warm) must not read as
     // ambient load on pass 1
     calibrationWarmup(spark)
-    (1 to nRuns).foreach { _ =>
+    (1 to Runs).foreach { _ =>
       probes += calibrationSecs(spark)
       names.foreach { case (name, fn) =>
         dropCaches(spark)
@@ -161,7 +153,7 @@ object Bench {
         yield (mx - mn) / math.max(mn, 1e-9)).getOrElse(-1.0)
       s"\"" + k + "\":" + math.round(sp * 100.0) / 100.0
     }.mkString("{", ",", "}")
-    val errors = results.collect { case (k, v) if v.size < nRuns => "\"" + k + "\"" }
+    val errors = results.collect { case (k, v) if v.size < Runs => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.flatMap(_._2.minOption).sum
     val streaming = StreamBench.run(spark, sfDir)
@@ -187,7 +179,7 @@ object Bench {
       s"""{"metric":"queries_max","queries":$qmax,"sf":"$sfDir"}""",
       s"""{"metric":"queries_rel_spread","queries":$qspread,"sf":"$sfDir"}""",
       s"""{"metric":"calibration","floor_secs":$CalibrationFloorSecs,"probe_secs":${fmtVec(probeSecs)},"ambient_factor":${fmtVec(factors)},"note":"probes bracket each pass (n_runs+1) + one after streaming; divide totals/mins by ambient_factor_median before cross-round diffs"}""",
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","runs":$nRuns,"agg":"min","order":"interleaved","errors":$errors,"ambient_factor_median":${f"$factorMedian%.3f"},"streaming_rows_per_sec":$streaming,"full_artifact":"$benchOut"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","runs":$Runs,"agg":"min","order":"interleaved","errors":$errors,"ambient_factor_median":${f"$factorMedian%.3f"},"streaming_rows_per_sec":$streaming,"full_artifact":"$benchOut"}""")
     // The driver's tail capture truncated ~2/3 of the round-8 per-query
     // map, blinding round-over-round diffs — so the FULL artifact also
     // lands in a file (path echoed in the total line above).

@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's query surface (SURVEY.md §7).
   *
-  * Every implemented operator from SURVEY.md §2 is registered here as a
-  * named query; where the semantics are ANSI-SQL-expressible the paired
-  * DuckDB oracle lives in [[oracleSql]] (hash-compared by the driver on
-  * sf0.01). Non-SQL-expressible ops (LSH bucketing internals, streaming
-  * state machines, multimodal decode) get rows-only checks plus their
-  * own ScalaTest suites.
+  * Every implemented operator from SURVEY.md §2 is registered as a
+  * named query together with its DuckDB oracle ([[oracleSql]],
+  * hash-compared by `scripts/local_verify.py` on sf0.01). Behaviour
+  * the SQL cannot see (LSH bucketing internals, streaming state
+  * machines, multimodal decode) is pinned by each module's own
+  * ScalaTest suite.
   */
 object SparkEntry {
 
@@ -20,41 +20,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     analytics.Relational.revenueByNation(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, each listing its queries once with their
+    * oracles ([[QueryModule.registry]]).
+    */
+  private[graft] val modules: Seq[QueryModule] = Seq(
+    analytics.Relational, analytics.Affinity, analytics.Stats,
+    analytics.TimeSeries, analytics.Events, analytics.TextOps,
+    analytics.Similarity, analytics.Quality, analytics.Privacy,
+    analytics.Packing, analytics.Multimodal, functions.Aggregators,
+    operators.Scale, sinks.Sinks, etl.Prep)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    analytics.Relational.queries ++
-      analytics.Affinity.queries ++
-      analytics.Stats.queries ++
-      analytics.TimeSeries.queries ++
-      analytics.Events.queries ++
-      analytics.TextOps.queries ++
-      analytics.Similarity.queries ++
-      analytics.Quality.queries ++
-      analytics.Privacy.queries ++
-      analytics.Packing.queries ++
-      analytics.Multimodal.queries ++
-      functions.Aggregators.queries ++
-      operators.Scale.queries ++
-      sinks.Sinks.queries ++
-      etl.Prep.queries
+    modules.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
-    analytics.Relational.oracles ++
-      analytics.Affinity.oracles ++
-      analytics.Stats.oracles ++
-      analytics.TimeSeries.oracles ++
-      analytics.Events.oracles ++
-      analytics.TextOps.oracles ++
-      analytics.Similarity.oracles ++
-      analytics.Quality.oracles ++
-      analytics.Privacy.oracles ++
-      analytics.Packing.oracles ++
-      functions.Aggregators.oracles ++
-      operators.Scale.oracles ++
-      sinks.Sinks.oracles ++
-      analytics.Multimodal.oracles ++
-      etl.Prep.oracles
+    modules.flatMap(_.oracles).toMap
 }

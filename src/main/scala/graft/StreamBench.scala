@@ -46,26 +46,30 @@ object StreamBench {
       input.toDF().select(col("value").cast("binary").as("value")))
     val out = tempDir("sink")
     val ckpt = tempDir("ckpt")
-    // start the query FIRST, then feed chunk-by-chunk with a drain
-    // between adds: MemoryStream has no admission control, so
-    // pre-adding everything would plan ONE giant batch under
-    // AvailableNow and the rate would overstate steady-state
-    // multi-batch throughput. Interleaved drains force one micro-batch
-    // per chunk — per-batch planning and commit cost included.
-    val q = Pipeline.toParquetSink(parsed, out, ckpt,
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    val t0 = System.nanoTime()
     try {
-      wire.grouped(4096).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val rows = spark.read.parquet(out).count()
-    require(rows == wire.length,
-      s"sink lost rows: $rows of ${wire.length}")
-    rows / secs
+      // start the query FIRST, then feed chunk-by-chunk with a drain
+      // between adds: MemoryStream has no admission control, so
+      // pre-adding everything would plan ONE giant batch under
+      // AvailableNow and the rate would overstate steady-state
+      // multi-batch throughput. Interleaved drains force one
+      // micro-batch per chunk — per-batch planning and commit cost
+      // included.
+      val q = Pipeline.toParquetSink(parsed, out, ckpt,
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      val t0 = System.nanoTime()
+      try {
+        wire.grouped(4096).foreach { chunk =>
+          input.addData(chunk.toSeq)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      val secs = (System.nanoTime() - t0) / 1e9
+      val rows = spark.read.parquet(out).count()
+      require(rows == wire.length,
+        s"sink lost rows: $rows of ${wire.length}")
+      rows / secs
+    } finally Seq(out, ckpt).foreach(d =>
+      graft.sinks.Sinks.deleteRecursively(new java.io.File(d)))
   }
 
   /** Probe a document batch against the full corpus' band-bucket
@@ -127,19 +131,21 @@ object StreamBench {
         Some(if (bad) 5.0f else 7.5f), Some(50f), Some(100f))
     }
     val dir = tempDir("alertwh")
-    val q = Pipeline.alertsToWarehouse(input.toDS(), s"$dir/gold",
-      s"$dir/chk", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    val t0 = System.nanoTime()
     try {
-      rows.grouped(2048).foreach { chunk =>
-        input.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val secs = (System.nanoTime() - t0) / 1e9
-    require(graft.sinks.ManifestTable.read(spark, s"$dir/gold").count() > 0,
-      "alert warehouse bench produced no alerts")
-    rows.length / secs
+      val q = Pipeline.alertsToWarehouse(input.toDS(), s"$dir/gold",
+        s"$dir/chk", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      val t0 = System.nanoTime()
+      try {
+        rows.grouped(2048).foreach { chunk =>
+          input.addData(chunk.toSeq)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      val secs = (System.nanoTime() - t0) / 1e9
+      require(graft.sinks.ManifestTable.read(spark, s"$dir/gold").count() > 0,
+        "alert warehouse bench produced no alerts")
+      rows.length / secs
+    } finally graft.sinks.Sinks.deleteRecursively(new java.io.File(dir))
   }
 
   /** Readings/sec through the streaming exact-moment AR(1)
@@ -175,9 +181,7 @@ object StreamBench {
     * `streaming_rows_per_sec` field. A failed microbench reports -1
     * rather than killing the batch bench artifact.
     */
-  def run(spark: SparkSession,
-          sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-            "/root/testdata/sf0.1")): String = {
+  def run(spark: SparkSession, sfDir: String): String = {
     def guard(tag: String)(f: => Double): Double =
       try f catch { case e: Throwable =>
         System.err.println(s"[bench] streaming $tag failed: ${e.getMessage}")

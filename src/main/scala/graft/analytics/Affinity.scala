@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources._
+import graft.{Query, QueryModule}
 
 /** Product-affinity analytics over the order/lineitem fact: market-
   * basket co-occurrence and PageRank centrality on the co-purchase
@@ -19,7 +20,7 @@ import graft.ingest.Sources._
   * re-partitioned once and reused via localCheckpoint, the same
   * lineage-truncation pattern as connectedComponents.
   */
-object Affinity {
+object Affinity extends QueryModule {
 
   /** Pairs must co-occur in at least this many distinct orders. */
   val MinSupport = 2
@@ -1299,41 +1300,22 @@ object Affinity {
       |FROM rec WHERE moving = 0
       |ORDER BY part""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_part_kcore" -> (partKCore _),
-    "q_part_communities" -> (partCommunities _),
-    "q_part_modularity" -> (partModularity _),
-    "q_link_prediction" -> (linkPrediction _),
-    "q_part_sssp" -> (partSssp _),
-    "q_part_copurchase" -> (partCopurchase _),
-    "q_apriori_triples" -> (aprioriTriples _),
-    "q_assoc_rules" -> (assocRules _),
-    "q_part_triangles" -> (partTriangles _),
-    "q_part_pagerank" -> (partPagerank _),
-    "q_part_ppr" -> (partPpr _),
-    "q_pagerank_converged" -> (partPagerankConverged _),
-    "q_part_bfs" -> (partBfs _),
-    "q_hits_bipartite" -> (hitsBipartite _),
-    "q_degree_assortativity" -> (degreeAssortativity _),
-    "q_item_recs" -> (itemRecs _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_part_kcore" -> partKCoreSql,
-    "q_part_communities" -> partCommunitiesSql,
-    "q_part_modularity" -> partModularitySql,
-    "q_link_prediction" -> linkPredictionSql,
-    "q_part_sssp" -> partSsspSql,
-    "q_part_copurchase" -> partCopurchaseSql,
-    "q_apriori_triples" -> aprioriTriplesSql,
-    "q_assoc_rules" -> assocRulesSql,
-    "q_part_triangles" -> partTrianglesSql,
-    "q_part_pagerank" -> partPagerankSql,
-    "q_part_ppr" -> partPprSql,
-    "q_pagerank_converged" -> partPagerankConvergedSql,
-    "q_part_bfs" -> partBfsSql,
-    "q_hits_bipartite" -> hitsBipartiteSql,
-    "q_degree_assortativity" -> degreeAssortativitySql,
-    "q_item_recs" -> itemRecsSql
+  val registry: Map[String, Query] = Map(
+    "q_part_kcore" -> Query(partKCore, partKCoreSql),
+    "q_part_communities" -> Query(partCommunities, partCommunitiesSql),
+    "q_part_modularity" -> Query(partModularity, partModularitySql),
+    "q_link_prediction" -> Query(linkPrediction, linkPredictionSql),
+    "q_part_sssp" -> Query(partSssp, partSsspSql),
+    "q_part_copurchase" -> Query(partCopurchase, partCopurchaseSql),
+    "q_apriori_triples" -> Query(aprioriTriples, aprioriTriplesSql),
+    "q_assoc_rules" -> Query(assocRules, assocRulesSql),
+    "q_part_triangles" -> Query(partTriangles, partTrianglesSql),
+    "q_part_pagerank" -> Query(partPagerank, partPagerankSql),
+    "q_part_ppr" -> Query(partPpr, partPprSql),
+    "q_pagerank_converged" -> Query(partPagerankConverged, partPagerankConvergedSql),
+    "q_part_bfs" -> Query(partBfs, partBfsSql),
+    "q_hits_bipartite" -> Query(hitsBipartite, hitsBipartiteSql),
+    "q_degree_assortativity" -> Query(degreeAssortativity, degreeAssortativitySql),
+    "q_item_recs" -> Query(itemRecs, itemRecsSql)
   )
 }

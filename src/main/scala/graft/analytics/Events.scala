@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.ingest.Sources._
+import graft.{Query, QueryModule}
 
 /** Event-stream batch analytics (SURVEY.md §2.8 L5–L6).
   *
@@ -20,7 +21,7 @@ import graft.ingest.Sources._
   * extraction is a codegen'd scalar expression applied scan-side, so
   * column pruning still reaches parquet.
   */
-object Events {
+object Events extends QueryModule {
 
   /** Session gap: a new session starts after 30 idle minutes. Gap
     * decisions are made on floor-second epoch values so batch, stream
@@ -1373,51 +1374,27 @@ object Events {
       |    AS did_micro
       |FROM m""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_diff_in_diff" -> (diffInDiff _),
-    "q_top_paths" -> (topPaths _),
-    "q_kaplan_meier" -> (kaplanMeier _),
-    "q_asof_forward" -> (asofForward _),
-    "q_asof_nearest" -> (asofNearest _),
-    "q_conversion_hazard" -> (conversionHazard _),
-    "q_follows_matrix" -> (followsMatrix _),
-    "q_attribution" -> (attribution _),
-    "q_ordered_funnel" -> (orderedFunnel _),
-    "q_scd2_status" -> (scd2Status _),
-    "q_scd2_lookup" -> (scd2Lookup _),
-    "q_event_transitions" -> (eventTransitions _),
-    "q_markov_stationary" -> (markovStationary _),
-    "q_asof_custom" -> (asofSignupCustom _),
-    "q_asof_tolerance" -> (asofTolerance _),
-    "q_cold_start" -> (coldStartCoverage _),
-    "q_user_event_types" -> (userEventTypes _),
-    "q_sessionize" -> (sessionize _),
-    "q_event_props" -> (eventProps _),
-    "q_event_funnel" -> (eventFunnel _),
-    "q_asof_signup" -> (asofSignup _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_kaplan_meier" -> kaplanMeierSql,
-    "q_diff_in_diff" -> diffInDiffSql,
-    "q_top_paths" -> topPathsSql,
-    "q_asof_forward" -> asofForwardSql,
-    "q_asof_nearest" -> asofNearestSql,
-    "q_conversion_hazard" -> conversionHazardSql,
-    "q_follows_matrix" -> followsMatrixSql,
-    "q_attribution" -> attributionSql,
-    "q_ordered_funnel" -> orderedFunnelSql,
-    "q_scd2_status" -> scd2StatusSql,
-    "q_scd2_lookup" -> scd2LookupSql,
-    "q_event_transitions" -> eventTransitionsSql,
-    "q_markov_stationary" -> markovStationarySql,
-    "q_asof_custom" -> asofSignupSql,
-    "q_asof_tolerance" -> asofToleranceSql,
-    "q_cold_start" -> coldStartCoverageSql,
-    "q_user_event_types" -> userEventTypesSql,
-    "q_sessionize" -> sessionizeSql,
-    "q_event_props" -> eventPropsSql,
-    "q_event_funnel" -> eventFunnelSql,
-    "q_asof_signup" -> asofSignupSql
+  val registry: Map[String, Query] = Map(
+    "q_diff_in_diff" -> Query(diffInDiff, diffInDiffSql),
+    "q_top_paths" -> Query(topPaths, topPathsSql),
+    "q_kaplan_meier" -> Query(kaplanMeier, kaplanMeierSql),
+    "q_asof_forward" -> Query(asofForward, asofForwardSql),
+    "q_asof_nearest" -> Query(asofNearest, asofNearestSql),
+    "q_conversion_hazard" -> Query(conversionHazard, conversionHazardSql),
+    "q_follows_matrix" -> Query(followsMatrix, followsMatrixSql),
+    "q_attribution" -> Query(attribution, attributionSql),
+    "q_ordered_funnel" -> Query(orderedFunnel, orderedFunnelSql),
+    "q_scd2_status" -> Query(scd2Status, scd2StatusSql),
+    "q_scd2_lookup" -> Query(scd2Lookup, scd2LookupSql),
+    "q_event_transitions" -> Query(eventTransitions, eventTransitionsSql),
+    "q_markov_stationary" -> Query(markovStationary, markovStationarySql),
+    "q_asof_custom" -> Query(asofSignupCustom, asofSignupSql),
+    "q_asof_tolerance" -> Query(asofTolerance, asofToleranceSql),
+    "q_cold_start" -> Query(coldStartCoverage, coldStartCoverageSql),
+    "q_user_event_types" -> Query(userEventTypes, userEventTypesSql),
+    "q_sessionize" -> Query(sessionize, sessionizeSql),
+    "q_event_props" -> Query(eventProps, eventPropsSql),
+    "q_event_funnel" -> Query(eventFunnel, eventFunnelSql),
+    "q_asof_signup" -> Query(asofSignup, asofSignupSql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources
+import graft.{Query, QueryModule}
 
 /** Multimodal column plumbing (builder mandate: image/audio/video as
   * opaque binary columns with typed metadata).
@@ -29,7 +30,7 @@ import graft.ingest.Sources
   * a byte budget; feature extraction is narrow (no shuffle); only the
   * small (media_id, features) projection ever shuffles.
   */
-object Multimodal {
+object Multimodal extends QueryModule {
 
   /** Opaque media payload + typed metadata (binary column contract). */
   final case class MediaRecord(
@@ -522,13 +523,8 @@ object Multimodal {
       |HAVING count(*) >= 2
       |ORDER BY fp""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_media_features" -> (mediaFeatureRollup _),
-    "q_media_dedup" -> (mediaDedup _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_media_features" -> mediaFeatureRollupSql,
-    "q_media_dedup" -> mediaDedupSql
+  val registry: Map[String, Query] = Map(
+    "q_media_features" -> Query(mediaFeatureRollup, mediaFeatureRollupSql),
+    "q_media_dedup" -> Query(mediaDedup, mediaDedupSql)
   )
 }

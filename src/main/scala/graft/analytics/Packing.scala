@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.ingest.Sources
+import graft.{Query, QueryModule}
 
 /** Sequence-assembly operators for LLM training-data preparation
   * (SURVEY.md §2.8 extension surface): packing documents into
@@ -14,7 +15,7 @@ import graft.ingest.Sources
   * exactly (same discipline as the fixed-point PageRank/EMA/IVF
   * family).
   */
-object Packing {
+object Packing extends QueryModule {
 
   /** Context-window size (tokens) for sequence packing. */
   val PackWindow = 512L
@@ -480,23 +481,13 @@ object Packing {
       |ORDER BY shard, pos""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dataset_card" -> (datasetCard _),
-    "q_source_gini" -> (sourceGini _),
-    "q_mix_temperature_curve" -> (mixTemperatureCurve _),
-    "q_seq_pack" -> (seqPack _),
-    "q_mix_weights" -> (mixWeights _),
-    "q_doc_chunks" -> (docChunks _),
-    "q_global_shuffle" -> (globalShuffle _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_dataset_card" -> datasetCardSql,
-    "q_source_gini" -> sourceGiniSql,
-    "q_mix_temperature_curve" -> mixTemperatureCurveSql,
-    "q_seq_pack" -> seqPackSql,
-    "q_mix_weights" -> mixWeightsSql,
-    "q_doc_chunks" -> docChunksSql,
-    "q_global_shuffle" -> globalShuffleSql
+  val registry: Map[String, Query] = Map(
+    "q_dataset_card" -> Query(datasetCard, datasetCardSql),
+    "q_source_gini" -> Query(sourceGini, sourceGiniSql),
+    "q_mix_temperature_curve" -> Query(mixTemperatureCurve, mixTemperatureCurveSql),
+    "q_seq_pack" -> Query(seqPack, seqPackSql),
+    "q_mix_weights" -> Query(mixWeights, mixWeightsSql),
+    "q_doc_chunks" -> Query(docChunks, docChunksSql),
+    "q_global_shuffle" -> Query(globalShuffle, globalShuffleSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources
+import graft.{Query, QueryModule}
 
 /** Privacy / pseudonymization operators — the de-identification pass a
   * training-data pipeline runs before a dataset leaves its enclave.
@@ -15,7 +16,7 @@ import graft.ingest.Sources
   * handling (salting, AQE) applies unchanged. Nothing here ever
   * carries the raw identifier past the projection that hashes it.
   */
-object Privacy {
+object Privacy extends QueryModule {
 
   /** Stand-in for the deployment secret (see [[piiMask]] scaladoc). */
   val PseudoSalt = "graft-pii-v1:"
@@ -386,19 +387,11 @@ object Privacy {
       |GROUP BY nation, segment
       |ORDER BY nation, segment""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_t_closeness" -> (tCloseness _),
-    "q_dp_user_counts" -> (dpUserCounts _),
-    "q_dp_counts" -> (dpCounts _),
-    "q_pii_mask" -> (piiMask _),
-    "q_l_diversity" -> (lDiversity _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_dp_user_counts" -> dpUserCountsSql,
-    "q_dp_counts" -> dpCountsSql,
-    "q_pii_mask" -> piiMaskSql,
-    "q_l_diversity" -> lDiversitySql,
-    "q_t_closeness" -> tClosenessSql
+  val registry: Map[String, Query] = Map(
+    "q_t_closeness" -> Query(tCloseness, tClosenessSql),
+    "q_dp_user_counts" -> Query(dpUserCounts, dpUserCountsSql),
+    "q_dp_counts" -> Query(dpCounts, dpCountsSql),
+    "q_pii_mask" -> Query(piiMask, piiMaskSql),
+    "q_l_diversity" -> Query(lDiversity, lDiversitySql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.ingest.Sources._
+import graft.{Query, QueryModule}
 
 /** Sensor-quality analytics (SURVEY.md §2.5 A1–A3, §2.7 X1, §2.2 F1)
   * — the reference's stated monitoring/anomaly/alerting goals
@@ -18,7 +19,7 @@ import graft.ingest.Sources._
   * Timestamps are emitted as formatted strings so engine timestamp
   * precision (µs vs ns) can never leak into results.
   */
-object Quality {
+object Quality extends QueryModule {
 
   /** X1: Water-Quality-Index-style weighted composite of three sensor
     * sub-readings, each normalized to its healthy band. Pure Column
@@ -504,27 +505,15 @@ object Quality {
       |FROM (SELECT * FROM rows_u UNION ALL SELECT rule, n_rows, n_violations FROM ref)
       |ORDER BY rule""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hopping_stats" -> (hoppingStats _),
-    "q_order_expectations" -> (orderExpectations _),
-    "q_mad_outliers" -> (madOutliers _),
-    "q_winsorize" -> (winsorize _),
-    "q_sensor_hourly" -> (sensorHourly _),
-    "q_rolling_zscore" -> ((s: SparkSession, d: String) => rollingZscore(s, d)),
-    "q_value_alerts" -> (valueAlerts _),
-    "q_rolling_hour_sum" -> (rollingHourSum _),
-    "q_profile_orders" -> (profileOrders _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_hopping_stats" -> hoppingStatsSql,
-    "q_order_expectations" -> orderExpectationsSql,
-    "q_mad_outliers" -> madOutliersSql,
-    "q_winsorize" -> winsorizeSql,
-    "q_sensor_hourly" -> sensorHourlySql,
-    "q_rolling_zscore" -> rollingZscoreSql,
-    "q_value_alerts" -> valueAlertsSql,
-    "q_rolling_hour_sum" -> rollingHourSumSql,
-    "q_profile_orders" -> profileOrdersSql
+  val registry: Map[String, Query] = Map(
+    "q_hopping_stats" -> Query(hoppingStats, hoppingStatsSql),
+    "q_order_expectations" -> Query(orderExpectations, orderExpectationsSql),
+    "q_mad_outliers" -> Query(madOutliers, madOutliersSql),
+    "q_winsorize" -> Query(winsorize, winsorizeSql),
+    "q_sensor_hourly" -> Query(sensorHourly, sensorHourlySql),
+    "q_rolling_zscore" -> Query(rollingZscore(_, _), rollingZscoreSql),
+    "q_value_alerts" -> Query(valueAlerts, valueAlertsSql),
+    "q_rolling_hour_sum" -> Query(rollingHourSum, rollingHourSumSql),
+    "q_profile_orders" -> Query(profileOrders, profileOrdersSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.ingest.Sources._
+import graft.{Query, QueryModule}
 
 /** Relational operator suite on the star schema (SURVEY.md §2.5).
   *
@@ -23,7 +24,7 @@ import graft.ingest.Sources._
   * prescribed path is [[graft.operators.Scale.saltedSumCount]]); no
   * collect() on any data path.
   */
-object Relational {
+object Relational extends QueryModule {
 
   /** A1: per-group hash aggregation over the largest fact table —
     * TPC-H-Q1-shaped pricing summary. Filter is pushed to the parquet
@@ -990,61 +991,32 @@ object Relational {
       |)
       |ORDER BY "check"""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_integrity_audit" -> (integrityAudit _),
-    "q_rfm_segmentation" -> (rfmSegmentation _),
-    "q_pareto_abc" -> (paretoAbc _),
-    "q_supplier_share" -> (supplierShare _),
-    "q_table_diff" -> (tableDiff _),
-    "q_pricing_summary" -> (pricingSummary _),
-    "q_revenue_by_nation" -> (revenueByNation _),
-    "q_order_priority_revenue" -> (orderPriorityRevenue _),
-    "q_top_orders" -> (topOrders _),
-    "q_order_skyline" -> (orderSkyline _),
-    "q_top_customers_per_nation" -> (topCustomersPerNation _),
-    "q_order_price_delta" -> (orderPriceDelta _),
-    "q_rollup_nation_segment" -> (rollupNationSegment _),
-    "q_customers_without_orders" -> (customersWithoutOrders _),
-    "q_customers_with_big_orders" -> (customersWithBigOrders _),
-    "q_segment_set_ops" -> (segmentSetOps _),
-    "q_distinct_customers_per_segment" -> (distinctCustomersPerSegment _),
-    "q_orders_per_year_bucket" -> (ordersPerYearBucket _),
-    "q_cube_region_priority" -> (cubeRegionPriority _),
-    "q_pivot_segment_region" -> (pivotSegmentByRegion _),
-    "q_order_price_percentiles" -> (orderPricePercentiles _),
-    "q_grouping_sets_nation_year" -> (groupingSetsNationYear _),
-    "q_order_bag_set_ops" -> (orderBagSetOps _),
-    "q_customer_order_counts" -> (customerOrderCounts _),
-    "q_full_outer_join" -> (customerOrderFullOuter _),
-    "q_balance_quartiles" -> (balanceQuartiles _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_rfm_segmentation" -> rfmSegmentationSql,
-    "q_integrity_audit" -> integrityAuditSql,
-    "q_pareto_abc" -> paretoAbcSql,
-    "q_supplier_share" -> supplierShareSql,
-    "q_table_diff" -> tableDiffSql,
-    "q_pricing_summary" -> pricingSummarySql,
-    "q_revenue_by_nation" -> revenueByNationSql,
-    "q_order_priority_revenue" -> orderPriorityRevenueSql,
-    "q_top_orders" -> topOrdersSql,
-    "q_order_skyline" -> orderSkylineSql,
-    "q_top_customers_per_nation" -> topCustomersPerNationSql,
-    "q_order_price_delta" -> orderPriceDeltaSql,
-    "q_rollup_nation_segment" -> rollupNationSegmentSql,
-    "q_customers_without_orders" -> customersWithoutOrdersSql,
-    "q_customers_with_big_orders" -> customersWithBigOrdersSql,
-    "q_segment_set_ops" -> segmentSetOpsSql,
-    "q_distinct_customers_per_segment" -> distinctCustomersPerSegmentSql,
-    "q_orders_per_year_bucket" -> ordersPerYearBucketSql,
-    "q_cube_region_priority" -> cubeRegionPrioritySql,
-    "q_pivot_segment_region" -> pivotSegmentByRegionSql,
-    "q_order_price_percentiles" -> orderPricePercentilesSql,
-    "q_grouping_sets_nation_year" -> groupingSetsNationYearSql,
-    "q_order_bag_set_ops" -> orderBagSetOpsSql,
-    "q_customer_order_counts" -> customerOrderCountsSql,
-    "q_full_outer_join" -> customerOrderFullOuterSql,
-    "q_balance_quartiles" -> balanceQuartilesSql
+  val registry: Map[String, Query] = Map(
+    "q_integrity_audit" -> Query(integrityAudit, integrityAuditSql),
+    "q_rfm_segmentation" -> Query(rfmSegmentation, rfmSegmentationSql),
+    "q_pareto_abc" -> Query(paretoAbc, paretoAbcSql),
+    "q_supplier_share" -> Query(supplierShare, supplierShareSql),
+    "q_table_diff" -> Query(tableDiff, tableDiffSql),
+    "q_pricing_summary" -> Query(pricingSummary, pricingSummarySql),
+    "q_revenue_by_nation" -> Query(revenueByNation, revenueByNationSql),
+    "q_order_priority_revenue" -> Query(orderPriorityRevenue, orderPriorityRevenueSql),
+    "q_top_orders" -> Query(topOrders, topOrdersSql),
+    "q_order_skyline" -> Query(orderSkyline, orderSkylineSql),
+    "q_top_customers_per_nation" -> Query(topCustomersPerNation, topCustomersPerNationSql),
+    "q_order_price_delta" -> Query(orderPriceDelta, orderPriceDeltaSql),
+    "q_rollup_nation_segment" -> Query(rollupNationSegment, rollupNationSegmentSql),
+    "q_customers_without_orders" -> Query(customersWithoutOrders, customersWithoutOrdersSql),
+    "q_customers_with_big_orders" -> Query(customersWithBigOrders, customersWithBigOrdersSql),
+    "q_segment_set_ops" -> Query(segmentSetOps, segmentSetOpsSql),
+    "q_distinct_customers_per_segment" -> Query(distinctCustomersPerSegment, distinctCustomersPerSegmentSql),
+    "q_orders_per_year_bucket" -> Query(ordersPerYearBucket, ordersPerYearBucketSql),
+    "q_cube_region_priority" -> Query(cubeRegionPriority, cubeRegionPrioritySql),
+    "q_pivot_segment_region" -> Query(pivotSegmentByRegion, pivotSegmentByRegionSql),
+    "q_order_price_percentiles" -> Query(orderPricePercentiles, orderPricePercentilesSql),
+    "q_grouping_sets_nation_year" -> Query(groupingSetsNationYear, groupingSetsNationYearSql),
+    "q_order_bag_set_ops" -> Query(orderBagSetOps, orderBagSetOpsSql),
+    "q_customer_order_counts" -> Query(customerOrderCounts, customerOrderCountsSql),
+    "q_full_outer_join" -> Query(customerOrderFullOuter, customerOrderFullOuterSql),
+    "q_balance_quartiles" -> Query(balanceQuartiles, balanceQuartilesSql)
   )
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.ingest.Sources._
 import graft.functions.VectorOps._
+import graft.{Query, QueryModule}
 
 /** Similarity search over the embedding column (SURVEY.md §2.8 L3).
   *
@@ -23,7 +24,7 @@ import graft.functions.VectorOps._
   * dedup mode: at scale its candidate pairs come from the LSH buckets;
   * the exact-verify stage below is unchanged.
   */
-object Similarity {
+object Similarity extends QueryModule {
 
   /** Default query-sample size / top-k / probe width for the KNN
     * family, interpolated into BOTH each Scala operator's parameter
@@ -2799,63 +2800,33 @@ object Similarity {
        |FROM cell CROSS JOIN tot
        |ORDER BY cid""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ivf_balance" -> (ivfBalance _),
-    "q_knn_pq" -> ((s: SparkSession, d: String) => knnPq(s, d)),
-    "q_knn_ivfpq" -> ((s: SparkSession, d: String) => knnIvfPq(s, d)),
-    "q_mmr_rerank" -> (mmrRerank _),
-    "q_hybrid_rrf" -> (hybridRrf _),
-    "q_label_separation" -> (labelSeparation _),
-    "q_random_projection" -> (randomProjection _),
-    "q_knn_bruteforce" -> ((s: SparkSession, d: String) => knnBruteForce(s, d)),
-    "q_hard_negatives" -> ((s: SparkSession, d: String) => hardNegatives(s, d)),
-    "q_hard_negatives_ivf" -> (hardNegativesIvf _),
-    "q_embed_near_dup" -> ((s: SparkSession, d: String) => embedNearDup(s, d)),
-    "q_label_centroids" -> (labelCentroids _),
-    "q_knn_lsh" -> ((s: SparkSession, d: String) => knnLsh(s, d)),
-    "q_knn_ivf" -> ((s: SparkSession, d: String) => knnIvf(s, d)),
-    "q_ann_recall" -> ((s: SparkSession, d: String) => annRecall(s, d)),
-    "q_sq8_knn" -> ((s: SparkSession, d: String) => sq8Knn(s, d)),
-    "q_sq8_recall" -> (sq8Recall _),
-    "q_sq8_distortion" -> (sq8Distortion _),
-    "q_ndcg_eval" -> ((s: SparkSession, d: String) => ndcgEval(s, d)),
-    "q_rbo_eval" -> ((s: SparkSession, d: String) => rboEval(s, d)),
-    "q_semantic_dedup" -> ((s: SparkSession, d: String) => semanticDedup(s, d)),
-    "q_incr_semantic" -> ((s: SparkSession, d: String) => incrSemanticDedup(s, d)),
-    "q_embed_quantize" -> (quantizeInt8 _),
-    "q_matryoshka_eval" -> (matryoshkaEval _),
-    "q_mutual_knn" -> (mutualKnn _),
-    "q_hubness_audit" -> (hubnessAudit _),
-    "q_mutual_knn_clusters" -> (mutualKnnClusters _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_ivf_balance" -> ivfBalanceSql,
-    "q_matryoshka_eval" -> matryoshkaEvalSql,
-    "q_mutual_knn" -> mutualKnnSql,
-    "q_hubness_audit" -> hubnessAuditSql,
-    "q_mutual_knn_clusters" -> mutualKnnClustersSql,
-    "q_hard_negatives_ivf" -> hardNegativesIvfSql,
-    "q_knn_pq" -> knnPqSql,
-    "q_knn_ivfpq" -> knnIvfPqSql,
-    "q_mmr_rerank" -> mmrRerankSql,
-    "q_hybrid_rrf" -> hybridRrfSql,
-    "q_random_projection" -> randomProjectionSql,
-    "q_knn_lsh" -> knnLshSql,
-    "q_knn_ivf" -> knnIvfSql,
-    "q_ann_recall" -> annRecallSql,
-    "q_sq8_knn" -> sq8KnnSql,
-    "q_sq8_recall" -> sq8RecallSql,
-    "q_sq8_distortion" -> sq8DistortionSql,
-    "q_ndcg_eval" -> ndcgEvalSql,
-    "q_rbo_eval" -> rboEvalSql,
-    "q_semantic_dedup" -> semanticDedupSql,
-    "q_incr_semantic" -> incrSemanticDedupSql,
-    "q_knn_bruteforce" -> knnBruteForceSql,
-    "q_hard_negatives" -> hardNegativesSql,
-    "q_embed_near_dup" -> embedNearDupSql,
-    "q_label_centroids" -> labelCentroidsSql,
-    "q_label_separation" -> labelSeparationSql,
-    "q_embed_quantize" -> quantizeInt8Sql
+  val registry: Map[String, Query] = Map(
+    "q_ivf_balance" -> Query(ivfBalance, ivfBalanceSql),
+    "q_knn_pq" -> Query(knnPq(_, _), knnPqSql),
+    "q_knn_ivfpq" -> Query(knnIvfPq(_, _), knnIvfPqSql),
+    "q_mmr_rerank" -> Query(mmrRerank, mmrRerankSql),
+    "q_hybrid_rrf" -> Query(hybridRrf, hybridRrfSql),
+    "q_label_separation" -> Query(labelSeparation, labelSeparationSql),
+    "q_random_projection" -> Query(randomProjection, randomProjectionSql),
+    "q_knn_bruteforce" -> Query(knnBruteForce(_, _), knnBruteForceSql),
+    "q_hard_negatives" -> Query(hardNegatives(_, _), hardNegativesSql),
+    "q_hard_negatives_ivf" -> Query(hardNegativesIvf, hardNegativesIvfSql),
+    "q_embed_near_dup" -> Query(embedNearDup(_, _), embedNearDupSql),
+    "q_label_centroids" -> Query(labelCentroids, labelCentroidsSql),
+    "q_knn_lsh" -> Query(knnLsh(_, _), knnLshSql),
+    "q_knn_ivf" -> Query(knnIvf(_, _), knnIvfSql),
+    "q_ann_recall" -> Query(annRecall(_, _), annRecallSql),
+    "q_sq8_knn" -> Query(sq8Knn(_, _), sq8KnnSql),
+    "q_sq8_recall" -> Query(sq8Recall, sq8RecallSql),
+    "q_sq8_distortion" -> Query(sq8Distortion, sq8DistortionSql),
+    "q_ndcg_eval" -> Query(ndcgEval(_, _), ndcgEvalSql),
+    "q_rbo_eval" -> Query(rboEval(_, _), rboEvalSql),
+    "q_semantic_dedup" -> Query(semanticDedup(_, _), semanticDedupSql),
+    "q_incr_semantic" -> Query(incrSemanticDedup(_, _), incrSemanticDedupSql),
+    "q_embed_quantize" -> Query(quantizeInt8, quantizeInt8Sql),
+    "q_matryoshka_eval" -> Query(matryoshkaEval, matryoshkaEvalSql),
+    "q_mutual_knn" -> Query(mutualKnn, mutualKnnSql),
+    "q_hubness_audit" -> Query(hubnessAudit, hubnessAuditSql),
+    "q_mutual_knn_clusters" -> Query(mutualKnnClusters, mutualKnnClustersSql)
   )
 }

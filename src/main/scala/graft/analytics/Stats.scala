@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.ingest.Sources._
+import graft.{Query, QueryModule}
 
 /** Statistical / reshaping operators (SURVEY.md §2.5 extensions):
   * fixed-width histograms, bivariate statistics (corr / covariance /
@@ -19,7 +20,7 @@ import graft.ingest.Sources._
   * per-partition (same shape as the LSH band-bucket joins), and
   * levenshtein runs codegen'd inside the join condition.
   */
-object Stats {
+object Stats extends QueryModule {
 
   /** Fixed-width histogram of order totals: 20 bins of 30k over
     * [0, 600k), top bin clamped. floor(x / width) on the same double
@@ -2046,61 +2047,32 @@ object Stats {
       |GROUP BY 1, 2, 3, 5, 6
       |ORDER BY ev.event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_conformal" -> (conformal _),
-    "q_conformal_sketch" -> (conformalSketch _),
-    "q_decision_stump" -> (decisionStump _),
-    "q_woe_iv" -> (woeIv _),
-    "q_feature_importance" -> (featureImportance _),
-    "q_bootstrap_ci" -> (bootstrapCi _),
-    "q_length_resample" -> (lengthResample _),
-    "q_snapshot_drift" -> (snapshotDrift _),
-    "q_psi_drift" -> (psiDrift _),
-    "q_ks_drift" -> (ksDrift _),
-    "q_crosstab_chi2" -> (segmentRegionCrosstab _),
-    "q_value_heatmap" -> (valueHeatmap _),
-    "q_price_deciles" -> (priceDeciles _),
-    "q_shipping_lag" -> (shippingLag _),
-    "q_price_histogram" -> (priceHistogram _),
-    "q_benford_digits" -> (benfordDigits _),
-    "q_sketch_quantiles" -> (sketchQuantiles _),
-    "q_order_corr_stats" -> (orderCorrStats _),
-    "q_priority_metrics_unpivot" -> (priorityMetricsUnpivot _),
-    "q_part_fuzzy_match" -> ((s: SparkSession, d: String) => partFuzzyMatch(s, d)),
-    "q_damerau_match" -> (damerauMatch _),
-    "q_entity_clusters" -> (entityClusters _),
-    "q_entity_clusters_lsh" -> (entityClustersLsh _),
-    "q_ols_normal_eq" -> (olsNormalEq _),
-    "q_anova_priority" -> (anovaPriority _),
-    "q_weighted_median" -> (weightedMedian _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_conformal" -> conformalSql,
-    "q_conformal_sketch" -> conformalSketchSql,
-    "q_entity_clusters" -> entityClustersSql,
-    "q_entity_clusters_lsh" -> entityClustersLshSql,
-    "q_decision_stump" -> decisionStumpSql,
-    "q_woe_iv" -> woeIvSql,
-    "q_feature_importance" -> featureImportanceSql,
-    "q_bootstrap_ci" -> bootstrapCiSql,
-    "q_length_resample" -> lengthResampleSql,
-    "q_snapshot_drift" -> snapshotDriftSql,
-    "q_psi_drift" -> psiDriftSql,
-    "q_ks_drift" -> ksDriftSql,
-    "q_value_heatmap" -> valueHeatmapSql,
-    "q_price_deciles" -> priceDecilesSql,
-    "q_shipping_lag" -> shippingLagSql,
-    "q_crosstab_chi2" -> segmentRegionCrosstabSql,
-    "q_price_histogram" -> priceHistogramSql,
-    "q_benford_digits" -> benfordDigitsSql,
-    "q_sketch_quantiles" -> sketchQuantilesSql,
-    "q_order_corr_stats" -> orderCorrStatsSql,
-    "q_priority_metrics_unpivot" -> priorityMetricsUnpivotSql,
-    "q_part_fuzzy_match" -> partFuzzyMatchSql,
-    "q_damerau_match" -> damerauMatchSql,
-    "q_ols_normal_eq" -> olsNormalEqSql,
-    "q_anova_priority" -> anovaPrioritySql,
-    "q_weighted_median" -> weightedMedianSql
+  val registry: Map[String, Query] = Map(
+    "q_conformal" -> Query(conformal, conformalSql),
+    "q_conformal_sketch" -> Query(conformalSketch, conformalSketchSql),
+    "q_decision_stump" -> Query(decisionStump, decisionStumpSql),
+    "q_woe_iv" -> Query(woeIv, woeIvSql),
+    "q_feature_importance" -> Query(featureImportance, featureImportanceSql),
+    "q_bootstrap_ci" -> Query(bootstrapCi, bootstrapCiSql),
+    "q_length_resample" -> Query(lengthResample, lengthResampleSql),
+    "q_snapshot_drift" -> Query(snapshotDrift, snapshotDriftSql),
+    "q_psi_drift" -> Query(psiDrift, psiDriftSql),
+    "q_ks_drift" -> Query(ksDrift, ksDriftSql),
+    "q_crosstab_chi2" -> Query(segmentRegionCrosstab, segmentRegionCrosstabSql),
+    "q_value_heatmap" -> Query(valueHeatmap, valueHeatmapSql),
+    "q_price_deciles" -> Query(priceDeciles, priceDecilesSql),
+    "q_shipping_lag" -> Query(shippingLag, shippingLagSql),
+    "q_price_histogram" -> Query(priceHistogram, priceHistogramSql),
+    "q_benford_digits" -> Query(benfordDigits, benfordDigitsSql),
+    "q_sketch_quantiles" -> Query(sketchQuantiles, sketchQuantilesSql),
+    "q_order_corr_stats" -> Query(orderCorrStats, orderCorrStatsSql),
+    "q_priority_metrics_unpivot" -> Query(priorityMetricsUnpivot, priorityMetricsUnpivotSql),
+    "q_part_fuzzy_match" -> Query(partFuzzyMatch(_, _), partFuzzyMatchSql),
+    "q_damerau_match" -> Query(damerauMatch, damerauMatchSql),
+    "q_entity_clusters" -> Query(entityClusters, entityClustersSql),
+    "q_entity_clusters_lsh" -> Query(entityClustersLsh, entityClustersLshSql),
+    "q_ols_normal_eq" -> Query(olsNormalEq, olsNormalEqSql),
+    "q_anova_priority" -> Query(anovaPriority, anovaPrioritySql),
+    "q_weighted_median" -> Query(weightedMedian, weightedMedianSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources._
+import graft.{Query, QueryModule}
 
 /** Text / document pipeline operators (SURVEY.md §2.8 L1–L4) — the
   * dedup + text-analysis surface a large-scale training-data pipeline
@@ -24,7 +25,7 @@ import graft.ingest.Sources._
   *    (transform/filter/aggregate) and xxhash64, all Catalyst
   *    expressions.
   */
-object TextOps {
+object TextOps extends QueryModule {
 
   /** Distinct unigram token SET per document (array form), with the
     * blocking keys and the per-doc set size — the docSets shape
@@ -5410,132 +5411,71 @@ object TextOps {
       |GROUP BY bin
       |ORDER BY bin""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_naive_bayes" -> (naiveBayes _),
-    "q_nb_calibration" -> (nbCalibration _),
-    "q_nb_ks" -> (nbKs _),
-    "q_nb_ks_sketch" -> (nbKsSketch _),
-    "q_containment_dup" -> ((s: SparkSession, d: String) => containmentDup(s, d)),
-    "q_source_token_kl" -> (sourceTokenKl _),
-    "q_domain_xent" -> (domainXent _),
-    "q_set_cover" -> (setCoverSelect _),
-    "q_chao2_richness" -> (chao2Richness _),
-    "q_lm_kneser_ney" -> (lmKneserNey _),
-    "q_leakage_safe_split" -> (leakageSafeSplit _),
-    "q_minhash_recall" -> (minhashRecall _),
-    "q_curriculum_stages" -> (curriculumStages _),
-    "q_dedup_rate_curve" -> (dedupRateCurve _),
-    "q_lang_overlap" -> (langOverlap _),
-    "q_ngram_novelty" -> (ngramNovelty _),
-    "q_dedup_bias_audit" -> (dedupBiasAudit _),
-    "q_langid_trigram" -> (langIdTrigram _),
-    "q_dedup_quality_reps" -> (dedupQualityReps _),
-    "q_top_terms_shift" -> (topTermsShift _),
-    "q_dsir_select" -> (dsirSelect _),
-    "q_rake_keywords" -> ((s: SparkSession, d: String) => rakeKeywords(s, d)),
-    "q_textrank" -> ((s: SparkSession, d: String) => textrank(s, d)),
-    "q_phrase_search" -> ((s: SparkSession, d: String) => phraseSearch(s, d)),
-    "q_vocab_oov" -> ((s: SparkSession, d: String) => vocabOov(s, d)),
-    "q_corpus_curation" -> (corpusCuration _),
-    "q_chunk_dedup" -> (chunkDedup _),
-    "q_weighted_sample" -> (weightedSample _),
-    "q_dedup_exact" -> (dedupExact _),
-    "q_dup_spans" -> ((s: SparkSession, d: String) => dupSpans(s, d)),
-    "q_token_stats" -> (tokenStats _),
-    "q_token_bpe" -> (tokenBpe _),
-    "q_bpe_train" -> ((s: SparkSession, d: String) => bpeTrain(s, d)),
-    "q_bpe_encode" -> ((s: SparkSession, d: String) => bpeEncode(s, d)),
-    "q_tfidf_top_terms" -> ((s: SparkSession, d: String) => tfidfTopTerms(s, d)),
-    "q_bm25_topk" -> (bm25TopK _),
-    "q_pmi_collocations" -> (pmiCollocations _),
-    "q_text_quality" -> (textQuality _),
-    "q_lang_id" -> (langId _),
-    "q_lang_entropy" -> (langEntropy _),
-    "q_doc_repetition" -> (docRepetition _),
-    "q_approx_top_tokens" -> ((s: SparkSession, d: String) => approxTopTokens(s, d)),
-    "q_near_dup_jaccard" -> ((s: SparkSession, d: String) => nearDupJaccard(s, d)),
-    "q_dedup_clusters" -> (dedupClusters _),
-    "q_minhash_lsh" -> ((s: SparkSession, d: String) => minHashLsh(s, d)),
-    "q_source_leakage" -> ((s: SparkSession, d: String) => sourceLeakage(s, d)),
-    "q_incr_dedup" -> ((s: SparkSession, d: String) => incrementalDedup(s, d)),
-    "q_incr_dedup_pruned" -> ((s: SparkSession, d: String) => incrementalDedupPruned(s, d)),
-    "q_incr_dedup_appended" -> ((s: SparkSession, d: String) => incrementalDedupAppended(s, d)),
-    "q_incr_dedup_compacted" -> ((s: SparkSession, d: String) => incrementalDedupCompacted(s, d)),
-    "q_simhash_dedup" -> ((s: SparkSession, d: String) => simHashDedup(s, d)),
-    "q_doc_fingerprint" -> (docFingerprints _),
-    "q_contamination" -> ((s: SparkSession, d: String) => contamination(s, d)),
-    "q_lm_perplexity" -> (lmPerplexity _),
-    "q_lm_bigram" -> (lmBigram _),
-    "q_lm_interp" -> (lmInterp _),
-    "q_source_quota" -> ((s: SparkSession, d: String) => sourceQuota(s, d)),
-    "q_ngram_jaccard" -> ((s: SparkSession, d: String) => ngramJaccard(s, d))
-  )
-
   /** SQL oracles for the DuckDB-expressible subset. MinHash, SimHash
     * and the winnowing fingerprints are built on the engine-portable
     * [[md5Hex]]/[[hexWord]] hash family, so every text operator here is fully
     * oracle-checked.
     */
-  val oracles: Map[String, String] = Map(
-    "q_naive_bayes" -> naiveBayesSql,
-    "q_nb_calibration" -> nbCalibrationSql,
-    "q_nb_ks" -> nbKsSql,
-    "q_nb_ks_sketch" -> nbKsSketchSql,
-    "q_containment_dup" -> containmentDupSql,
-    "q_source_token_kl" -> sourceTokenKlSql,
-    "q_domain_xent" -> domainXentSql,
-    "q_set_cover" -> setCoverSelectSql,
-    "q_chao2_richness" -> chao2RichnessSql,
-    "q_lm_kneser_ney" -> lmKneserNeySql,
-    "q_leakage_safe_split" -> leakageSafeSplitSql,
-    "q_minhash_recall" -> minhashRecallSql,
-    "q_curriculum_stages" -> curriculumStagesSql,
-    "q_dedup_rate_curve" -> dedupRateCurveSql,
-    "q_lang_overlap" -> langOverlapSql,
-    "q_ngram_novelty" -> ngramNoveltySql,
-    "q_dedup_bias_audit" -> dedupBiasAuditSql,
-    "q_langid_trigram" -> langIdTrigramSql,
-    "q_dedup_quality_reps" -> dedupQualityRepsSql,
-    "q_top_terms_shift" -> topTermsShiftSql,
-    "q_dsir_select" -> dsirSelectSql,
-    "q_rake_keywords" -> rakeKeywordsSql,
-    "q_textrank" -> textrankSql,
-    "q_phrase_search" -> phraseSearchSql,
-    "q_vocab_oov" -> vocabOovSql,
-    "q_corpus_curation" -> corpusCurationSql,
-    "q_chunk_dedup" -> chunkDedupSql,
-    "q_weighted_sample" -> weightedSampleSql,
-    "q_minhash_lsh" -> minHashLshSql,
-    "q_source_leakage" -> sourceLeakageSql,
-    "q_incr_dedup" -> incrementalDedupSql,
+  val registry: Map[String, Query] = Map(
+    "q_naive_bayes" -> Query(naiveBayes, naiveBayesSql),
+    "q_nb_calibration" -> Query(nbCalibration, nbCalibrationSql),
+    "q_nb_ks" -> Query(nbKs, nbKsSql),
+    "q_nb_ks_sketch" -> Query(nbKsSketch, nbKsSketchSql),
+    "q_containment_dup" -> Query(containmentDup(_, _), containmentDupSql),
+    "q_source_token_kl" -> Query(sourceTokenKl, sourceTokenKlSql),
+    "q_domain_xent" -> Query(domainXent, domainXentSql),
+    "q_set_cover" -> Query(setCoverSelect, setCoverSelectSql),
+    "q_chao2_richness" -> Query(chao2Richness, chao2RichnessSql),
+    "q_lm_kneser_ney" -> Query(lmKneserNey, lmKneserNeySql),
+    "q_leakage_safe_split" -> Query(leakageSafeSplit, leakageSafeSplitSql),
+    "q_minhash_recall" -> Query(minhashRecall, minhashRecallSql),
+    "q_curriculum_stages" -> Query(curriculumStages, curriculumStagesSql),
+    "q_dedup_rate_curve" -> Query(dedupRateCurve, dedupRateCurveSql),
+    "q_lang_overlap" -> Query(langOverlap, langOverlapSql),
+    "q_ngram_novelty" -> Query(ngramNovelty, ngramNoveltySql),
+    "q_dedup_bias_audit" -> Query(dedupBiasAudit, dedupBiasAuditSql),
+    "q_langid_trigram" -> Query(langIdTrigram, langIdTrigramSql),
+    "q_dedup_quality_reps" -> Query(dedupQualityReps, dedupQualityRepsSql),
+    "q_top_terms_shift" -> Query(topTermsShift, topTermsShiftSql),
+    "q_dsir_select" -> Query(dsirSelect, dsirSelectSql),
+    "q_rake_keywords" -> Query(rakeKeywords(_, _), rakeKeywordsSql),
+    "q_textrank" -> Query(textrank(_, _), textrankSql),
+    "q_phrase_search" -> Query(phraseSearch(_, _), phraseSearchSql),
+    "q_vocab_oov" -> Query(vocabOov(_, _), vocabOovSql),
+    "q_corpus_curation" -> Query(corpusCuration, corpusCurationSql),
+    "q_chunk_dedup" -> Query(chunkDedup, chunkDedupSql),
+    "q_weighted_sample" -> Query(weightedSample, weightedSampleSql),
+    "q_dedup_exact" -> Query(dedupExact, dedupExactSql),
+    "q_dup_spans" -> Query(dupSpans(_, _), dupSpansSql),
+    "q_token_stats" -> Query(tokenStats, tokenStatsSql),
+    "q_token_bpe" -> Query(tokenBpe, tokenBpeSql),
+    "q_bpe_train" -> Query(bpeTrain(_, _), bpeTrainSql),
+    "q_bpe_encode" -> Query(bpeEncode(_, _), bpeEncodeSql),
+    "q_tfidf_top_terms" -> Query(tfidfTopTerms(_, _), tfidfTopTermsSql),
+    "q_bm25_topk" -> Query(bm25TopK, bm25TopKSql),
+    "q_pmi_collocations" -> Query(pmiCollocations, pmiCollocationsSql),
+    "q_text_quality" -> Query(textQuality, textQualitySql),
+    "q_lang_id" -> Query(langId, langIdSql),
+    "q_lang_entropy" -> Query(langEntropy, langEntropySql),
+    "q_doc_repetition" -> Query(docRepetition, docRepetitionSql),
+    "q_approx_top_tokens" -> Query(approxTopTokens(_, _), approxTopTokensSql),
+    "q_near_dup_jaccard" -> Query(nearDupJaccard(_, _), nearDupJaccardSql),
+    "q_dedup_clusters" -> Query(dedupClusters, dedupClustersSql),
+    "q_minhash_lsh" -> Query(minHashLsh(_, _), minHashLshSql),
+    "q_source_leakage" -> Query(sourceLeakage(_, _), sourceLeakageSql),
+    "q_incr_dedup" -> Query(incrementalDedup(_, _), incrementalDedupSql),
     // the pruned path must be physically different, semantically
     // identical — the SAME oracle gates both
-    "q_incr_dedup_pruned" -> incrementalDedupSql,
-    "q_incr_dedup_appended" -> incrementalDedupSql,
-    "q_incr_dedup_compacted" -> incrementalDedupSql,
-    "q_simhash_dedup" -> simHashDedupSql,
-    "q_doc_fingerprint" -> docFingerprintsSql,
-    "q_dedup_exact" -> dedupExactSql,
-    "q_dup_spans" -> dupSpansSql,
-    "q_token_stats" -> tokenStatsSql,
-    "q_token_bpe" -> tokenBpeSql,
-    "q_bpe_train" -> bpeTrainSql,
-    "q_bpe_encode" -> bpeEncodeSql,
-    "q_tfidf_top_terms" -> tfidfTopTermsSql,
-    "q_bm25_topk" -> bm25TopKSql,
-    "q_pmi_collocations" -> pmiCollocationsSql,
-    "q_text_quality" -> textQualitySql,
-    "q_lang_id" -> langIdSql,
-    "q_lang_entropy" -> langEntropySql,
-    "q_doc_repetition" -> docRepetitionSql,
-    "q_approx_top_tokens" -> approxTopTokensSql,
-    "q_near_dup_jaccard" -> nearDupJaccardSql,
-    "q_dedup_clusters" -> dedupClustersSql,
-    "q_contamination" -> contaminationSql,
-    "q_lm_perplexity" -> lmPerplexitySql,
-    "q_lm_bigram" -> lmBigramSql,
-    "q_lm_interp" -> lmInterpSql,
-    "q_source_quota" -> sourceQuotaSql,
-    "q_ngram_jaccard" -> ngramJaccardSql
+    "q_incr_dedup_pruned" -> Query(incrementalDedupPruned(_, _), incrementalDedupSql),
+    "q_incr_dedup_appended" -> Query(incrementalDedupAppended(_, _), incrementalDedupSql),
+    "q_incr_dedup_compacted" -> Query(incrementalDedupCompacted(_, _), incrementalDedupSql),
+    "q_simhash_dedup" -> Query(simHashDedup(_, _), simHashDedupSql),
+    "q_doc_fingerprint" -> Query(docFingerprints, docFingerprintsSql),
+    "q_contamination" -> Query(contamination(_, _), contaminationSql),
+    "q_lm_perplexity" -> Query(lmPerplexity, lmPerplexitySql),
+    "q_lm_bigram" -> Query(lmBigram, lmBigramSql),
+    "q_lm_interp" -> Query(lmInterp, lmInterpSql),
+    "q_source_quota" -> Query(sourceQuota(_, _), sourceQuotaSql),
+    "q_ngram_jaccard" -> Query(ngramJaccard(_, _), ngramJaccardSql)
   )
 }

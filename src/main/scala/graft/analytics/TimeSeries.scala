@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.ingest.Sources._
+import graft.{Query, QueryModule}
 
 /** Time-series regularization operators: dense time-grid generation
   * and last-observation-carried-forward (LOCF) gap filling — the prep
@@ -18,7 +19,7 @@ import graft.ingest.Sources._
   * shares the hourly aggregation's user_id partitioning, so the whole
   * plan is one shuffle plus one narrow generator stage.
   */
-object TimeSeries {
+object TimeSeries extends QueryModule {
 
   /** Hourly LOCF gap fill per user: aggregate events to (user, hour),
     * densify the hour range, and carry the last observed hourly mean
@@ -1360,47 +1361,25 @@ object TimeSeries {
       |FROM cells
       |ORDER BY cohort_yr, yr_offset""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cohort_ltv" -> (cohortLtv _),
-    "q_sax_motifs" -> (saxMotifs _),
-    "q_forecast_backtest" -> (forecastBacktest _),
-    "q_stl_lite" -> (stlLite _),
-    "q_ar1_fit" -> (ar1Fit _),
-    "q_rolling_median" -> (rollingMedian _),
-    "q_gap_fill_lerp" -> (gapFillLerp _),
-    "q_seasonal_profile" -> (seasonalProfile _),
-    "q_event_burstiness" -> (eventBurstiness _),
-    "q_theilsen_trend" -> (theilSenTrend _),
-    "q_ccf_daily" -> (ccfDaily _),
-    "q_acf_daily" -> (acfDaily _),
-    "q_holt_trend" -> (holtTrend _),
-    "q_cusum_shift" -> (cusumShift _),
-    "q_sensor_ema" -> (sensorEma _),
-    "q_gap_fill_locf" -> (gapFillLocf _),
-    "q_cohort_retention" -> (cohortRetention _),
-    "q_rolling_active_users" -> (rollingActiveUsers _),
-    "q_interval_overlap" -> (intervalOverlap _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_forecast_backtest" -> forecastBacktestSql,
-    "q_sax_motifs" -> saxMotifsSql,
-    "q_cohort_ltv" -> cohortLtvSql,
-    "q_stl_lite" -> stlLiteSql,
-    "q_ar1_fit" -> ar1FitSql,
-    "q_rolling_median" -> rollingMedianSql,
-    "q_gap_fill_lerp" -> gapFillLerpSql,
-    "q_seasonal_profile" -> seasonalProfileSql,
-    "q_event_burstiness" -> eventBurstinessSql,
-    "q_theilsen_trend" -> theilSenTrendSql,
-    "q_ccf_daily" -> ccfDailySql,
-    "q_acf_daily" -> acfDailySql,
-    "q_holt_trend" -> holtTrendSql,
-    "q_cusum_shift" -> cusumShiftSql,
-    "q_sensor_ema" -> sensorEmaSql,
-    "q_gap_fill_locf" -> gapFillLocfSql,
-    "q_cohort_retention" -> cohortRetentionSql,
-    "q_rolling_active_users" -> rollingActiveUsersSql,
-    "q_interval_overlap" -> intervalOverlapSql
+  val registry: Map[String, Query] = Map(
+    "q_cohort_ltv" -> Query(cohortLtv, cohortLtvSql),
+    "q_sax_motifs" -> Query(saxMotifs, saxMotifsSql),
+    "q_forecast_backtest" -> Query(forecastBacktest, forecastBacktestSql),
+    "q_stl_lite" -> Query(stlLite, stlLiteSql),
+    "q_ar1_fit" -> Query(ar1Fit, ar1FitSql),
+    "q_rolling_median" -> Query(rollingMedian, rollingMedianSql),
+    "q_gap_fill_lerp" -> Query(gapFillLerp, gapFillLerpSql),
+    "q_seasonal_profile" -> Query(seasonalProfile, seasonalProfileSql),
+    "q_event_burstiness" -> Query(eventBurstiness, eventBurstinessSql),
+    "q_theilsen_trend" -> Query(theilSenTrend, theilSenTrendSql),
+    "q_ccf_daily" -> Query(ccfDaily, ccfDailySql),
+    "q_acf_daily" -> Query(acfDaily, acfDailySql),
+    "q_holt_trend" -> Query(holtTrend, holtTrendSql),
+    "q_cusum_shift" -> Query(cusumShift, cusumShiftSql),
+    "q_sensor_ema" -> Query(sensorEma, sensorEmaSql),
+    "q_gap_fill_locf" -> Query(gapFillLocf, gapFillLocfSql),
+    "q_cohort_retention" -> Query(cohortRetention, cohortRetentionSql),
+    "q_rolling_active_users" -> Query(rollingActiveUsers, rollingActiveUsersSql),
+    "q_interval_overlap" -> Query(intervalOverlap, intervalOverlapSql)
   )
 }

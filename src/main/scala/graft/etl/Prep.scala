@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Quality
+import graft.{Query, QueryModule}
 
 /** The reference's batch prep ETL (reference: kafka/sort_the_source.py)
   * re-expressed as ONE lazy DataFrame chain executed at the write
@@ -22,7 +23,7 @@ import graft.analytics.Quality
   * is exactly what Spark's TeraSort path is built for; everything else
   * is narrow.
   */
-object Prep {
+object Prep extends QueryModule {
 
   /** Month-name → number map (reference: kafka/sort_the_source.py:15-19). */
   val monthMap: Map[String, Int] = Map(
@@ -201,12 +202,6 @@ object Prep {
       |WHERE rn = CAST(floor((n_pairs + 1) / 2.0) AS BIGINT)
       |ORDER BY WaterbodyName""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_river_prep" -> (riverPrep _),
-    "q_river_wqi" -> (riverWqi _),
-    "q_river_wqi_trend" -> (riverWqiTrend _)
-  )
-
   /** Both engines read the reference CSV directly; prep rebuilds
     * first-of-month FullDate exactly as `prepare` does, and the WQI
     * formula is inlined with the same literal band constants as
@@ -244,9 +239,9 @@ object Prep {
       |GROUP BY WaterbodyName, yr
       |ORDER BY WaterbodyName, yr""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_river_prep" -> riverPrepSql,
-    "q_river_wqi" -> riverWqiSql,
-    "q_river_wqi_trend" -> riverWqiTrendSql
+  val registry: Map[String, Query] = Map(
+    "q_river_prep" -> Query(riverPrep, riverPrepSql),
+    "q_river_wqi" -> Query(riverWqi, riverWqiSql),
+    "q_river_wqi_trend" -> Query(riverWqiTrend, riverWqiTrendSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources
+import graft.{Query, QueryModule}
 
 /** Custom typed aggregates (SURVEY.md §2.7 X2).
   *
@@ -16,7 +17,7 @@ import graft.ingest.Sources
   * stats live in window functions instead — see
   * graft.analytics.Quality.rollingZscore.)
   */
-object Aggregators {
+object Aggregators extends QueryModule {
 
   /** Running moments buffer: count, mean, and M2 (sum of squared
     * deviations from the current mean).
@@ -414,17 +415,10 @@ object Aggregators {
       |  CAST($CmsDepth AS BIGINT) AS d, CAST($CmsWidth AS BIGINT) AS w
       |FROM exact_ CROSS JOIN est""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_join_size_sketch" -> (joinSizeSketch _),
-    "q_ams_f2" -> (amsF2Tokens _),
-    "q_event_moments" -> (eventMoments _),
-    "q_countmin_tokens" -> (countMinTokens _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_ams_f2" -> amsF2TokensSql,
-    "q_join_size_sketch" -> joinSizeSketchSql,
-    "q_event_moments" -> eventMomentsSql,
-    "q_countmin_tokens" -> countMinTokensSql
+  val registry: Map[String, Query] = Map(
+    "q_join_size_sketch" -> Query(joinSizeSketch, joinSizeSketchSql),
+    "q_ams_f2" -> Query(amsF2Tokens, amsF2TokensSql),
+    "q_event_moments" -> Query(eventMoments, eventMomentsSql),
+    "q_countmin_tokens" -> Query(countMinTokens, countMinTokensSql)
   )
 }

@@ -31,13 +31,6 @@ object BloomOps {
         new XxHash64(Seq(GraftBridge.expression(key))), expectedItems)
         .toAggregateExpression())
 
-  /** Predicate: bloom membership test of `key` against `bloom`. */
-  def mightContain(bloom: Column, key: Column): Column =
-    GraftBridge.column(
-      BloomFilterMightContain(
-        GraftBridge.expression(bloom),
-        new XxHash64(Seq(GraftBridge.expression(key)))))
-
   /** Probe-side pruning: keep only `probe` rows whose `probeKey` might
     * be in `build`'s `buildKey` set. The bloom feeds the predicate as
     * a scalar subquery — the form `might_contain` requires (and the

@@ -159,10 +159,6 @@ object VectorOps {
   /** L2 norm via the same codegen'd kernel. */
   def vecNorm(a: Column): Column = sqrt(vecDot(a, a))
 
-  /** Cosine similarity of two float32 vectors. */
-  def vecCosine(a: Column, b: Column): Column =
-    vecDot(a, b) / (vecNorm(a) * vecNorm(b))
-
   /** Reference implementation with built-in higher-order functions —
     * used by specs to pin the custom expression's semantics, and as
     * the oracle-friendly formulation (identical evaluation order).

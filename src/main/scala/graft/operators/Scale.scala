@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources
+import graft.{Query, QueryModule}
 
 /** Scale techniques as first-class operators (builder mandate:
   * salting for skew, bucketing for co-located joins).
@@ -12,7 +13,7 @@ import graft.ingest.Sources
   * therefore oracle-checkable against its naive form, which is exactly
   * how the suite verifies them.
   */
-object Scale {
+object Scale extends QueryModule {
 
   private lazy val log =
     org.slf4j.LoggerFactory.getLogger("graft.operators.Scale")
@@ -858,9 +859,8 @@ object Scale {
     * table: identical answers, different bytes — layout is physical,
     * never semantic.
     */
-  def zClusterSkip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zclu_").toFile
-    try {
+  def zClusterSkip(spark: SparkSession, dir: String): DataFrame =
+    graft.sinks.Sinks.withScratchDir("graft_zclu_") { tmp =>
       val path = new java.io.File(tmp, "orders_z").toString
       val o = Sources.orders(spark, dir).select(
         col("o_orderkey"), col("o_custkey"),
@@ -887,7 +887,7 @@ object Scale {
         s"x-dimension did not skip: ${keptX.size}/$total files kept")
       require(keptY.size * 2 <= total,
         s"y-dimension did not skip: ${keptY.size}/$total files kept")
-      val out = ManifestTable
+      ManifestTable
         .readBetween(spark, path, "o_custkey", loC.toDouble, hiC.toDouble)
         .filter(col("dayn") >= loD && col("dayn") <= hiD)
         .agg(count(lit(1)).as("n_rows"),
@@ -895,15 +895,7 @@ object Scale {
           countDistinct(col("o_custkey")).as("n_cust"),
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"))
-      out.localCheckpoint(eager = true)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(tmp)
     }
-  }
 
   val zClusterSkipSql: String =
     """WITH r AS (
@@ -1139,27 +1131,15 @@ object Scale {
       |FROM m ORDER BY key_name""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_key_skew" -> (keySkew _),
-    "q_incremental_agg" -> (incrementalAgg _),
-    "q_feature_hash" -> (featureHash _),
-    "q_salted_revenue" -> (saltedRevenue _),
-    "q_order_split" -> (orderSplit _),
-    "q_stratified_sample" -> (stratifiedDocSample _),
-    "q_zorder_bucket" -> (zOrderStats _),
-    "q_zcluster_skip" -> (zClusterSkip _),
-    "q_bloom_pruned_join" -> (bloomPrunedRevenue _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_key_skew" -> keySkewSql,
-    "q_incremental_agg" -> incrementalAggSql,
-    "q_feature_hash" -> featureHashSql,
-    "q_salted_revenue" -> saltedRevenueSql,
-    "q_order_split" -> orderSplitSql,
-    "q_stratified_sample" -> stratifiedDocSampleSql,
-    "q_zorder_bucket" -> zOrderStatsSql,
-    "q_zcluster_skip" -> zClusterSkipSql,
-    "q_bloom_pruned_join" -> bloomPrunedRevenueSql
+  val registry: Map[String, Query] = Map(
+    "q_key_skew" -> Query(keySkew, keySkewSql),
+    "q_incremental_agg" -> Query(incrementalAgg, incrementalAggSql),
+    "q_feature_hash" -> Query(featureHash, featureHashSql),
+    "q_salted_revenue" -> Query(saltedRevenue, saltedRevenueSql),
+    "q_order_split" -> Query(orderSplit, orderSplitSql),
+    "q_stratified_sample" -> Query(stratifiedDocSample, stratifiedDocSampleSql),
+    "q_zorder_bucket" -> Query(zOrderStats, zOrderStatsSql),
+    "q_zcluster_skip" -> Query(zClusterSkip, zClusterSkipSql),
+    "q_bloom_pruned_join" -> Query(bloomPrunedRevenue, bloomPrunedRevenueSql)
   )
 }

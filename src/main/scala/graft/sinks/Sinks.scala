@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Sources
+import graft.{Query, QueryModule}
 
 /** Batch sinks (SURVEY.md §2.1 S3, S7/S8 stand-ins).
   *
@@ -16,11 +17,11 @@ import graft.ingest.Sources
   * date key so downstream readers get partition PRUNING (only matching
   * directories are listed, verified in SinksSpec).
   */
-object Sinks {
+object Sinks extends QueryModule {
 
   /** Recursive local-filesystem delete with a null guard (listFiles
     * returns null on I/O error, not an empty array). Shared by the
-    * verify main and the streaming upsert sink.
+    * verify main, [[withScratchDir]] and the streaming upsert sink.
     */
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) {
@@ -28,6 +29,18 @@ object Sinks {
       if (children != null) children.foreach(deleteRecursively)
     }
     f.delete(): Unit
+  }
+
+  /** Runs `body` in a fresh scratch directory and returns its result
+    * materialized with `localCheckpoint(eager = true)`, since the plan
+    * is lazy and may still read the scratch files. The directory is
+    * deleted in `finally`, so a failed body (disk full, a schema
+    * regression) leaks nothing into the temp dir either.
+    */
+  def withScratchDir(prefix: String)(body: java.io.File => DataFrame): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(tmp).localCheckpoint(eager = true)
+    finally deleteRecursively(tmp)
   }
 
   /** S3: header CSV, the reference prep job's output contract. */
@@ -160,12 +173,8 @@ object Sinks {
     * tail is the row-count/checksum reconciliation every migration
     * runs.
     */
-  def formatRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fmt_").toFile
-    // scratch cleanup in finally: a failure mid-chain (disk full, a
-    // schema regression under debug) must not leak two extra copies of
-    // the orders table into /tmp across repeated iterations
-    try {
+  def formatRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_fmt_") { tmp =>
       val orcPath = new java.io.File(tmp, "orders_orc").toString
       val jsonPath = new java.io.File(tmp, "orders_json").toString
       val o = Sources.orders(spark, dir)
@@ -173,7 +182,7 @@ object Sinks {
       val fromOrc = spark.read.orc(orcPath)
       fromOrc.write.mode(SaveMode.Overwrite).json(jsonPath)
       val fromJson = spark.read.schema(o.schema).json(jsonPath)
-      val out = fromJson
+      fromJson
         .groupBy(col("o_orderpriority"))
         .agg(
           count(lit(1)).as("n_orders"),
@@ -182,11 +191,7 @@ object Sinks {
           max(year(col("o_orderdate"))).as("max_year"),
           countDistinct(col("o_orderstatus")).as("n_status"))
         .orderBy(col("o_orderpriority"))
-      // materialize BEFORE the finally deletes the scratch dirs (the
-      // plan is lazy)
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val formatRoundtripSql: String =
     """SELECT o_orderpriority,
@@ -212,9 +217,8 @@ object Sinks {
     * file metadata), not data; the scan itself stays columnar with
     * missing columns materialized as nulls per row group.
     */
-  def schemaMerge(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sme_").toFile
-    try {
+  def schemaMerge(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_sme_") { tmp =>
       val v1Path = new java.io.File(tmp, "gen=1").toString
       val v2Path = new java.io.File(tmp, "gen=2").toString
       val o = Sources.orders(spark, dir)
@@ -228,16 +232,14 @@ object Sinks {
         .write.mode(SaveMode.Overwrite).parquet(v2Path)
       val merged = spark.read.option("mergeSchema", "true")
         .parquet(v1Path, v2Path)
-      val out = merged
+      merged
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("cents")).as("cents"),
           count(when(col("order_year").isNull, 1)).as("n_legacy"),
           max(col("order_year")).as("max_year"))
         .orderBy(col("o_orderpriority"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val schemaMergeSql: String =
     """SELECT o_orderpriority, count(*) AS n_rows,
@@ -299,9 +301,8 @@ object Sinks {
     * the referenced parquet; the diff is one equi-join keyed on the
     * primary key.
     */
-  def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tt_").toFile
-    try {
+  def timeTravel(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_tt_") { tmp =>
       val path = new java.io.File(tmp, "orders_tt").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -316,7 +317,7 @@ object Sinks {
           col("cents").as("cents_v1"))
       val b = ManifestTable.read(spark, path, Some(v2))
         .select(col("o_orderkey"), col("cents").as("cents_v2"))
-      val out = a.join(b, Seq("o_orderkey"))
+      a.join(b, Seq("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           sum(col("cents_v1")).as("cents_v1"),
@@ -327,9 +328,7 @@ object Sinks {
         .withColumn("n_versions",
           lit(ManifestTable.versions(spark, path).size.toLong))
         .orderBy(col("o_orderpriority"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val timeTravelSql: String =
     """SELECT o_orderpriority,
@@ -470,9 +469,8 @@ object Sinks {
     * nothing else — proving the bag-diff cancellation is exact, not
     * just smaller.
     */
-  def cdcNetChanges(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdc_").toFile
-    try {
+  def cdcNetChanges(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_cdc_") { tmp =>
       val path = new java.io.File(tmp, "orders_cdc").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -494,13 +492,11 @@ object Sinks {
       require(noisy > net.count(),
         s"expected copy-on-write rewrite noise in the file-level feed " +
           s"(got $noisy file-level rows vs ${net.count()} net rows)")
-      val out = net
+      net
         .groupBy(col("_change_type"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents"))
         .orderBy(col("_change_type"), col("o_orderpriority"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val cdcNetChangesSql: String =
     """WITH hot AS (
@@ -530,9 +526,8 @@ object Sinks {
     * survivors with `NOT(pred)` from the base table, proving row
     * exactness, null-semantics included.
     */
-  def deleteWhereOrders(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_del_").toFile
-    try {
+  def deleteWhereOrders(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_del_") { tmp =>
       val path = new java.io.File(tmp, "orders_del").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -551,15 +546,13 @@ object Sinks {
       require((before intersect after).nonEmpty,
         "deleteWhere rewrote every file — the year-envelope prune failed")
       require(before != after, "deleteWhere rewrote nothing")
-      val out = ManifestTable.read(spark, path, Some(v2))
+      ManifestTable.read(spark, path, Some(v2))
         .groupBy(col("order_year"))
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents"),
           count(when(col("o_orderpriority") === "1-URGENT", 1))
             .as("n_urgent"))
         .orderBy(col("order_year"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val deleteWhereSql: String =
     """SELECT CAST(year(o_orderdate) AS INT) AS order_year,
@@ -589,9 +582,8 @@ object Sinks {
     * [[ManifestTable.countRows]] — file row sums minus vector line
     * sums, zero data IO even with vectors live).
     */
-  def deleteVectorsOrders(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dv_").toFile
-    try {
+  def deleteVectorsOrders(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_dv_") { tmp =>
       val path = new java.io.File(tmp, "orders_dv").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -616,7 +608,7 @@ object Sinks {
         "expected live deletion vectors after two MOR deletes")
       val nV1 = ManifestTable.read(spark, path, Some(v1)).count()
       val nMeta = ManifestTable.countRows(spark, path, Some(v3))
-      val out = ManifestTable.read(spark, path, Some(v3))
+      ManifestTable.read(spark, path, Some(v3))
         .groupBy(col("order_year"))
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents"),
           count(when(col("o_orderpriority") === "1-URGENT", 1))
@@ -624,9 +616,7 @@ object Sinks {
         .withColumn("n_v1", lit(nV1))
         .withColumn("n_meta", lit(nMeta))
         .orderBy(col("order_year"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val deleteVectorsSql: String =
     """WITH c AS (
@@ -662,9 +652,8 @@ object Sinks {
     * full-table scan. The oracle recomputes the same three keys' rows
     * raw: identical answers, different bytes.
     */
-  def bloomPointLookup(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_blp_").toFile
-    try {
+  def bloomPointLookup(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_blp_") { tmp =>
       val path = new java.io.File(tmp, "orders_bl").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -687,12 +676,10 @@ object Sinks {
       require(total >= 16, s"layout produced only $total files")
       require(kept.size * 2 <= total,
         s"bloom did not skip: ${kept.size}/$total files kept for 3 keys")
-      val out = ManifestTable.readPoint(spark, path, "o_orderkey", keys)
+      ManifestTable.readPoint(spark, path, "o_orderkey", keys)
         .select(col("o_orderkey"), col("o_orderpriority"), col("cents"))
         .orderBy(col("o_orderkey"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val bloomPointLookupSql: String =
     """WITH c AS (
@@ -726,9 +713,8 @@ object Sinks {
     * rode the feed (delete slice nonempty on both counts) — the
     * reduction is proven over a feed that genuinely contained them.
     */
-  def streamTableFeed(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stf_").toFile
-    try {
+  def streamTableFeed(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_stf_") { tmp =>
       val path = new java.io.File(tmp, "orders_stf").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -793,15 +779,13 @@ object Sinks {
       // the n_rows > 0 filter (same sub-bag argument). coalesce keeps
       // n_rows non-nullable like the count(1) it replaces.
       val sign = when(col("_change_type") === "insert", 1L).otherwise(-1L)
-      val out = feed
+      feed
         .groupBy(col("o_orderpriority"))
         .agg(coalesce(sum(sign), lit(0L)).as("n_rows"),
           sum(sign * col("cents")).as("cents"))
         .filter(col("n_rows") > 0L)
         .orderBy(col("o_orderpriority"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val streamTableFeedSql: String =
     """WITH c AS (
@@ -837,9 +821,8 @@ object Sinks {
     * derivation — grouping by nullness, since the two skipping reads
     * partition the rows exactly.
     */
-  def nullSkipping(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nsk_").toFile
-    try {
+  def nullSkipping(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_nsk_") { tmp =>
       val path = new java.io.File(tmp, "orders_ns").toString
       val o = Sources.orders(spark, dir)
         .select(round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -869,12 +852,10 @@ object Sinks {
       val nl = ManifestTable.readByNull(spark, path, "opt", wantNull = true)
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents"))
         .withColumn("side", lit("null"))
-      val out = nn.unionByName(nl)
+      nn.unionByName(nl)
         .select(col("side"), col("n_rows"), col("cents"))
         .orderBy(col("side"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val nullSkippingSql: String =
     """WITH c AS (
@@ -902,9 +883,8 @@ object Sinks {
     * DV-filtered read keeps the answer exact — proven against
     * DuckDB's NOT(pred) + ORDER BY + LIMIT recompute on unique keys.
     */
-  def metaTopK(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mtk_").toFile
-    try {
+  def metaTopK(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_mtk_") { tmp =>
       val path = new java.io.File(tmp, "orders_tk").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -923,11 +903,9 @@ object Sinks {
         "o_orderkey", 20)
       require(total >= 8 && kept.size <= 2,
         s"metadata top-k did not skip: ${kept.size}/$total files")
-      val out = ManifestTable.readTopK(spark, path, "o_orderkey", 20)
+      ManifestTable.readTopK(spark, path, "o_orderkey", 20)
         .select(col("o_orderkey"), col("o_orderpriority"), col("cents"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val metaTopKSql: String =
     """WITH c AS (
@@ -956,9 +934,8 @@ object Sinks {
     * and recomputed must agree cell-for-cell, the defining property of
     * view maintenance.
     */
-  def incrViewMaint(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivm_").toFile
-    try {
+  def incrViewMaint(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_ivm_") { tmp =>
       val path = new java.io.File(tmp, "orders_ivm").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -995,13 +972,11 @@ object Sinks {
       require(changed.size < (f1 union f3).size,
         "both mutations rewrote every file — nothing incremental to prove")
       val net = ManifestTable.netChanges(spark, path, v1, v3)
-      val out = maintainAgg(baseAgg, net,
+      maintainAgg(baseAgg, net,
         Seq("o_orderpriority"), Seq("cents"), "n_rows")
         .select(col("o_orderpriority"), col("n_rows"), col("cents"))
         .orderBy(col("o_orderpriority"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val incrViewMaintSql: String =
     """WITH b AS (
@@ -1033,9 +1008,8 @@ object Sinks {
     * tick is a no-op (exactly-once under crash-retry), and exactly one
     * gold version exists per tick.
     */
-  def maintainedGold(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mgold_").toFile
-    try {
+  def maintainedGold(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_mgold_") { tmp =>
       val src = new java.io.File(tmp, "orders_src").toString
       val gold = new java.io.File(tmp, "orders_gold").toString
       val grp = Seq("o_orderpriority")
@@ -1084,12 +1058,10 @@ object Sinks {
         "a replayed tick with nothing new must be a no-op")
       require(ManifestTable.versions(spark, gold).size == 3,
         "exactly one gold version per tick")
-      val out = ManifestTable.read(spark, gold)
+      ManifestTable.read(spark, gold)
         .select(col("o_orderpriority"), col("n_rows"), col("cents"))
         .orderBy(col("o_orderpriority"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val maintainedGoldSql: String =
     """WITH base AS (
@@ -1129,9 +1101,8 @@ object Sinks {
     * on a 100 TB table a sub-second metadata answer instead of a
     * full scan.
     */
-  def fastCount(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fcnt_").toFile
-    try {
+  def fastCount(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_fcnt_") { tmp =>
       val path = new java.io.File(tmp, "orders_cnt").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -1158,9 +1129,7 @@ object Sinks {
           ("v2", ManifestTable.countRows(spark, path, Some(v2))),
           ("v3", ManifestTable.countRows(spark, path, Some(v3))))
         .toDF("snap", "n").orderBy(col("snap"))
-        .localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val fastCountSql: String =
     """WITH b AS (
@@ -1195,9 +1164,8 @@ object Sinks {
     * mapping made explicit — proving the null-fill SEMANTICS, not
     * just row counts.
     */
-  def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sevo_").toFile
-    try {
+  def schemaEvolution(spark: SparkSession, dir: String): DataFrame =
+    withScratchDir("graft_sevo_") { tmp =>
       val path = new java.io.File(tmp, "orders_evo").toString
       val o = Sources.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -1211,16 +1179,14 @@ object Sinks {
         o.filter(col("o_orderpriority") === "1-URGENT"), path)
       val nColsV1 = ManifestTable.read(spark, path, Some(v1)).columns.length
       val evolved = ManifestTable.read(spark, path, Some(v2))
-      val out = evolved
+      evolved
         .groupBy(coalesce(col("o_orderpriority"), lit("pre-evolution"))
           .as("grp"))
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents_sum"))
         .withColumn("n_cols_v1", lit(nColsV1.toLong))
         .withColumn("n_cols_v2", lit(evolved.columns.length.toLong))
         .orderBy(col("grp"))
-      out.localCheckpoint(eager = true)
-    } finally deleteRecursively(tmp)
-  }
+    }
 
   val schemaEvolutionSql: String =
     """WITH c AS (
@@ -1238,39 +1204,21 @@ object Sinks {
       |GROUP BY 1
       |ORDER BY grp""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_upsert_orders" -> (upsertOrders _),
-    "q_time_travel" -> (timeTravel _),
-    "q_format_roundtrip" -> (formatRoundtrip _),
-    "q_schema_merge" -> (schemaMerge _),
-    "q_cdc_net_changes" -> (cdcNetChanges _),
-    "q_delete_where" -> (deleteWhereOrders _),
-    "q_incr_view_maint" -> (incrViewMaint _),
-    "q_maintained_gold" -> (maintainedGold _),
-    "q_fast_count" -> (fastCount _),
-    "q_schema_evolution" -> (schemaEvolution _),
-    "q_delete_vectors" -> (deleteVectorsOrders _),
-    "q_bloom_point_lookup" -> (bloomPointLookup _),
-    "q_stream_table_feed" -> (streamTableFeed _),
-    "q_null_skipping" -> (nullSkipping _),
-    "q_meta_topk" -> (metaTopK _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_upsert_orders" -> upsertOrdersSql,
-    "q_time_travel" -> timeTravelSql,
-    "q_format_roundtrip" -> formatRoundtripSql,
-    "q_schema_merge" -> schemaMergeSql,
-    "q_cdc_net_changes" -> cdcNetChangesSql,
-    "q_delete_where" -> deleteWhereSql,
-    "q_incr_view_maint" -> incrViewMaintSql,
-    "q_maintained_gold" -> maintainedGoldSql,
-    "q_fast_count" -> fastCountSql,
-    "q_schema_evolution" -> schemaEvolutionSql,
-    "q_delete_vectors" -> deleteVectorsSql,
-    "q_bloom_point_lookup" -> bloomPointLookupSql,
-    "q_stream_table_feed" -> streamTableFeedSql,
-    "q_null_skipping" -> nullSkippingSql,
-    "q_meta_topk" -> metaTopKSql
+  val registry: Map[String, Query] = Map(
+    "q_upsert_orders" -> Query(upsertOrders, upsertOrdersSql),
+    "q_time_travel" -> Query(timeTravel, timeTravelSql),
+    "q_format_roundtrip" -> Query(formatRoundtrip, formatRoundtripSql),
+    "q_schema_merge" -> Query(schemaMerge, schemaMergeSql),
+    "q_cdc_net_changes" -> Query(cdcNetChanges, cdcNetChangesSql),
+    "q_delete_where" -> Query(deleteWhereOrders, deleteWhereSql),
+    "q_incr_view_maint" -> Query(incrViewMaint, incrViewMaintSql),
+    "q_maintained_gold" -> Query(maintainedGold, maintainedGoldSql),
+    "q_fast_count" -> Query(fastCount, fastCountSql),
+    "q_schema_evolution" -> Query(schemaEvolution, schemaEvolutionSql),
+    "q_delete_vectors" -> Query(deleteVectorsOrders, deleteVectorsSql),
+    "q_bloom_point_lookup" -> Query(bloomPointLookup, bloomPointLookupSql),
+    "q_stream_table_feed" -> Query(streamTableFeed, streamTableFeedSql),
+    "q_null_skipping" -> Query(nullSkipping, nullSkippingSql),
+    "q_meta_topk" -> Query(metaTopK, metaTopKSql)
   )
 }

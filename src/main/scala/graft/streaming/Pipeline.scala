@@ -138,43 +138,19 @@ object Pipeline {
     phBad || doBad
   }
 
-  /** The alert streak fold shared by [[alerts]] and [[AlertProcessor]]:
-    * one sensor's micro-batch rows in event-time order, folded from
-    * `start` — an out-of-band reading extends the streak (firing an
-    * alert when it reaches [[AlertThreshold]]), a healthy one resets
-    * it. Returns the new state and the alerts fired.
-    */
-  private def foldStreak(sensorId: String, rows: Iterator[SensorReading],
-                         start: AlertState): (AlertState, Iterator[Alert]) = {
-    val sorted = rows.toSeq.sortBy(r =>
-      (Option(r.timestamp).map(_.getTime).getOrElse(0L), r.sensor_id))
-    var st = start
-    val out = Seq.newBuilder[Alert]
-    sorted.foreach { r =>
-      val ms = Option(r.timestamp).map(_.getTime).getOrElse(st.lastEventMs)
-      st =
-        if (isOutOfBand(r)) {
-          val n = st.consecutive + 1
-          if (n == AlertThreshold)
-            out += Alert(sensorId, r.timestamp, n, r.ph_value, r.do_value)
-          AlertState(n, ms)
-        } else AlertState(0, ms)
-    }
-    (st, out.result().iterator)
-  }
-
   /** T7: per-sensor alert state machine via flatMapGroupsWithState —
     * an alert fires when [[AlertThreshold]] consecutive out-of-band
     * readings arrive; a healthy reading resets the streak; state for
     * sensors silent past the watermark + 1h is evicted by event-time
-    * timeout.
+    * timeout. One sensor's micro-batch rows are folded in event-time
+    * order from its stored state.
     */
   def alerts(readings: Dataset[SensorReading]): Dataset[Alert] = {
     val spark = readings.sparkSession
     import spark.implicits._
 
     // a function value, not a local def: scalac reaches the module's
-    // private foldStreak from a lambda body through its static
+    // private isOutOfBand from a lambda body through its static
     // instance, while a lifted local def would call it on `this` and
     // the closure Spark serializes would capture the Pipeline object
     val fn: (String, Iterator[SensorReading], GroupState[AlertState]) =>
@@ -183,12 +159,24 @@ object Pipeline {
         state.remove()
         Iterator.empty
       } else {
-        val (st, out) = foldStreak(sensorId, rows,
-          state.getOption.getOrElse(AlertState(0, 0L)))
+        val sorted = rows.toSeq.sortBy(r =>
+          (Option(r.timestamp).map(_.getTime).getOrElse(0L), r.sensor_id))
+        var st = state.getOption.getOrElse(AlertState(0, 0L))
+        val out = Seq.newBuilder[Alert]
+        sorted.foreach { r =>
+          val ms = Option(r.timestamp).map(_.getTime).getOrElse(st.lastEventMs)
+          st =
+            if (isOutOfBand(r)) {
+              val n = st.consecutive + 1
+              if (n == AlertThreshold)
+                out += Alert(sensorId, r.timestamp, n, r.ph_value, r.do_value)
+              AlertState(n, ms)
+            } else AlertState(0, ms)
+        }
         state.update(st)
         if (st.lastEventMs > 0)
           state.setTimeoutTimestamp(st.lastEventMs + 3600 * 1000)
-        out
+        out.result().iterator
       }
     }
 
@@ -197,83 +185,6 @@ object Pipeline {
       .groupByKey(_.sensor_id)
       .flatMapGroupsWithState[AlertState, Alert](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
-  }
-
-  /** T7 on the Spark-4-native state API: the same alert machine as
-    * [[alerts]], expressed as a `StatefulProcessor` for
-    * `transformWithState` — typed per-key ValueState, explicit
-    * event-time timers for state eviction (register on activity,
-    * delete the superseded timer; a stale timer that still fires is
-    * ignored unless the sensor has truly been silent past the
-    * horizon). Requires the RocksDB state store provider, which is
-    * what a 100 TB deployment runs anyway: state lives off-heap and
-    * spills to disk instead of competing with execution memory.
-    */
-  class AlertProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, SensorReading, Alert] {
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState, ExpiredTimerInfo}
-    import org.apache.spark.sql.Encoders
-
-    private val EvictAfterMs: Long = 3600L * 1000
-
-    @transient private var state: ValueState[AlertState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[AlertState]("alert",
-        Encoders.product[AlertState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[Alert] = {
-      val prev =
-        if (state.exists()) state.get() else AlertState(0, 0L)
-      val (st, out) = foldStreak(key, rows, prev)
-      state.update(st)
-      // chained eviction timer (round 12): register ONCE on a key's
-      // first event; [[handleExpiredTimer]] re-arms while the key is
-      // active, so the deadline is exact ON FIRE without being
-      // re-written every batch. Removes 2 RocksDB timer writes per
-      // key per micro-batch. Throughput effect at toy scale: a WASH —
-      // an alternating old/new A/B at 2048 keys measured means within
-      // 1% (694 vs 699 rows/s; README "Streaming alert-sink
-      // throughput"), so the tws lane's gap to fmgws is NOT timer
-      // traffic (per-key typed-state encoding and the timer-CF scan
-      // are what remain). Kept because fewer state writes is strictly
-      // no worse and the fire-time chain is the simpler contract.
-      if (prev.lastEventMs == 0 && st.lastEventMs > 0)
-        getHandle.registerTimer(st.lastEventMs + EvictAfterMs)
-      out
-    }
-
-    override def handleExpiredTimer(key: String,
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Alert] = {
-      // only evict if the sensor has genuinely been silent for the
-      // whole horizon; otherwise RE-ARM at the true deadline — this
-      // fire-time chain is what lets handleInputRows skip per-batch
-      // timer rewrites entirely
-      if (state.exists()) {
-        val last = state.get().lastEventMs
-        if (expiredTimerInfo.getExpiryTimeInMs() >= last + EvictAfterMs)
-          state.clear()
-        else
-          getHandle.registerTimer(last + EvictAfterMs)
-      }
-      Iterator.empty
-    }
-  }
-
-  def alertsTws(readings: Dataset[SensorReading]): Dataset[Alert] = {
-    import org.apache.spark.sql.streaming.TimeMode
-    import org.apache.spark.sql.Encoders
-    implicit val alertEnc: org.apache.spark.sql.Encoder[Alert] =
-      Encoders.product[Alert]
-    readings
-      .withWatermark("timestamp", "1 day")
-      .groupByKey(_.sensor_id)(Encoders.STRING)
-      .transformWithState(new AlertProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Running per-sensor statistics maintained with mapGroupsWithState
@@ -751,22 +662,6 @@ object Pipeline {
                         checkpoint: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     warehouseSink(alerts(readings).toDF(), path, checkpoint, trigger)
-
-  /** [[alertsToWarehouse]] on the Spark-4-native state API
-    * (round 12): identical foreachBatch → [[graft.sinks.ManifestTable]]
-    * egress with [[alertsTws]] as the stateful stage. Requires the
-    * RocksDB state store provider (transformWithState rejects the
-    * default HDFS-backed store) — which is what a 100 TB deployment
-    * runs anyway: state off-heap, spilling to disk instead of
-    * competing with execution memory. Shipped alongside (not instead
-    * of) the flatMapGroupsWithState lane: StreamBench measures both
-    * at toy and many-key state sizes and the README records which one
-    * the default rides on and why.
-    */
-  def alertsToWarehouseTws(readings: Dataset[SensorReading], path: String,
-                           checkpoint: String,
-                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    warehouseSink(alertsTws(readings).toDF(), path, checkpoint, trigger)
 
   /** Streaming lane of the disk-backed skipping probe (round 12):
     * foreachBatch — the per-batch file prune is driver-side manifest

@@ -231,12 +231,6 @@ object PlanForensics {
     }
   }
 
-  /** The hard flags only: a single-partition window directly over a
-    * corpus-sized frame — the round-8 q_price_deciles shape.
-    */
-  def rawSinglePartitionWindows(root: SparkPlan): Seq[String] =
-    singlePartitionWindows(root).filter(_.bound == "none").map(_.tables)
-
   /** Post-EXECUTION metric probe (round 10): the measured INPUT row
     * count of every single-partition window in the final plan —
     * the number that turns the `spwagg` tier's docstring claims

@@ -37,6 +37,30 @@ class SinksSpec extends SparkSpec {
     assert(pruned.count() > 0 && pruned.count() < full.count())
   }
 
+  test("withScratchDir deletes its dir after success and failure; the result still collects") {
+    import spark.implicits._
+    var seen: java.io.File = null
+    val out = Sinks.withScratchDir("graft_scratch_spec_") { tmp =>
+      seen = tmp
+      val path = new java.io.File(tmp, "t").toString
+      Seq(1L, 2L, 3L).toDF("x").write.parquet(path)
+      spark.read.parquet(path).agg(sum(col("x")).as("s"))
+    }
+    assert(seen != null && !seen.exists(), s"scratch dir left behind: $seen")
+    // the frame was materialized before the files went away
+    assert(out.collect().map(_.getLong(0)).toSeq == Seq(6L))
+    seen = null
+    val err = intercept[IllegalStateException] {
+      Sinks.withScratchDir("graft_scratch_spec_") { tmp =>
+        seen = tmp
+        Seq(1L).toDF("x").write.parquet(new java.io.File(tmp, "t").toString)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed", "the body's own exception must surface")
+    assert(seen != null && !seen.exists(), s"scratch dir left behind on failure: $seen")
+  }
+
   test("upsert keeps every key exactly once and updated rows win") {
     val out = graft.sinks.Sinks.upsertOrders(spark, sf)
     val orders = graft.ingest.Sources.orders(spark, sf)

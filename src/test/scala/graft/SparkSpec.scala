@@ -30,31 +30,21 @@ abstract class SparkSpec extends AnyFunSuite {
     df.queryExecution.optimizedPlan.toString()
 }
 
-/** Contract guards over the whole driver surface — catches a query
-  * registered without its oracle (which would silently degrade the
-  * correctness gate to a rows-only check for that operator).
+/** Contract guards over the whole driver surface: each module registers
+  * a query together with its oracle, so what can still go wrong is a
+  * blank oracle, or a name registered by two modules, where the later
+  * one would silently shadow the other in [[graft.SparkEntry]]'s
+  * merged maps.
   */
 class SparkEntryContractSpec extends SparkSpec {
 
-  /** The only queries ALLOWED to ship without a DuckDB oracle, each
-    * with the reason pinned here. EMPTY since round 4: every query on
-    * the surface carries a hash-compared oracle (the last holdout,
-    * q_media_features, gained one when the decode stub moved to an
-    * engine-portable modular hash rule).
-    */
-  val rowsOnlyAllowed = Set.empty[String]
-
   test("every query has an oracle unless explicitly allowed rows-only") {
-    val q = graft.SparkEntry.queries.keySet
-    val o = graft.SparkEntry.oracleSql.keySet
-    assert(o.subsetOf(q), s"oracles without queries: ${o -- q}")
-    val missing = q -- o -- rowsOnlyAllowed
-    assert(missing.isEmpty,
-      s"queries silently lacking oracles: ${missing.toSeq.sorted.mkString(", ")}")
-    val stale = rowsOnlyAllowed -- q
-    assert(stale.isEmpty, s"rows-only allowance for unknown queries: $stale")
-    val shadowed = rowsOnlyAllowed & o
-    assert(shadowed.isEmpty,
-      s"queries both allowed rows-only AND carrying an oracle: $shadowed")
+    val registered = graft.SparkEntry.modules.flatMap(_.registry)
+    val blank = registered.collect { case (n, q) if q.oracleSql.trim.isEmpty => n }
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
+    val names = registered.map(_._1)
+    val shadowed = names.diff(names.distinct)
+    assert(shadowed.isEmpty, s"queries registered twice: $shadowed")
+    assert(graft.SparkEntry.queries.size == names.size)
   }
 }

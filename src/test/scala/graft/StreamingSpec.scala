@@ -125,49 +125,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState alert machine matches the flatMapGroupsWithState semantics") {
-    import spark.implicits._
-    // transformWithState requires the RocksDB state store provider
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[SensorReading](spark)
-    val q = Pipeline.alertsTws(input.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("alert_tws_out").start()
-    try {
-      input.addData(
-        reading("A", "2024-01-01 00:00:00", ph = 5.0f),  // bad 1
-        reading("A", "2024-01-01 00:10:00", ph = 5.1f),  // bad 2
-        reading("A", "2024-01-01 00:20:00", ph = 5.2f),  // bad 3 → alert
-        reading("A", "2024-01-01 00:30:00", ph = 5.3f),  // bad 4, no new alert
-        reading("B", "2024-01-01 00:00:00", ph = 5.0f),
-        reading("B", "2024-01-01 00:10:00", ph = 7.5f),  // healthy reset
-        reading("B", "2024-01-01 00:20:00", ph = 5.1f),
-        reading("B", "2024-01-01 00:30:00", ph = 5.2f))  // only 2 consecutive
-      q.processAllAvailable()
-      val alerts = spark.table("alert_tws_out").collect()
-      assert(alerts.length == 1, s"expected exactly 1 alert: ${alerts.toSeq}")
-      val a = alerts.head
-      assert(a.getAs[String]("sensor_id") == "A")
-      assert(a.getAs[Timestamp]("alert_time") == ts("2024-01-01 00:20:00"))
-      assert(a.getAs[Int]("n_consecutive") == 3)
-      // streak continues across micro-batches without re-firing
-      input.addData(reading("A", "2024-01-01 00:40:00", ph = 5.0f))
-      q.processAllAvailable()
-      assert(spark.table("alert_tws_out").count() == 1)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("checkpointed parquet sink is exactly-once across AvailableNow restarts") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
@@ -357,70 +314,26 @@ class StreamingSpec extends SparkSpec {
     // ManifestTable keyed on (sensor_id, alert_time). foreachBatch is
     // at-least-once; the key-replace merge must make the table
     // exactly-once across a mid-stream kill + checkpoint restart.
+    // Run once per state store: the default HDFS-backed one and
+    // RocksDB, the off-heap, spilling store a many-key deployment
+    // selects through the provider setting alone.
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("graft_alert_wh").toString
-    val input = MemoryStream[SensorReading](spark)
-    val ids = (1 to 12).map(i => f"S$i%02d")
-    def badRun(id: String) = Seq(
-      reading(id, "2024-01-01 00:00:00", ph = 5.0f),
-      reading(id, "2024-01-01 00:10:00", ph = 5.1f),
-      reading(id, "2024-01-01 00:20:00", ph = 5.2f)) // 3rd fires
-    input.addData(ids.take(3).flatMap(badRun): _*)
-    val q1 = Pipeline.alertsToWarehouse(input.toDS(), s"$dir/gold",
-      s"$dir/chk", Trigger.ProcessingTime("50 milliseconds"))
-    try {
-      val deadline = System.currentTimeMillis() + 30000
-      var fed = 3
-      while (fed < 12 && System.currentTimeMillis() < deadline) {
-        input.addData(ids.slice(fed, fed + 3).flatMap(badRun): _*)
-        fed += 3
-        Thread.sleep(120)
-      }
-      assert(fed == 12, "feeder starved")
-      // kill once at least one snapshot is live (mid-stream, not a
-      // drain boundary)
-      while (graft.sinks.ManifestTable.latestVersion(spark, s"$dir/gold").isEmpty &&
-             System.currentTimeMillis() < deadline) Thread.sleep(50)
-    } finally q1.stop()
-    q1.awaitTermination()
-    // restart from the same checkpoint, drain the remainder
-    val q2 = Pipeline.alertsToWarehouse(input.toDS(), s"$dir/gold", s"$dir/chk")
-    q2.awaitTermination()
-    val gold = graft.sinks.ManifestTable.read(spark, s"$dir/gold")
-    val rows = gold.collect()
-    assert(rows.length == 12,
-      s"exactly-once violated: ${rows.length} alert rows for 12 sensors")
-    assert(rows.map(r => (r.getAs[String]("sensor_id"),
-      r.getAs[Timestamp]("alert_time"))).toSet ==
-      ids.map(id => (id, ts("2024-01-01 00:20:00"))).toSet,
-      "alert identities drifted across the kill/restart")
-    assert(rows.forall(_.getAs[Int]("n_consecutive") == 3))
-  }
-
-  test("tws alert warehouse: mid-stream kill, restart, exactly-once on RocksDB") {
-    // the transformWithState twin of the soak above (round 12): same
-    // foreachBatch -> ManifestTable egress, the Spark-4-native state
-    // API as the stateful stage, RocksDB as the (required) store —
-    // the exactly-once contract must hold identically across a
-    // mid-stream kill + checkpoint restart before the twin can be a
-    // candidate default.
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_alert_tws_wh").toString
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val rocksDb =
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val prevProvider = spark.conf.getOption(providerKey)
+    def soak(provider: Option[String]): Unit = {
+      provider.foreach(spark.conf.set(providerKey, _))
+      val dir = java.nio.file.Files.createTempDirectory("graft_alert_wh").toString
       val input = MemoryStream[SensorReading](spark)
-      val ids = (1 to 12).map(i => f"T$i%02d")
+      val ids = (1 to 12).map(i => f"S$i%02d")
       def badRun(id: String) = Seq(
         reading(id, "2024-01-01 00:00:00", ph = 5.0f),
         reading(id, "2024-01-01 00:10:00", ph = 5.1f),
         reading(id, "2024-01-01 00:20:00", ph = 5.2f)) // 3rd fires
       input.addData(ids.take(3).flatMap(badRun): _*)
-      val q1 = Pipeline.alertsToWarehouseTws(input.toDS(), s"$dir/gold",
+      val q1 = Pipeline.alertsToWarehouse(input.toDS(), s"$dir/gold",
         s"$dir/chk", Trigger.ProcessingTime("50 milliseconds"))
       try {
         val deadline = System.currentTimeMillis() + 30000
@@ -431,27 +344,39 @@ class StreamingSpec extends SparkSpec {
           Thread.sleep(120)
         }
         assert(fed == 12, "feeder starved")
+        // kill once at least one snapshot is live (mid-stream, not a
+        // drain boundary)
         while (graft.sinks.ManifestTable.latestVersion(spark, s"$dir/gold").isEmpty &&
                System.currentTimeMillis() < deadline) Thread.sleep(50)
       } finally q1.stop()
       q1.awaitTermination()
-      val q2 = Pipeline.alertsToWarehouseTws(input.toDS(), s"$dir/gold",
-        s"$dir/chk")
+      // restart from the same checkpoint, drain the remainder
+      val q2 = Pipeline.alertsToWarehouse(input.toDS(), s"$dir/gold", s"$dir/chk")
       q2.awaitTermination()
       val gold = graft.sinks.ManifestTable.read(spark, s"$dir/gold")
       val rows = gold.collect()
+      val label = provider.getOrElse("default provider")
       assert(rows.length == 12,
-        s"exactly-once violated: ${rows.length} alert rows for 12 sensors")
+        s"exactly-once violated on $label: ${rows.length} alert rows for 12 sensors")
       assert(rows.map(r => (r.getAs[String]("sensor_id"),
         r.getAs[Timestamp]("alert_time"))).toSet ==
         ids.map(id => (id, ts("2024-01-01 00:20:00"))).toSet,
-        "alert identities drifted across the kill/restart")
+        s"alert identities drifted across the kill/restart on $label")
       assert(rows.forall(_.getAs[Int]("n_consecutive") == 3))
+      if (provider.isDefined) {
+        // the state really lived in the provider under test
+        val used = (q1.recentProgress ++ q2.recentProgress)
+          .flatMap(_.stateOperators).map(_.customMetrics.keySet().toString)
+        assert(used.nonEmpty && used.forall(_.contains("rocksdb")),
+          s"state store was not RocksDB: ${used.distinct.mkString(", ")}")
+      }
+    }
+    try {
+      soak(None)
+      soak(Some(rocksDb))
     } finally prevProvider match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
+      case Some(p) => spark.conf.set(providerKey, p)
+      case None => spark.conf.unset(providerKey)
     }
   }
 
