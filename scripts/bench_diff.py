@@ -18,6 +18,15 @@ is only real if it reproduces under an isolated
 
 Inputs are bench_out.json-style files: one JSON object per line, the
 per-query min map on the line with "metric":"queries".
+
+Given two perfbench result lines instead (the last stdout line of
+`perfbench/run.py`, a JSON object with a "metrics" map — saved to a
+file), it prints every metric of the pair before → after: counts
+(unit "count") exactly with their difference, every other metric with
+its ratio. Traced runs (`--trace 1`) carry the per-layer metrics, so
+this is the per-layer diff of one change:
+
+    python3 scripts/bench_diff.py parent_trace.json change_trace.json
 """
 import json
 import statistics
@@ -48,9 +57,47 @@ def load(path):
     return queries, calib, total
 
 
+def load_result(path):
+    """The last perfbench result line in `path`, or None if it has none."""
+    res = None
+    with open(path) as f:
+        for line in f:
+            try:
+                d = json.loads(line)
+            except json.JSONDecodeError:
+                continue
+            if isinstance(d, dict) and isinstance(d.get("metrics"), dict):
+                res = d
+    return res
+
+
+def diff_results(old, new):
+    """Print each metric of two perfbench result lines, before → after."""
+    for tag, r in (("OLD", old), ("NEW", new)):
+        print(f"[{tag}] correct={r.get('correct')} attempted={r.get('attempted')} "
+              f"failed={r.get('failed')}")
+    om, nm = old["metrics"], new["metrics"]
+    names = list(om) + [n for n in nm if n not in om]
+    width = max(len(n) for n in names)
+    for n in names:
+        a, b = om.get(n, {}).get("value"), nm.get(n, {}).get("value")
+        unit = (om.get(n) or nm.get(n)).get("unit", "")
+        if a is None or b is None:
+            print(f"{n:{width}s}  {a} → {b} {unit}  (only on one side)")
+        elif unit == "count":
+            print(f"{n:{width}s}  {a:g} → {b:g}  ({b - a:+g})")
+        else:
+            ratio = f"x{b / a:.3f}" if a else "n/a"
+            print(f"{n:{width}s}  {a:.3f} → {b:.3f} {unit}  {ratio}")
+
+
 def main():
     if len(sys.argv) != 3:
         sys.exit(__doc__)
+    old_r, new_r = load_result(sys.argv[1]), load_result(sys.argv[2])
+    if old_r and new_r:
+        diff_results(old_r, new_r)
+        return
     old_q, old_c, old_t = load(sys.argv[1])
     new_q, new_c, new_t = load(sys.argv[2])
 

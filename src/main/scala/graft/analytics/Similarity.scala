@@ -1022,7 +1022,7 @@ object Similarity extends QueryModule {
     * one consumer cannot silently diverge from the others (or from
     * the shared DuckDB assignment CTE).
     */
-  private def cellRank(q: Column, cents: Seq[(Int, Seq[Long])]): Column = {
+  private[graft] def cellRank(q: Column, cents: Seq[(Int, Seq[Long])]): Column = {
     val centIds = typedlit(cents.map(_._1))
     transform(centroidOrder(q, cents), s => struct(
       element_at(centIds, s.getField("idx") + 1).as("cid"),
@@ -1047,34 +1047,74 @@ object Similarity extends QueryModule {
     *
     * The codebook is collected driver-side each step (k × 64 longs —
     * size-independent of the corpus) and re-inlined, so every
-    * iteration is one scan + one partial-aggregated shuffle of k rows:
-    * the standard distributed-k-means shape at any data size.
+    * iteration is one job: a scan that assigns and reduces through
+    * [[cellMeans]], the standard distributed-k-means shape at any
+    * data size.
     */
   private[graft] def kmeansStep(
       spark: SparkSession, qv: DataFrame,
       cents: Seq[(Int, Seq[Long])]): (Seq[(Int, Seq[Long])], Double) = {
-    val laneSums = (0 until Dim).map(i =>
-      sum(element_at(col("q"), i + 1)).as(s"c$i"))
     val qnorm = sqrt(vecDotLong(col("q"), col("q")).cast("double"))
-    val rows = qv
+    val (means, obj) = cellMeans(qv
       .withColumn("best", element_at(cellRank(col("q"), cents), 1))
-      .select(col("q"),
-        col("best").getField("cid").as("centroid_id"),
-        (-col("best").getField("negscore") / qnorm).as("cos"))
-      .groupBy(col("centroid_id"))
-      .agg(sum(col("cos")).as("obj"),
-        (count(lit(1)).as("n") +: laneSums): _*)
-      .collect()
-    val updated = rows.map { r =>
-      val n = r.getAs[Long]("n")
-      r.getAs[Int]("centroid_id") ->
-        (0 until Dim).map(i =>
-          math.floor(r.getAs[Long](s"c$i").toDouble / n).toLong)
-    }.toMap
-    val newCents = cents.map { case (id, old) =>
-      id -> updated.getOrElse(id, old).toSeq
+      .select(array(col("best").getField("cid")).as("cells"), col("q"),
+        (-col("best").getField("negscore") / qnorm).as("obj")))
+    (cents.map { case (id, old) => id -> means.getOrElse((0, id), old) }, obj)
+  }
+
+  /** Member count, then the exact integer lane sums, of one
+    * (subspace, cell); summed over rows by [[cellMeans]].
+    */
+  private final class LaneSums extends Serializable {
+    val cells = scala.collection.mutable.HashMap.empty[(Int, Int), Array[Long]]
+    var obj = 0.0
+
+    def add(row: org.apache.spark.sql.catalyst.InternalRow): LaneSums = {
+      val ids = row.getArray(0)
+      val q = row.getArray(1)
+      val w = q.numElements() / ids.numElements()
+      var j = 0
+      while (j < ids.numElements()) {
+        val s = cells.getOrElseUpdate((j, ids.getInt(j)), new Array[Long](w + 1))
+        s(0) += 1
+        var i = 0
+        while (i < w) { s(i + 1) += q.getLong(j * w + i); i += 1 }
+        j += 1
+      }
+      obj += row.getDouble(2)
+      this
     }
-    (newCents, rows.map(_.getAs[Double]("obj")).sum)
+
+    def merge(o: LaneSums): LaneSums = {
+      o.cells.foreach { case (key, s) =>
+        cells.get(key) match {
+          case Some(t) => s.indices.foreach(i => t(i) += s(i))
+          case None => cells(key) = s
+        }
+      }
+      obj += o.obj
+      this
+    }
+  }
+
+  /** The reduce of one Lloyd round, as ONE job with one stage and no
+    * shuffle: an RDD aggregate over the assigned rows, the shape
+    * MLlib's KMeans uses, so no 66-column hash aggregate is planned
+    * and code-generated per round. `assigned` is
+    * `(cells array<int>, q array<bigint>, obj double)`; cell j of a row
+    * owns lanes [j·w, (j+1)·w) of q, with w = |q| / |cells| — IVF
+    * passes one cell for all 64 lanes, PQ one per 8-lane subspace.
+    * Returns the per-lane floor-mean of every non-empty
+    * (subspace, cell) — k entries whatever the corpus size — and the
+    * summed obj. Lane sums are exact integers, so the means do not
+    * depend on the reduce order.
+    */
+  private def cellMeans(assigned: DataFrame): (Map[(Int, Int), Seq[Long]], Double) = {
+    val acc = assigned.queryExecution.toRdd
+      .aggregate(new LaneSums)((a, row) => a.add(row), (a, b) => a.merge(b))
+    (acc.cells.map { case (key, s) =>
+      key -> (1 until s.length).map(i => math.floor(s(i).toDouble / s(0)).toLong)
+    }.toMap, acc.obj)
   }
 
   /** Coarse quantizer: spherical k-means codebook (SURVEY.md §9 item 2
@@ -1125,21 +1165,10 @@ object Similarity extends QueryModule {
     * the quantized unit vectors (single source of truth — the
     * objective spec starts from this same init).
     */
-  private[graft] def initCentroids(qv: DataFrame): Seq[(Int, Seq[Long])] = {
-    val laneSums = (0 until Dim).map(i =>
-      sum(element_at(col("q"), i + 1)).as(s"c$i"))
-    qv
-      .groupBy(col("label").cast("int").as("centroid_id"))
-      .agg(count(lit(1)).as("n"), laneSums: _*)
-      .collect()
-      .map { r =>
-        val n = r.getAs[Long]("n")
-        r.getAs[Int]("centroid_id") ->
-          (0 until Dim).map(i =>
-            math.floor(r.getAs[Long](s"c$i").toDouble / n).toLong).toSeq
-      }
-      .toSeq.sortBy(_._1)
-  }
+  private[graft] def initCentroids(qv: DataFrame): Seq[(Int, Seq[Long])] =
+    cellMeans(qv.select(array(col("label").cast("int")).as("cells"), col("q"),
+      lit(0.0).as("obj")))._1
+      .toSeq.map { case ((_, id), c) => id -> c }.sortBy(_._1)
 
   private def trainCentroids(spark: SparkSession, dir: String,
                              iters: Int,
@@ -2452,50 +2481,29 @@ object Similarity extends QueryModule {
     element_at(array_sort(array(entries: _*)), 1).getField("cid")
   }
 
-  /** Exploded (vec_id, label, m, sq) frame: one row per vector per
-    * subspace, sq = the 8-lane slice. The ×8 fan-out collapses map-side
-    * in every consumer (all aggregate by (m, ...) with partial agg).
+  /** The 8 sub-centroid codes of a quantized vector under codebook
+    * `cb` — the one encoding rule of training and of every index.
     */
-  private def pqSubs(qv: DataFrame): DataFrame =
-    qv.select(col("vec_id"), col("label"),
-        explode(typedlit((0 until PqM).toList)).as("m"), col("q"))
-      .withColumn("sq", slice(col("q"), col("m") * PqD + 1, lit(PqD)))
+  private[graft] def pqCodes(q: Column, cb: Map[Int, Seq[(Int, Seq[Long])]]): Column =
+    array((0 until PqM).map(m => pqCode(slice(q, m * PqD + 1, PqD), cb(m))): _*)
 
   /** Train the 8 sub-codebooks: deterministic init (per-subspace
     * floor-means of the label%4 groups), then [[PqIters]] fixed-point
     * Lloyd steps (exact integer distances, floor-mean updates, empty
-    * clusters keep their previous centroid). Each round is ONE scan +
-    * one partial-aggregated shuffle of 32 rows; the codebook collected
-    * driver-side is 8×4×8 longs — corpus-size-independent, the same
-    * distributed-k-means shape as [[kmeansStep]].
+    * clusters keep their previous centroid). Each round is ONE job: a
+    * scan that encodes every vector and reduces the 8×4 cells through
+    * [[cellMeans]]; the codebook collected driver-side is 8×4×8
+    * longs — corpus-size-independent, the same distributed-k-means
+    * shape as [[kmeansStep]].
     */
   private[graft] def trainPq(qv: DataFrame): Map[Int, Seq[(Int, Seq[Long])]] = {
-    val subs = pqSubs(qv)
-    val laneSums = (0 until PqD).map(j =>
-      sum(element_at(col("sq"), j + 1)).as(s"s$j"))
-    def floorMeans(rows: Array[org.apache.spark.sql.Row])
-        : Map[(Int, Int), Seq[Long]] =
-      rows.map { r =>
-        val n = r.getAs[Long]("n")
-        (r.getAs[Int]("m"), r.getAs[Int]("cid")) ->
-          (0 until PqD).map(j =>
-            math.floor(r.getAs[Long](s"s$j").toDouble / n).toLong)
-      }.toMap
-    val init = floorMeans(subs
-      .groupBy(col("m"), (col("label") % PqK).cast("int").as("cid"))
-      .agg(count(lit(1)).as("n"), laneSums: _*)
-      .collect())
+    def round(cells: Column): Map[(Int, Int), Seq[Long]] =
+      cellMeans(qv.select(cells.as("cells"), col("q"), lit(0.0).as("obj")))._1
+    val init = round(array(Seq.fill(PqM)((col("label") % PqK).cast("int")): _*))
     var cb: Map[Int, Seq[(Int, Seq[Long])]] = (0 until PqM).map(m =>
-      m -> (0 until PqK).map(g => g -> init((m, g)).toSeq)).toMap
+      m -> (0 until PqK).map(g => g -> init((m, g)))).toMap
     (1 to PqIters).foreach { _ =>
-      val codeExpr = (0 until PqM).foldLeft(lit(-1)) { (acc, m) =>
-        when(col("m") === m, pqCode(col("sq"), cb(m))).otherwise(acc)
-      }
-      val upd = floorMeans(subs
-        .withColumn("cid", codeExpr.cast("int"))
-        .groupBy(col("m"), col("cid"))
-        .agg(count(lit(1)).as("n"), laneSums: _*)
-        .collect())
+      val upd = round(pqCodes(col("q"), cb))
       cb = cb.map { case (m, cents) =>
         m -> cents.map { case (g, old) =>
           g -> upd.getOrElse((m, g), old)
@@ -2529,8 +2537,7 @@ object Similarity extends QueryModule {
     // encoding scan and the query lookup
     val qv = quantVectors(spark, dir).localCheckpoint()
     val cb = trainPq(qv)
-    val codes = array((0 until PqM).map(m =>
-      pqCode(slice(col("q"), m * PqD + 1, PqD), cb(m))): _*)
+    val codes = pqCodes(col("q"), cb)
     val corpus = qv.select(col("vec_id").as("neighbor_id"),
       codes.as("codes"))
     val queries = qv.filter(col("vec_id") < nQueries)
@@ -2680,8 +2687,7 @@ object Similarity extends QueryModule {
     val cents = kmeansCentroids(spark, dir)
     val qv = quantVectors(spark, dir).localCheckpoint()
     val cb = trainPq(qv)
-    val codes = array((0 until PqM).map(m =>
-      pqCode(slice(col("q"), m * PqD + 1, PqD), cb(m))): _*)
+    val codes = pqCodes(col("q"), cb)
     val probeOrder = transform(
       cellRank(col("q"), cents), s => s.getField("cid"))
     // the index build: one materialization feeds lists AND probes

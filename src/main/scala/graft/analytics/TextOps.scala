@@ -4557,6 +4557,11 @@ object TextOps extends QueryModule {
   val SetCoverK = 10
   val SetCoverN = 3
 
+  /** Documents per [[setCoverSelect]] prefetch: the driver holds the
+    * uncovered grams of at most this many documents.
+    */
+  val SetCoverPrefetch = 64
+
   /** Greedy maximum-coverage data selection (the classic (1−1/e)
     * submodular greedy): pick [[SetCoverK]] documents, each round
     * taking the document covering the most NOT-yet-covered 3-gram
@@ -4567,57 +4572,86 @@ object TextOps extends QueryModule {
     * Ties break on the lowest doc_id; emits each round's pick, its
     * marginal gain, and cumulative corpus-gram coverage in ppm.
     *
-    * Scale shape: the covered-gram set is a DISTRIBUTED frame, never
-    * driver state — each round is one anti-join of the (doc, gram)
-    * incidence against it plus a TakeOrdered(1) argmax; K rounds ⇒ K
-    * bounded shuffles. The only collect is the 1-row argmax (a query
-    * anchor). The gram definition is the ONE [[gramArray]] rule the
-    * dedup/contamination family shares.
+    * Scale shape: see [[setCoverRounds]] — the rounds run on the
+    * driver over a bounded prefetch, and the only distributed work is
+    * the gram materialization, the corpus gram count and one or more
+    * prefetches. The gram definition is the ONE [[gramArray]] rule
+    * the dedup/contamination family shares.
     */
   def setCoverSelect(spark: SparkSession, dir: String): DataFrame = {
-    val items = docGrams(spark, dir, SetCoverN).localCheckpoint()
-    val totGrams = items.select(col("gram")).distinct().count()
-    // OPTIMIZATION r14 (guide §2.4/§3.1): the covered-gram set is
-    // bounded by K · (grams per picked doc) — CORPUS-INDEPENDENT (K
-    // picks of bounded-length documents), so it is driver/broadcast
-    // material, not a distributed frame. The old shape paid, per
-    // greedy round, a distributed anti-join against the accumulated
-    // `covered` frame PLUS a union+distinct shuffle PLUS an eager
-    // localCheckpoint materialization; this shape pays one
-    // InSet-filtered aggregation (the round's only shuffle) and one
-    // narrow collect of the picked doc's grams. Result is identical
-    // by construction: same covered-set semantics, same
-    // (gain desc, doc_id asc) argmax — the oracle SQL is unchanged.
-    val covered = scala.collection.mutable.HashSet.empty[String]
-    val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
-    var cum = 0L
-    for (r <- 1 to SetCoverK) {
-      // coalesce(…, true): a NULL gram makes isInCollection NULL and
-      // a bare NOT filter would drop the row, where the anti-join
-      // this replaced KEPT it (NULL matches nothing) — grams are md5
-      // hex (non-null) today, so this pins the semantics rather than
-      // fixing an observed wrong row
-      val uncovered =
-        if (covered.isEmpty) items
-        else items.filter(
-          coalesce(!col("gram").isInCollection(covered.toSet), lit(true)))
-      val best = uncovered
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
-        .orderBy(col("gain").desc, col("doc_id").asc)
-        .limit(1).collect()
-      if (best.nonEmpty) {
-        val (docId, gain) = (best(0).getLong(0), best(0).getLong(1))
-        cum += gain
-        picks += ((r, docId, gain, cum))
-        covered ++= items.filter(col("doc_id") === docId)
-          .select(col("gram")).collect().map(_.getString(0))
-      }
-    }
+    val (picks, totGrams) = setCoverRounds(spark, dir)
     import spark.implicits._
-    picks.toSeq.toDF("rnk", "doc_id", "gain", "cum_grams")
+    picks.toDF("rnk", "doc_id", "gain", "cum_grams")
       .withColumn("coverage_ppm",
         expr(s"(cum_grams * 1000000L) DIV ${totGrams}L"))
       .orderBy(col("rnk"))
+  }
+
+  /** The greedy rounds of [[setCoverSelect]] as lazy greedy (Minoux
+    * 1978): returns the picks `(rnk, doc_id, gain, cum_grams)` and the
+    * corpus's distinct gram count.
+    *
+    * A prefetch is one distributed pass against the current covered
+    * set: it returns the top [[SetCoverPrefetch]] + 1 documents by
+    * (gain desc, doc_id asc) and the uncovered grams of the top
+    * [[SetCoverPrefetch]]. The driver then picks among those
+    * candidates, recomputing their gains locally, for as long as each
+    * pick is CERTIFIED: its (gain, −doc_id) beats the prefetch-time
+    * (gain, −doc_id) of the first document left out. Marginal gains
+    * only shrink as the covered set grows, so no document outside the
+    * candidates can beat a certified pick, and the picks equal the
+    * round-by-round greedy's. An uncertified pick triggers a new
+    * prefetch; right after one the top candidate is always certified,
+    * so there are at most [[SetCoverK]] prefetches. The driver holds
+    * the grams of the covered set (K picks) and of at most
+    * [[SetCoverPrefetch]] candidates — neither grows with the corpus.
+    */
+  private def setCoverRounds(spark: SparkSession, dir: String)
+      : (Seq[(Int, Long, Long, Long)], Long) = {
+    val docs = documents(spark, dir)
+      .select(col("doc_id"), gramArray(SetCoverN).as("grams"))
+      .localCheckpoint()
+    val totGrams = docs.select(explode(col("grams"))).distinct().count()
+    val covered = scala.collection.mutable.HashSet.empty[String]
+    // a NULL gram is never covered (it matches nothing in the oracle's
+    // NOT EXISTS), so it counts toward its document's gain every round
+    def isNew(g: String): Boolean = g == null || !covered.contains(g)
+    var cands = Seq.empty[(Long, Array[String])]
+    var bound = Option.empty[(Long, Long)] // (gain, doc_id) left out
+    def prefetch(): Unit = {
+      val uncovered = filter(col("grams"),
+        g => coalesce(!g.isInCollection(covered.toSet), lit(true)))
+      val top = docs.select(col("doc_id"), size(uncovered).cast("long").as("gain"))
+        .filter(col("gain") > 0)
+        .orderBy(col("gain").desc, col("doc_id").asc)
+        .limit(SetCoverPrefetch + 1).collect()
+        .map(r => (r.getLong(1), r.getLong(0)))
+      bound = top.lift(SetCoverPrefetch)
+      val ids = top.take(SetCoverPrefetch).map(_._2)
+      cands = docs.filter(col("doc_id").isInCollection(ids))
+        .select(col("doc_id"), uncovered).collect()
+        .map(r => (r.getLong(0), r.getSeq[String](1).toArray)).toSeq
+    }
+    val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
+    var cum = 0L
+    var exhausted = false
+    prefetch()
+    while (picks.size < SetCoverK && !exhausted) {
+      val best = cands.map { case (id, gs) => (gs.count(isNew).toLong, id) }
+        .filter(_._1 > 0).minByOption { case (g, id) => (-g, id) }
+      val certified = best.exists { case (g, id) =>
+        bound.forall { case (bg, bid) => g > bg || (g == bg && id < bid) }
+      }
+      if (certified) {
+        val (gain, docId) = best.get
+        cum += gain
+        picks += ((picks.size + 1, docId, gain, cum))
+        covered ++= cands.find(_._1 == docId).get._2
+        cands = cands.filterNot(_._1 == docId)
+      } else if (bound.isEmpty) exhausted = true // no document has gain left
+      else prefetch()
+    }
+    (picks.toSeq, totGrams)
   }
 
   val setCoverSelectSql: String = {

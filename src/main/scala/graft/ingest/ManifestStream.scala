@@ -176,30 +176,33 @@ private[ingest] class ManifestMicroBatchStream(path: String,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  /** Positions deleted by the given `#dv` entries, grouped by target,
-    * restricted to `targets`. Driver-collected: live vectors are
-    * delta-sized by the materialize policy.
+  /** Positions deleted by the given `#dv` entries, grouped by target.
+    * Driver-collected: live vectors are delta-sized by the materialize
+    * policy.
     */
-  private def positionsByTarget(entries: Seq[(String, String, Long)],
-                                targets: Set[String]): Map[String, Array[Long]] = {
-    val relevant = entries.filter(e => targets.contains(e._2))
-    if (relevant.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions.col
-      spark.read
-        .parquet(relevant.map(_._1).distinct
-          .map(n => s"$path/data/$n"): _*)
-        .filter(col("_dv_file").isInCollection(relevant.map(_._2).distinct))
-        .collect()
-        .groupBy(_.getString(0))
-        .view.mapValues(_.map(_.getLong(1)).distinct.sorted).toMap
-    }
-  }
+  private def positionsByTarget(entries: Seq[(String, String, Long)])
+      : Map[String, Array[Long]] =
+    ManifestTable.dvPositions(spark, path, entries).fold(Map.empty[String, Array[Long]])(
+      _.collect().groupBy(_.getString(0))
+        .view.mapValues(_.map(_.getLong(1)).distinct.sorted).toMap)
+
+  /** The last window planned and its partitions: Spark plans a
+    * micro-batch more than once, and a window's versions are
+    * immutable, so its files and vector positions are read once.
+    */
+  @volatile private var planned: Option[((Long, Long), Array[InputPartition])] = None
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[VersionOffset].v
-    val to = end.asInstanceOf[VersionOffset].v
+    val window = (start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v)
+    planned.collect { case (`window`, parts) => parts }.getOrElse {
+      val parts = planWindow(window._1, window._2)
+      planned = Some(window -> parts)
+      parts
+    }
+  }
+
+  private def planWindow(from: Long, to: Long): Array[InputPartition] = {
     if (to < 0 || from >= to) return Array.empty
     val fromFiles =
       if (from < 0) Set.empty[String]
@@ -211,23 +214,26 @@ private[ingest] class ManifestMicroBatchStream(path: String,
     val fromDv =
       if (from < 0) Seq.empty[(String, String, Long)]
       else ManifestTable.dvEntries(spark, path, Some(from))
-    val addSkip = positionsByTarget(toDv, added.toSet)
-    val remSkip = positionsByTarget(fromDv, removed.toSet)
     // vector-delta deletes: lines new in the window on carried files
     val fromDvSet = fromDv.toSet
     val carried = fromFiles intersect toFiles
     val delta = toDv.filterNot(fromDvSet)
       .filter(e => carried.contains(e._2))
-    val deltaPos = positionsByTarget(delta, delta.map(_._2).toSet)
+    // one read for the vectors of added files (live in `to`), removed
+    // files (live in `from`) and the delta: the three target sets are
+    // disjoint, and dvPositions keeps a position only under its own
+    // (sidecar, target) line, so each target reads its own lines alone
+    val skip = positionsByTarget(toDv.filterNot(e => fromFiles(e._2)) ++
+      fromDv.filterNot(e => toFiles(e._2)) ++ delta)
     val empty = Array.empty[Long]
     val parts =
       added.map(n => ManifestChangePartition(s"$path/data/$n", "insert",
-        addSkip.getOrElse(n, empty), empty)) ++
+        skip.getOrElse(n, empty), empty)) ++
       removed.map(n => ManifestChangePartition(s"$path/data/$n", "delete",
-        remSkip.getOrElse(n, empty), empty)) ++
-      deltaPos.toSeq.sortBy(_._1).map { case (n, pos) =>
+        skip.getOrElse(n, empty), empty)) ++
+      delta.map(_._2).distinct.sorted.flatMap(n => skip.get(n).map { pos =>
         ManifestChangePartition(s"$path/data/$n", "delete", empty, pos)
-      }
+      })
     parts.toArray[InputPartition]
   }
 

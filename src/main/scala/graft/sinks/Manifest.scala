@@ -203,10 +203,6 @@ object ManifestTable {
       (p(1), p(2), p(3).toLong)
     }
 
-  private def dvLinesOf(spark: SparkSession, path: String,
-                        version: Option[Long]): Seq[String] =
-    rawLines(spark, path, version).filter(isDvLine)
-
   /** PER-FILE BLOOM POINT-LOOKUP INDEX (round 14). A `#bloom` line
     * `#bloom\t<sidecarFile>\t<targetDataFile>\t<column>` records that
     * `sidecarFile` (raw [[org.apache.spark.util.sketch.BloomFilter]]
@@ -286,27 +282,45 @@ object ManifestTable {
       .withColumn(DvPosCol, col("_metadata.row_index"))
   }
 
+  /** Schema of every deletion-vector sidecar (see [[DvMarker]]). */
+  private val DvSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("_dv_file STRING, _dv_pos BIGINT")
+
+  /** Deleted (file, position) pairs of the vector `entries`
+    * `(dvParquet, target, nDeleted)`, keyed [[DvFileCol]]/[[DvPosCol]]
+    * — None when there are none. Each position row is kept only when
+    * its (sidecar, target) pair is one of the entries: one sidecar may
+    * hold positions for several files, and a line naming another
+    * sidecar's target, or a target whose line a rewrite has dropped,
+    * must not lend it those positions. The sidecars are read under
+    * their fixed [[DvSchema]], so no job runs to merge their footers
+    * into an inferred schema. The one reader of vector positions:
+    * snapshot reads, the change feed and the streaming feed all go
+    * through it.
+    */
+  private[graft] def dvPositions(spark: SparkSession, path: String,
+                                 entries: Seq[(String, String, Long)]): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    // tab-joined like the `#dv` line itself: no file name holds a tab
+    val pairs = entries.map(e => s"${e._1}\t${e._2}").distinct
+    if (entries.isEmpty) None
+    else Some(spark.read.schema(DvSchema)
+      .parquet(entries.map(_._1).distinct.map(n => s"$path/$DataDir/$n"): _*)
+      .filter(concat_ws("\t", col("_metadata.file_name"), col("_dv_file"))
+        .isInCollection(pairs))
+      .select(col("_dv_file").as(DvFileCol), col("_dv_pos").as(DvPosCol)))
+  }
+
   /** The snapshot's deleted (file, position) pairs restricted to
-    * `targets`, as a frame keyed [[DvFileCol]]/[[DvPosCol]] — None
-    * when no live vector targets them. The union of the referenced
-    * sidecars is filtered to the targets the LINES name: a sidecar
-    * may carry positions for a file whose line was since dropped by a
-    * rewrite (those rows are gone from the scan anyway, but the
-    * restriction keeps this frame tight for the broadcast).
+    * `targets` ([[dvPositions]] of its live vectors), deduplicated for
+    * the broadcast — None when no live vector targets them.
     */
   private def dvFrame(spark: SparkSession, path: String,
                       version: Option[Long],
-                      targets: Set[String]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    val dvs = dvEntries(spark, path, version)
-      .filter(e => targets.contains(e._2))
-    if (dvs.isEmpty) None
-    else Some(spark.read
-      .parquet(dvs.map(_._1).distinct.map(n => s"$path/$DataDir/$n"): _*)
-      .filter(col("_dv_file").isInCollection(dvs.map(_._2).distinct))
-      .select(col("_dv_file").as(DvFileCol), col("_dv_pos").as(DvPosCol))
-      .distinct())
-  }
+                      targets: Set[String]): Option[DataFrame] =
+    dvPositions(spark, path,
+      dvEntries(spark, path, version).filter(e => targets.contains(e._2)))
+      .map(_.distinct())
 
   private def dvSubtract(spark: SparkSession, path: String,
                          version: Option[Long], scan: DataFrame,
@@ -1469,15 +1483,12 @@ object ManifestTable {
     // delete a row the feed never inserted). Vector lines only ever
     // DROP alongside their target file (rewrites), so the reverse
     // delta cannot occur on a carried file.
-    val fromDvLines = dvLinesOf(spark, path, Some(fromVersion)).toSet
+    val fromDv = dvEntries(spark, path, Some(fromVersion)).toSet
     val carried = from intersect to
-    val deltaDv = dvLinesOf(spark, path, Some(toVersion))
-      .filterNot(fromDvLines).map { l =>
-        val p = l.split('\t'); (p(1), p(2))
-      }.filter(e => carried.contains(e._2))
+    val deltaDv = dvEntries(spark, path, Some(toVersion))
+      .filterNot(fromDv).filter(e => carried.contains(e._2))
     val dvSlice: Option[DataFrame] =
-      if (deltaDv.isEmpty) None
-      else {
+      dvPositions(spark, path, deltaDv).map { pos =>
         val targets = deltaDv.map(_._2).distinct
         val scan = snapshotSchema(spark, path, Some(toVersion)) match {
           case Some(s) => spark.read.schema(s)
@@ -1485,15 +1496,10 @@ object ManifestTable {
           case None =>
             spark.read.parquet(targets.map(n => s"$path/$DataDir/$n"): _*)
         }
-        val pos = spark.read
-          .parquet(deltaDv.map(_._1).distinct.map(n => s"$path/$DataDir/$n"): _*)
-          .filter(col("_dv_file").isInCollection(targets))
-          .select(col("_dv_file").as(DvFileCol), col("_dv_pos").as(DvPosCol))
-          .distinct()
-        Some(withPosKeys(scan)
-          .join(broadcast(pos), Seq(DvFileCol, DvPosCol), "left_semi")
+        withPosKeys(scan)
+          .join(broadcast(pos.distinct()), Seq(DvFileCol, DvPosCol), "left_semi")
           .drop(DvFileCol, DvPosCol)
-          .withColumn("_change_type", lit("delete")))
+          .withColumn("_change_type", lit("delete"))
       }
     val slices = Seq(slice(added, "insert", toVersion),
       slice(removed, "delete", fromVersion), dvSlice).flatten

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
@@ -23,6 +24,9 @@ class ChangeFeedLaneSpec extends SparkSpec {
 
   private val ColumnarMinBytes = 4L << 20
 
+  /** Local property set on the jobs that write a drained batch. */
+  private val WriteMark = "graft.spec.feedWrite"
+
   /** One AvailableNow drain of the feed into `out`; returns the rows
     * and the executed plan of the query's last micro-batch.
     */
@@ -31,7 +35,10 @@ class ChangeFeedLaneSpec extends SparkSpec {
       .load()
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out): Unit
+        val sc = batch.sparkSession.sparkContext
+        sc.setLocalProperty(WriteMark, "write")
+        try batch.write.mode("append").parquet(out)
+        finally sc.setLocalProperty(WriteMark, null)
       }
       .option("checkpointLocation", chk)
       .trigger(Trigger.AvailableNow()).start()
@@ -44,30 +51,37 @@ class ChangeFeedLaneSpec extends SparkSpec {
   private def scanIsColumnar(plan: SparkPlan): Seq[Boolean] =
     plan.collect { case s: MicroBatchScanExec => s.supportsColumnar }
 
-  /** `rowsPerFile` rows in each of two range-laid files, then one
-    * window of mutations: an appended file, a copy-on-write delete in
-    * file 1 and a vector delete in file 2, so every changed file in
-    * the window holds about `rowsPerFile` rows. Checks the lane the
-    * window's scan took and the feed's change set.
-    */
-  private def laneCase(tag: String, rowsPerFile: Long, columnar: Boolean): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_lane_$tag").toFile
-    try laneCaseIn(tmp.toString, rowsPerFile, columnar)
-    finally graft.sinks.Sinks.deleteRecursively(tmp)
-  }
+  // 64 hex chars of sha2 per row: incompressible enough that the
+  // file size tracks the row count
+  private def rows(lo: Long, hi: Long): DataFrame =
+    spark.range(lo, hi + 1).select(col("id"),
+      sha2(col("id").cast("string"), 256).as("h"),
+      (col("id") % 1000).cast("double").as("v"))
 
-  private def laneCaseIn(dir: String, rowsPerFile: Long, columnar: Boolean): Unit = {
-    val path = s"$dir/t"
-    val n = rowsPerFile
-    // 64 hex chars of sha2 per row: incompressible enough that the
-    // file size tracks the row count
-    def rows(lo: Long, hi: Long): DataFrame =
-      spark.range(lo, hi + 1).select(col("id"),
-        sha2(col("id").cast("string"), 256).as("h"),
-        (col("id") % 1000).cast("double").as("v"))
-    val v0 = ManifestTable.replace(
+  /** Ids 1..n in file 1 and n+1..2n in file 2 of a new table at
+    * `path`; returns its version.
+    */
+  private def twoFiles(path: String, n: Long): Long =
+    ManifestTable.replace(
       rows(1L, 2 * n).repartitionByRange(2, col("id"))
         .sortWithinPartitions("id"), path)
+
+  /** True when one sidecar of `version` holds lines for both files. */
+  private def sharedSidecar(path: String, version: Long): Boolean =
+    ManifestTable.dvEntries(spark, path, Some(version))
+      .groupBy(_._1).values.exists(_.size == 2)
+
+  /** `rowsPerFile` rows in each of two range-laid files under
+    * `dir/t`, drained once through `dir/chk`, then one window of
+    * mutations: an appended file, a copy-on-write delete in file 1 and
+    * a vector delete in file 2, so every changed file in the window
+    * holds about `rowsPerFile` rows. Returns the window's first and
+    * last version.
+    */
+  private def mutationWindow(dir: String, rowsPerFile: Long): (Long, Long) = {
+    val path = s"$dir/t"
+    val n = rowsPerFile
+    val v0 = twoFiles(path, n)
     drain(path, s"$dir/chk", s"$dir/load"): Unit
     ManifestTable.append(rows(2 * n + 1, 3 * n).coalesce(1), path)
     ManifestTable.deleteWhere(spark, path, col("id").between(1L, 10L),
@@ -77,6 +91,16 @@ class ChangeFeedLaneSpec extends SparkSpec {
       "id", (n + 1).toDouble, (2 * n).toDouble).get
     assert(ManifestTable.dvEntries(spark, path).nonEmpty,
       "the window carries no deletion vector")
+    (v0, v3)
+  }
+
+  /** [[mutationWindow]], then checks the lane the window's scan took
+    * and the feed's change set.
+    */
+  private def laneCase(tag: String, n: Long, columnar: Boolean): Unit = {
+    val dir = tempDir(s"graft_lane_$tag")
+    val path = s"$dir/t"
+    val (v0, v3) = mutationWindow(dir, n)
     // every file of either snapshot changed in this window
     val sizes = (ManifestTable.snapshotFiles(spark, path, Some(v0)) ++
       ManifestTable.snapshotFiles(spark, path, Some(v3))).distinct
@@ -118,5 +142,91 @@ class ChangeFeedLaneSpec extends SparkSpec {
 
   test("change feed, row lane: small changed files decode row by row, same change set") {
     laneCase("row", 500L, columnar = false)
+  }
+
+  /** Drains the window `from`..`to` of the table under `dir` (whose
+    * feed was drained up to `from`) and checks its change set.
+    */
+  private def windowChangeSet(dir: String, from: Long, to: Long): Unit = {
+    val path = s"$dir/t"
+    val (feed, _) = drain(path, s"$dir/chk", s"$dir/window")
+    assertChangeSet(feed, ManifestTable.read(spark, path, Some(from)),
+      ManifestTable.read(spark, path, Some(to)))
+  }
+
+  test("change feed: a shared vector from before the window is not emitted again when a file it names is rewritten") {
+    val dir = tempDir("graft_lane_shared_old")
+    val path = s"$dir/t"
+    val n = 500L
+    twoFiles(path, n): Unit
+    val from = ManifestTable.deleteWhereMor(spark, path, col("id") % 97 === 0,
+      "id", 1.0, (2 * n).toDouble).get
+    assert(sharedSidecar(path, from), "the vector does not name both files")
+    drain(path, s"$dir/chk", s"$dir/load"): Unit
+    // file 2 is rewritten, so its line of the shared vector drops while
+    // file 1's stays; then a new vector hits file 1, whose delta read
+    // must not take the shared vector's old positions with it
+    ManifestTable.deleteWhere(spark, path, col("id").between(n + 1, n + 10),
+      "id", (n + 1).toDouble, (n + 10).toDouble).get
+    val to = ManifestTable.deleteWhereMor(spark, path,
+      col("id").between(1L, n) && col("id") % 89 === 0, "id", 1.0, n.toDouble).get
+    windowChangeSet(dir, from, to)
+  }
+
+  test("change feed: a shared vector written in the window still emits its deletes when a file it names is rewritten") {
+    val dir = tempDir("graft_lane_shared_new")
+    val path = s"$dir/t"
+    val n = 500L
+    twoFiles(path, n): Unit
+    // a vector on file 2 before the window, so the file carries a line
+    // into the window's removed-file read
+    val from = ManifestTable.deleteWhereMor(spark, path,
+      col("id").between(n + 1, 2 * n) && col("id") % 97 === 0,
+      "id", (n + 1).toDouble, (2 * n).toDouble).get
+    drain(path, s"$dir/chk", s"$dir/load"): Unit
+    // one vector hits both files, then file 2 is rewritten: file 2's
+    // removed partition must skip only the positions of its lines at
+    // `from`, not the new vector's, whose deletes the feed must emit
+    val mid = ManifestTable.deleteWhereMor(spark, path, col("id") % 89 === 0,
+      "id", 1.0, (2 * n).toDouble).get
+    assert(sharedSidecar(path, mid), "the vector does not name both files")
+    val to = ManifestTable.deleteWhere(spark, path, col("id").between(n + 1, n + 10),
+      "id", (n + 1).toDouble, (n + 10).toDouble).get
+    windowChangeSet(dir, from, to)
+  }
+
+  test("change feed: a window's micro-batch submits at most 3 jobs before its write") {
+    val dir = tempDir("graft_lane_jobs")
+    mutationWindow(dir, 500L): Unit
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty(WriteMark)))
+          .getOrElse("-"))
+    }
+    // marked jobs around the drain: events before "begin" may predate
+    // it, and once "end" has arrived every job of the drain has too
+    def mark(tag: String): Unit = {
+      sc.setLocalProperty(WriteMark, tag)
+      try sc.parallelize(Seq(1), 1).count(): Unit
+      finally sc.setLocalProperty(WriteMark, null)
+    }
+    sc.addSparkListener(listener)
+    val seen = try {
+      mark("begin")
+      drain(s"$dir/t", s"$dir/chk", s"$dir/window"): Unit
+      mark("end")
+      Iterator.continually(jobs.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(j => j != null && j != "end").toSeq
+    } finally sc.removeSparkListener(listener)
+    // Spark plans the batch before the sink's body and again inside
+    // its write, so planning jobs may carry the write's mark too: the
+    // write job is the last marked one, and every job before it
+    // planned the batch
+    val batch = seen.dropWhile(_ != "begin").drop(1)
+    val beforeWrite = batch.lastIndexOf("write")
+    assert(beforeWrite >= 0, s"no write job seen: $seen")
+    assert(beforeWrite <= 3, s"$beforeWrite jobs before the micro-batch's write: $batch")
   }
 }

@@ -14,7 +14,7 @@ import graft.sinks.ManifestTable
 class ManifestStatsSpec extends SparkSpec {
 
   private def stageAndCompare(df: org.apache.spark.sql.DataFrame): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fstat_").toString
+    val dir = tempDir("graft_fstat_")
     val names = ManifestTable.stage(df, dir)
     val footer = ManifestTable.footerStats(spark, dir, names)
     val scan = ManifestTable.withStatsScan(spark, dir, names)
@@ -45,7 +45,7 @@ class ManifestStatsSpec extends SparkSpec {
       (1L, java.sql.Timestamp.valueOf("2020-01-02 03:04:05.123456")),
       (2L, java.sql.Timestamp.valueOf("1969-12-31 23:59:59.5"))
     ).toDF("k", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fstat_").toString
+    val dir = tempDir("graft_fstat_")
     val names = ManifestTable.stage(df, dir)
     ManifestTable.footerStats(spark, dir, names) match {
       case Some(lines) =>
@@ -61,18 +61,18 @@ class ManifestStatsSpec extends SparkSpec {
     import spark.implicits._
     // nested column
     val nested = Seq((1L, Seq(1, 2))).toDF("k", "arr")
-    val d1 = java.nio.file.Files.createTempDirectory("graft_fstat_").toString
+    val d1 = tempDir("graft_fstat_")
     val n1 = ManifestTable.stage(nested, d1)
     assert(ManifestTable.footerStats(spark, d1, n1).isEmpty)
     // decimal column
     val dec = Seq((1L, BigDecimal("12.34"))).toDF("k", "dec")
-    val d2 = java.nio.file.Files.createTempDirectory("graft_fstat_").toString
+    val d2 = tempDir("graft_fstat_")
     val n2 = ManifestTable.stage(dec, d2)
     assert(ManifestTable.footerStats(spark, d2, n2).isEmpty)
     // NaN in a double column drops parquet min/max -> must bail, not
     // silently record no bounds (legacy records NaN..NaN there)
     val nan = Seq((1L, Double.NaN), (2L, 1.0)).toDF("k", "d")
-    val d3 = java.nio.file.Files.createTempDirectory("graft_fstat_").toString
+    val d3 = tempDir("graft_fstat_")
     val n3 = ManifestTable.stage(nan, d3)
     val f3 = ManifestTable.footerStats(spark, d3, n3)
     f3.foreach(lines =>
@@ -88,8 +88,8 @@ class ManifestStatsSpec extends SparkSpec {
     // bounds from the stats-bearing groups alone would record an
     // envelope narrower than the true min/max and let pruneFiles skip
     // files with qualifying rows — footerStats must bail to the scan.
-    val dir = java.nio.file.Files.createTempDirectory("graft_fstat_").toString
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fstat_w").toString
+    val dir = tempDir("graft_fstat_")
+    val tmp = tempDir("graft_fstat_w")
     val rows = Seq((0L, Double.NaN)) ++ (1 to 20000).map(i => (i.toLong, i.toDouble))
     rows.toDF("k", "d").coalesce(1)
       .sortWithinPartitions(col("k"))
@@ -126,7 +126,7 @@ class ManifestStatsSpec extends SparkSpec {
     // the other parquet part file is row-less
     val df = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")
       .repartition(2, lit(0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fstat_").toString
+    val dir = tempDir("graft_fstat_")
     val names = ManifestTable.stage(df, dir)
     val footer = ManifestTable.footerStats(spark, dir, names)
     val scan = ManifestTable.withStatsScan(spark, dir, names)

@@ -246,6 +246,55 @@ class SimilaritySpec extends SparkSpec {
     assert(objectives.last > objectives.head, s"no improvement at all: $objectives")
   }
 
+  /** One Lloyd round as a `groupBy` over `(m, cell, sq)` rows: per
+    * (subspace, cell) floor-means of the exact integer lane sums — the
+    * reference the production one-job reduce must equal bit for bit.
+    */
+  private def groupByRound(subs: org.apache.spark.sql.DataFrame,
+                           width: Int): Map[(Int, Int), Seq[Long]] =
+    subs.groupBy(col("m"), col("cell"))
+      .agg(count(lit(1)).as("n"),
+        (0 until width).map(i => sum(element_at(col("sq"), i + 1)).as(s"s$i")): _*)
+      .collect().map { r =>
+        val n = r.getAs[Long]("n")
+        (r.getAs[Int]("m"), r.getAs[Int]("cell")) ->
+          (0 until width).map(i => math.floor(r.getAs[Long](s"s$i").toDouble / n).toLong)
+      }.toMap
+
+  test("Lloyd codebooks: init, every k-means round and the trained PQ codebook equal a groupBy reference exactly") {
+    val qv = Similarity.quantVectors(spark, sf).localCheckpoint()
+    // IVF: one subspace holding all lanes
+    def ivfRound(cell: org.apache.spark.sql.Column) = groupByRound(
+      qv.select(lit(0).as("m"), cell.as("cell"), col("q").as("sq")),
+      Similarity.PqM * Similarity.PqD)
+    var cents = ivfRound(col("label").cast("int")).toSeq
+      .map { case ((_, id), c) => id -> c }.sortBy(_._1)
+    assert(Similarity.initCentroids(qv) == cents, "initial IVF codebook")
+    var prod = cents
+    (1 to Similarity.KmeansIters).foreach { i =>
+      val ref = ivfRound(element_at(Similarity.cellRank(col("q"), cents), 1).getField("cid"))
+      cents = cents.map { case (id, old) => id -> ref.getOrElse((0, id), old) }
+      prod = Similarity.kmeansStep(spark, qv, prod)._1
+      assert(prod == cents, s"k-means round $i")
+    }
+    // PQ: one row per (vector, subspace)
+    val w = Similarity.PqD
+    def pqRound(cells: org.apache.spark.sql.Column) = groupByRound(
+      qv.select(posexplode(cells).as(Seq("m", "cell")), col("q"))
+        .withColumn("sq", slice(col("q"), col("m") * w + 1, lit(w))), w)
+    val init = pqRound(array(Seq.fill(Similarity.PqM)(
+      (col("label") % Similarity.PqK).cast("int")): _*))
+    var cb = (0 until Similarity.PqM).map(m =>
+      m -> (0 until Similarity.PqK).map(g => g -> init((m, g)))).toMap
+    (1 to Similarity.PqIters).foreach { _ =>
+      val ref = pqRound(Similarity.pqCodes(col("q"), cb))
+      cb = cb.map { case (m, cs) => m -> cs.map { case (g, old) => g -> ref.getOrElse((m, g), old) } }
+    }
+    // trainPq returns only its last codebook, which the init and every
+    // round before it feed
+    assert(Similarity.trainPq(qv) == cb, s"PQ codebook after ${Similarity.PqIters} rounds")
+  }
+
   test("FloatVectorDot edge cases: empty arrays, length mismatch, null input") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
@@ -18,9 +19,24 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  /** A fresh scratch dir under the JVM temp dir, deleted with
+    * everything in it once the spec has run.
+    */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => graft.sinks.Sinks.deleteRecursively(d))
+    finally super.afterAll()
 
   /** Formatted physical plan for plan-shape assertions. */
   def plan(df: org.apache.spark.sql.DataFrame): String =

@@ -127,7 +127,7 @@ class StreamingSpec extends SparkSpec {
 
   test("checkpointed parquet sink is exactly-once across AvailableNow restarts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink")
     val input = MemoryStream[SensorReading](spark)
     input.addData(reading("A", "2024-01-01 00:00:00"),
       reading("B", "2024-01-01 00:05:00"))
@@ -150,7 +150,7 @@ class StreamingSpec extends SparkSpec {
     // checkpoint, drain, and demand exactly-once end to end.
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    val dir = tempDir("graft_soak")
     val input = MemoryStream[SensorReading](spark)
     val ids = (1 to 40).map(i => f"S$i%02d")
     input.addData(ids.take(10).map(id => reading(id, "2024-01-01 00:00:00")): _*)
@@ -270,7 +270,7 @@ class StreamingSpec extends SparkSpec {
 
   test("manifest-dim enrichment: a dimension commit becomes visible at the next batch boundary") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dimjoin").toString
+    val dir = tempDir("graft_dimjoin")
     val dimPath = s"$dir/dim"
     // dimension snapshot v0
     graft.sinks.ManifestTable.replace(
@@ -325,7 +325,7 @@ class StreamingSpec extends SparkSpec {
     val prevProvider = spark.conf.getOption(providerKey)
     def soak(provider: Option[String]): Unit = {
       provider.foreach(spark.conf.set(providerKey, _))
-      val dir = java.nio.file.Files.createTempDirectory("graft_alert_wh").toString
+      val dir = tempDir("graft_alert_wh")
       val input = MemoryStream[SensorReading](spark)
       val ids = (1 to 12).map(i => f"S$i%02d")
       def badRun(id: String) = Seq(
@@ -664,7 +664,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch upsert sink: later batches replace matching keys in the gold table") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert")
     // a pre-existing gold table from the OLD plain-directory sink must
     // be migrated into snapshot 0, not silently shadowed
     Seq(("LEGACY", java.sql.Timestamp.valueOf("2023-12-31 00:00:00"), 5.5f))
@@ -1066,7 +1066,7 @@ class StreamingSpec extends SparkSpec {
   test("graft-table source: initial load, then the exact change feed, exactly once") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_src").toString
+    val dir = tempDir("graft_src")
     val path = s"$dir/t"
     val v0 = ManifestTable.replace(
       (1L to 100L).map(i => (i, s"n$i",
@@ -1148,7 +1148,7 @@ class StreamingSpec extends SparkSpec {
   test("table replication: the change-feed subscriber mirrors every mutation kind, replay no-ops") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_repl").toString
+    val dir = tempDir("graft_repl")
     val (src, dst) = (s"$dir/src", s"$dir/dst")
     ManifestTable.replace(
       (1L to 100L).map(i => (i, s"n$i", i * 10L)).toDF("id", "name", "v")
@@ -1202,7 +1202,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming forget lane: vector deletes, zero rewrite, replay and cross-batch dupes no-op") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_forget").toString
+    val dir = tempDir("graft_forget")
     val path = s"$dir/t"
     val v0 = ManifestTable.replace(
       (1L to 200L).map(i => (i, i * 10L)).toDF("id", "v")

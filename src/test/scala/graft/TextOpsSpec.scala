@@ -1910,9 +1910,39 @@ class TextOpsSpec extends SparkSpec {
     assert(got == expect, s"cell ($m,$e): $got != $expect")
   }
 
-  test("set cover: greedy invariants — gains non-increasing, disjoint increments, true argmax per round") {
-    import org.apache.spark.sql.functions._
-    val rows = TextOps.setCoverSelect(spark, sf).collect()
+  /** Call sites ("collect at TextOps.scala:N") of the jobs `body`
+    * submits from this thread, in submission order.
+    */
+  private def jobSites(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobSites"
+    val jobs = new java.util.concurrent.LinkedBlockingQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(tag =>
+          jobs.add(tag -> e.stageInfos.maxBy(_.stageId).name))
+    }
+    def marked(tag: String)(f: => Unit): Unit = {
+      sc.setLocalProperty(key, tag)
+      try f finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marked("body")(body)
+      // job events arrive in order: once the closing job's has, every
+      // job of the body's has too
+      marked("end")(sc.parallelize(Seq(1), 1).count(): Unit)
+      Iterator.continually(jobs.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(j => j != null && j._1 != "end").map(_._2).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** [[TextOps.setCoverSelect]] over `dir` against the greedy
+    * invariants and a driver-side replay of every round.
+    */
+  private def checkSetCover(dir: String): Unit = {
+    val rows = TextOps.setCoverSelect(spark, dir).collect()
     assert(rows.length == TextOps.SetCoverK)
     val gains = rows.sortBy(_.getAs[Int]("rnk")).map(_.getAs[Long]("gain"))
     // submodularity: marginal gains never increase along the greedy path
@@ -1922,7 +1952,7 @@ class TextOpsSpec extends SparkSpec {
     val cums = rows.sortBy(_.getAs[Int]("rnk")).map(_.getAs[Long]("cum_grams"))
     assert(cums.toSeq == gains.scanLeft(0L)(_ + _).tail.toSeq)
     // replay greedy driver-side from raw grams and pin every pick
-    val items = graft.ingest.Sources.documents(spark, sf)
+    val items = graft.ingest.Sources.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .collect().map { r =>
         val t = r.getSeq[String](1)
@@ -1938,6 +1968,33 @@ class TextOpsSpec extends SparkSpec {
         s"round ${r.getAs[Int]("rnk")}: pick ${r.getAs[Long]("doc_id")}/${r.getAs[Long]("gain")} != replay $best")
       covered ++= items(best._1)
     }
+  }
+
+  test("set cover: greedy invariants — gains non-increasing, disjoint increments, true argmax per round") {
+    import spark.implicits._
+    checkSetCover(sf)
+    // long near-duplicates, more of them than one prefetch holds: the
+    // prefetch takes the longest, which differ from each other in 3
+    // words; the 16 shorter ones left out differ in 20. After the first
+    // pick the best gain sits outside the candidates, every candidate
+    // fails its certificate and the rounds prefetch again — a pick made
+    // without the certificate would miss the replay's argmax
+    val rnd = new scala.util.Random(17)
+    val base = Array.fill(200)(s"w${rnd.nextInt(1000)}")
+    val docs = (1L to TextOps.SetCoverPrefetch + 16L).map { id =>
+      val (len, swaps) = if (id <= TextOps.SetCoverPrefetch) (200, 3) else (190, 20)
+      val t = base.take(len)
+      (1 to swaps).foreach(j => t(rnd.nextInt(len)) = s"u${id}_$j")
+      (id, t.mkString(" "))
+    }
+    val dir = tempDir("graft_setcover_")
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    // a prefetch collects twice: the top documents, then the
+    // candidates' uncovered grams
+    val collects = jobSites(checkSetCover(dir))
+      .count(_.startsWith("collect at TextOps.scala:"))
+    assert(collects > 2,
+      s"the near-duplicate corpus never failed a certificate ($collects prefetch collects)")
   }
 
   test("chao2: estimate bounds observed richness; q1/q2 recompute from doc incidence") {
