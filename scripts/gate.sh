@@ -41,7 +41,9 @@ JOPTS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/sun.security.action=ALL-UNNAMED \
 --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
 -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx8g"
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+# sbt compile does not copy resources into classes/: the river fixture
+# (Prep.referenceCsv) is read from src/main/resources directly
+CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"
 
 echo "== gate 0/4: compile =="
 sbt -batch compile || exit 1

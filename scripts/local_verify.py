@@ -16,6 +16,7 @@ import subprocess
 import sys
 import glob
 import os
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -23,6 +24,8 @@ import pandas as pd
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 ONLY = set(sys.argv[3:])
+# the checkout this script lives in, so a copy verifies its own build
+REPO = Path(__file__).resolve().parents[1]
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -41,7 +44,7 @@ def run_verify():
         shutil.rmtree(OUT, ignore_errors=True)
         only_arg = ""
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{only_arg}']
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True,
+    r = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True,
                        timeout=1800)
     if r.returncode != 0:
         print(r.stdout[-4000:])

@@ -149,7 +149,7 @@ object ManifestTable {
     * it lacks — the in-memory twin of the null-fill a schema-carrying
     * parquet scan does for old files.
     */
-  private def alignTo(df: DataFrame,
+  private[graft] def alignTo(df: DataFrame,
                       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val have = df.columns.toSet
@@ -295,10 +295,9 @@ object ManifestTable {
     * must not lend it those positions. The sidecars are read under
     * their fixed [[DvSchema]], so no job runs to merge their footers
     * into an inferred schema. The one reader of vector positions:
-    * snapshot reads, the change feed and the streaming feed all go
-    * through it.
+    * snapshot reads and the change feed both go through it.
     */
-  private[graft] def dvPositions(spark: SparkSession, path: String,
+  private def dvPositions(spark: SparkSession, path: String,
                                  entries: Seq[(String, String, Long)]): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{col, concat_ws}
     // tab-joined like the `#dv` line itself: no file name holds a tab
@@ -1446,35 +1445,24 @@ object ManifestTable {
     * (old file) and an insert (new file) — "rewrite noise".
     * [[netChanges]] cancels it. Versions spanning multiple commits
     * yield the NET file diff (a file added then removed inside the
-    * window never appears).
+    * window never appears). `fromVersion` -1 is the empty table before
+    * the first commit, so `changes(-1, v)` is snapshot `v` as inserts —
+    * the initial load of the `graft-table` streaming source, whose
+    * micro-batches are this feed.
     */
   def changes(spark: SparkSession, path: String,
               fromVersion: Long, toVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.{broadcast, lit}
     require(fromVersion <= toVersion,
       s"changes: fromVersion $fromVersion > toVersion $toVersion")
-    val from = snapshotFiles(spark, path, Some(fromVersion)).toSet
-    val to = snapshotFiles(spark, path, Some(toVersion)).toSet
+    def filesAt(v: Long): Set[String] =
+      if (v < 0) Set.empty else snapshotFiles(spark, path, Some(v)).toSet
+    def dvAt(v: Long): Seq[(String, String, Long)] =
+      if (v < 0) Seq.empty else dvEntries(spark, path, Some(v))
+    val from = filesAt(fromVersion)
+    val to = filesAt(toVersion)
     val added = (to -- from).toSeq.sorted
     val removed = (from -- to).toSeq.sorted
-    // each slice reads under ITS snapshot's schema (files removed from
-    // `from` may predate a column `to` gained) and subtracts ITS
-    // snapshot's deletion vectors (a row deleted by vector never
-    // logically existed in an added file, and was already gone from a
-    // removed one); the union tolerates the width difference,
-    // null-filling the missing side — so the feed spans
-    // schema-evolution and vector windows without a rewrite
-    def slice(ns: Seq[String], kind: String, v: Long): Option[DataFrame] =
-      if (ns.isEmpty) None
-      else {
-        val ps = ns.map(n => s"$path/$DataDir/$n")
-        val df = snapshotSchema(spark, path, Some(v)) match {
-          case Some(s) => spark.read.schema(s).parquet(ps: _*)
-          case None => spark.read.parquet(ps: _*)
-        }
-        Some(dvSubtract(spark, path, Some(v), df, ns.toSet)
-          .withColumn("_change_type", lit(kind)))
-      }
     // VECTOR-ONLY deletes change no data file, so the file diff is
     // blind to them: `#dv` lines new in this window whose target file
     // is carried across it contribute their positions as row-level
@@ -1483,24 +1471,46 @@ object ManifestTable {
     // delete a row the feed never inserted). Vector lines only ever
     // DROP alongside their target file (rewrites), so the reverse
     // delta cannot occur on a carried file.
-    val fromDv = dvEntries(spark, path, Some(fromVersion)).toSet
+    val fromDv = dvAt(fromVersion)
+    val toDv = dvAt(toVersion)
+    val fromDvSet = fromDv.toSet
     val carried = from intersect to
-    val deltaDv = dvEntries(spark, path, Some(toVersion))
-      .filterNot(fromDv).filter(e => carried.contains(e._2))
-    val dvSlice: Option[DataFrame] =
-      dvPositions(spark, path, deltaDv).map { pos =>
-        val targets = deltaDv.map(_._2).distinct
-        val scan = snapshotSchema(spark, path, Some(toVersion)) match {
-          case Some(s) => spark.read.schema(s)
-            .parquet(targets.map(n => s"$path/$DataDir/$n"): _*)
-          case None =>
-            spark.read.parquet(targets.map(n => s"$path/$DataDir/$n"): _*)
-        }
-        withPosKeys(scan)
-          .join(broadcast(pos.distinct()), Seq(DvFileCol, DvPosCol), "left_semi")
-          .drop(DvFileCol, DvPosCol)
-          .withColumn("_change_type", lit("delete"))
+    val deltaDv = toDv.filterNot(fromDvSet).filter(e => carried.contains(e._2))
+    // one read of the window's vector positions, joined by every slice
+    // (so the plan broadcasts it once): `to`'s lines on added files (a
+    // row deleted by vector never logically existed in an added file),
+    // `from`'s lines on removed files (already gone from a removed
+    // one) and the delta on carried files. The three target sets are
+    // disjoint, and dvPositions keeps a position only under its own
+    // (sidecar, target) line, so each slice meets only its own lines
+    val windowDv = toDv.filterNot(e => from.contains(e._2)) ++
+      fromDv.filterNot(e => to.contains(e._2)) ++ deltaDv
+    val dvTargets = windowDv.map(_._2).toSet
+    val dv = dvPositions(spark, path, windowDv).map(broadcast)
+    // each slice reads under ITS snapshot's schema (files removed from
+    // `from` may predate a column `to` gained); the union tolerates the
+    // width difference, null-filling the missing side — so the feed
+    // spans schema-evolution and vector windows without a rewrite
+    def scan(ns: Seq[String], v: Long): DataFrame = {
+      val ps = ns.map(n => s"$path/$DataDir/$n")
+      snapshotSchema(spark, path, Some(v)) match {
+        case Some(s) => spark.read.schema(s).parquet(ps: _*)
+        case None => spark.read.parquet(ps: _*)
       }
+    }
+    def joinDv(df: DataFrame, d: DataFrame, how: String): DataFrame =
+      withPosKeys(df).join(d, Seq(DvFileCol, DvPosCol), how)
+        .drop(DvFileCol, DvPosCol)
+    def slice(ns: Seq[String], kind: String, v: Long): Option[DataFrame] =
+      Option.when(ns.nonEmpty) {
+        val df = scan(ns, v)
+        // a slice no vector line targets is read untouched, unkeyed
+        dv.filter(_ => ns.exists(dvTargets)).fold(df)(joinDv(df, _, "left_anti"))
+          .withColumn("_change_type", lit(kind))
+      }
+    val dvSlice = dv.filter(_ => deltaDv.nonEmpty).map(d =>
+      joinDv(scan(deltaDv.map(_._2).distinct, toVersion), d, "left_semi")
+        .withColumn("_change_type", lit("delete")))
     val slices = Seq(slice(added, "insert", toVersion),
       slice(removed, "delete", fromVersion), dvSlice).flatten
     if (slices.isEmpty)

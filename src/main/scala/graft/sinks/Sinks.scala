@@ -698,7 +698,7 @@ object Sinks extends QueryModule {
       |ORDER BY o_orderkey""".stripMargin
 
   /** Oracle-checked STREAMING-SOURCE feed: subscribe to a manifest
-    * table through the DataSource-V2 `graft-table` source
+    * table through the `graft-table` source
     * ([[graft.ingest.ManifestTableProvider]]) after a three-mutation
     * window — an append of shifted urgent orders, a copy-on-write
     * decile reprice, a scattered merge-on-read delete — and REDUCE
@@ -706,9 +706,9 @@ object Sinks extends QueryModule {
     * materialization every downstream subscriber performs). The
     * reduction must equal the table's final state, which the oracle
     * recomputes from the raw table with the three mutations expressed
-    * in SQL — so the entire DSv2 path (version offsets, per-file
-    * partitions, row-at-a-time parquet decode, vector position
-    * filters, rewrite noise) is gated by DuckDB, not only by specs.
+    * in SQL — so the entire source path (version offsets, the
+    * initial load, the change feed's vector position filters, rewrite
+    * noise) is gated by DuckDB, not only by specs.
     * The require pins that rewrite noise and vector deletes REALLY
     * rode the feed (delete slice nonempty on both counts) — the
     * reduction is proven over a feed that genuinely contained them.

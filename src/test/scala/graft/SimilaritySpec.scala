@@ -349,7 +349,7 @@ class SimilaritySpec extends SparkSpec {
       java.lang.Long.parseLong(hex.substring(0, 8), 16)
     }
     def expSign(p: Int): Double = if (w32(s"rp_${p}_0") % 2 == 0) 0.25 else -0.25
-    val dir = java.nio.file.Files.createTempDirectory("graft_rp").toString
+    val dir = tempDir("graft_rp")
     Seq((0L, 1.0f +: Array.fill(63)(0.0f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
@@ -367,7 +367,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, Array.fill(64)(rng.nextGaussian().toFloat + shift).toSeq,
         i % 3)
     }.toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cb").toString
+    val dir = tempDir("graft_cb")
     corpus(0.0f).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val before = Similarity.codebookCacheSize

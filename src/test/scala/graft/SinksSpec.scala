@@ -6,7 +6,7 @@ import graft.sinks.Sinks
 class SinksSpec extends SparkSpec {
 
   test("csv sink round-trips the prep output contract (header, values)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv")
     val df = graft.ingest.Sources.nation(spark, sf)
       .select(col("n_nationkey"), col("n_name"))
     Sinks.writeCsv(df, s"$dir/out")
@@ -17,7 +17,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("gold sink partitions by date and readers get partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gold").toString
+    val dir = tempDir("graft_gold")
     Sinks.writeGold(
       graft.ingest.Sources.orders(spark, sf)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate")),
@@ -69,7 +69,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("schema evolution: mergeSchema unifies batches with different columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = tempDir("graft_evo")
     import spark.implicits._
     Seq((1L, "x")).toDF("id", "a").write.parquet(s"$dir/t/batch=1")
     Seq((2L, 9.5)).toDF("id", "c").write.parquet(s"$dir/t/batch=2")
@@ -81,7 +81,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves schema and pushes filters to the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc")
     val df = graft.ingest.Sources.orders(spark, sf)
       .select(col("o_orderkey"), col("o_totalprice"))
     df.write.orc(s"$dir/o")
@@ -94,7 +94,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("JSON-lines round-trip with explicit schema (wire-format twin)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json")
     val df = graft.ingest.Sources.nation(spark, sf)
       .select(col("n_nationkey"), col("n_name"))
     df.write.json(s"$dir/j")
@@ -104,7 +104,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compaction collapses a fragmented table without changing content") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact")
     val path = s"$dir/t"
     val df = graft.ingest.Sources.orders(spark, sf)
     df.repartition(40).write.parquet(path) // fragment: 40 small files
@@ -130,7 +130,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compact self-heals a crash inside the swap window (backup-only state)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_heal").toString
+    val dir = tempDir("graft_heal")
     val path = s"$dir/t"
     val df = graft.ingest.Sources.nation(spark, sf)
     df.write.parquet(path)
@@ -347,7 +347,7 @@ class ManifestSpec extends SparkSpec {
 
   test("replace commits atomically; crash before manifest rename leaves old snapshot readable") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest").toString
+    val dir = tempDir("graft_manifest")
     val path = s"$dir/t"
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     assert(ManifestTable.replace(v1, path) == 0L)
@@ -373,7 +373,7 @@ class ManifestSpec extends SparkSpec {
 
   test("manifest data skipping: range reads open only intersecting files; legacy lines never skip") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_skip").toString
+    val dir = tempDir("graft_skip")
     val path = s"$dir/t"
     // range-partitioned write -> files with (mostly) disjoint id ranges
     val df = (0L until 1000L).map(i => (i, s"row$i", i * 2.5)).toDF("id", "s", "v")
@@ -414,7 +414,7 @@ class ManifestSpec extends SparkSpec {
 
   test("manifest stats stay conservative for BIGINTs above 2^53 (ulp-widened bounds)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_skipbig").toString
+    val dir = tempDir("graft_skipbig")
     val path = s"$dir/t"
     // ulp at 2^62 is 1024: +100 rounds DOWN to the nearest double, so
     // an unwidened recorded max would fall BELOW the true max (and the
@@ -457,7 +457,7 @@ class ManifestSpec extends SparkSpec {
   test("manifest schema evolution: append adds a column without rewriting committed bytes") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mevo").toString
+    val dir = tempDir("graft_mevo")
     val path = s"$dir/t"
     val v1 = ManifestTable.replace(
       (1L to 100L).map(i => (i, i * 10L)).toDF("id", "v").coalesce(1), path)
@@ -497,7 +497,7 @@ class ManifestSpec extends SparkSpec {
   test("manifest schema evolution: skipping stays conservative on the added column and DML composes") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mevodml").toString
+    val dir = tempDir("graft_mevodml")
     val path = s"$dir/t"
     ManifestTable.replace(
       (1L to 100L).map(i => (i, i * 10L)).toDF("id", "v").coalesce(1), path)
@@ -536,7 +536,7 @@ class ManifestSpec extends SparkSpec {
   test("manifest schema evolution: the change feed spans the evolution window null-filled") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mevocdc").toString
+    val dir = tempDir("graft_mevocdc")
     val path = s"$dir/t"
     val v1 = ManifestTable.replace(
       (1L to 50L).map(i => (i, i * 10L)).toDF("id", "v").coalesce(1), path)
@@ -564,7 +564,7 @@ class ManifestSpec extends SparkSpec {
   test("manifest schema evolution: a legacy headerless table recovers its schema from one footer") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mevoleg").toString
+    val dir = tempDir("graft_mevoleg")
     val path = s"$dir/t"
     // craft a pre-round-14 manifest: bare file names, no header
     val names = ManifestTable.stage(
@@ -586,7 +586,7 @@ class ManifestSpec extends SparkSpec {
   test("deletion vectors: MOR delete rewrites nothing, reads subtract, counts stay exact") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mdv").toString
+    val dir = tempDir("graft_mdv")
     val path = s"$dir/t"
     val v1 = ManifestTable.replace(
       (1L to 200L).map(i => (i, i * 10L)).toDF("id", "v")
@@ -641,7 +641,7 @@ class ManifestSpec extends SparkSpec {
   test("deletion vectors: materialize folds by threshold; vacuum reaps orphaned sidecars") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mdvmat").toString
+    val dir = tempDir("graft_mdvmat")
     val path = s"$dir/t"
     // two files: ids 1..100 and 101..200
     ManifestTable.replace(
@@ -689,7 +689,7 @@ class ManifestSpec extends SparkSpec {
   test("deletion vectors: copy-on-write ops materialize touched targets, carry the rest") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mdvcow").toString
+    val dir = tempDir("graft_mdvcow")
     val path = s"$dir/t"
     // two range-laid files: 1..100, 101..200
     ManifestTable.replace(
@@ -732,7 +732,7 @@ class ManifestSpec extends SparkSpec {
   test("deletion vectors: the change feed reports vector deletes once, net-exactly") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mdvcdc").toString
+    val dir = tempDir("graft_mdvcdc")
     val path = s"$dir/t"
     val v1 = ManifestTable.replace(
       (1L to 100L).map(i => (i, i * 10L)).toDF("id", "v").coalesce(1), path)
@@ -772,7 +772,7 @@ class ManifestSpec extends SparkSpec {
   test("deletion vectors compose with schema evolution: vector on a pre-evolution file") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mdvevo").toString
+    val dir = tempDir("graft_mdvevo")
     val path = s"$dir/t"
     ManifestTable.replace(
       (1L to 50L).map(i => (i, i * 10L)).toDF("id", "v").coalesce(1), path)
@@ -803,7 +803,7 @@ class ManifestSpec extends SparkSpec {
   test("bloom index: point lookups skip files the stats envelope cannot") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mbl").toString
+    val dir = tempDir("graft_mbl")
     val path = s"$dir/t"
     // laid by ts, NOT by id: every file's id envelope spans ~the whole
     // domain, so the stats prune is useless for id equality
@@ -845,7 +845,7 @@ class ManifestSpec extends SparkSpec {
   test("bloom index: appends top up, rewrites invalidate, vectors compose") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mbl2").toString
+    val dir = tempDir("graft_mbl2")
     val path = s"$dir/t"
     ManifestTable.replace(
       (1L to 100L).map(i => (i, i * 10L)).toDF("id", "v")
@@ -900,7 +900,7 @@ class ManifestSpec extends SparkSpec {
   test("latest-version hint: O(1) discovery, advisory under every corruption") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhint").toString
+    val dir = tempDir("graft_mhint")
     val path = s"$dir/t"
     val v1 = ManifestTable.replace(Seq((1L, 2L)).toDF("a", "b"), path)
     val hint = new java.io.File(s"$path/_manifests/_latest")
@@ -937,7 +937,7 @@ class ManifestSpec extends SparkSpec {
   test("null-count skipping: IS NULL / IS NOT NULL open only decidable files") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mnull").toString
+    val dir = tempDir("graft_mnull")
     val path = s"$dir/t"
     // three generations: all-null, all-present, mixed
     ManifestTable.replace(
@@ -984,7 +984,7 @@ class ManifestSpec extends SparkSpec {
   test("metadata top-k: ORDER BY LIMIT answered from the boundary files") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mtopk").toString
+    val dir = tempDir("graft_mtopk")
     val path = s"$dir/t"
     ManifestTable.replace(
       (1L to 1000L).map(i => (i, i * 3L)).toDF("id", "v")
@@ -1023,7 +1023,7 @@ class ManifestSpec extends SparkSpec {
 
   test("compact rewrites files without a visibility gap; vacuum reaps history and orphans") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mcompact").toString
+    val dir = tempDir("graft_mcompact")
     val path = s"$dir/t"
     val df = (1L to 1000L).toDF("id").repartition(20)
     ManifestTable.replace(df, path)
@@ -1057,7 +1057,7 @@ class ManifestSpec extends SparkSpec {
 
   test("commit refuses to publish a manifest over vanished staged files") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mreval").toString
+    val dir = tempDir("graft_mreval")
     val path = s"$dir/t"
     ManifestTable.replace(Seq(1L).toDF("id"), path)
     val staged = ManifestTable.stage(Seq(2L).toDF("id"), path)
@@ -1077,7 +1077,7 @@ class ManifestSpec extends SparkSpec {
 
   test("racing committers cannot overwrite each other's version") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrace").toString
+    val dir = tempDir("graft_mrace")
     val path = s"$dir/t"
     ManifestTable.replace(Seq(1L).toDF("id"), path)
     // stage two writers, then commit both: versions must differ and
@@ -1096,26 +1096,24 @@ class ManifestSpec extends SparkSpec {
 
   test("time travel: version reads are isolated; v1 unchanged after the v2 commit") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tt_spec_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      val df1 = spark.range(10).select(col("id"), (col("id") * 2).as("x"))
-      val v1 = graft.sinks.ManifestTable.replace(df1, path)
-      val df2 = spark.range(10).select(col("id"), (col("id") * 3).as("x"))
-      val v2 = graft.sinks.ManifestTable.replace(df2, path)
-      assert(v2 > v1)
-      // v1 read AFTER the v2 commit still sees the old rows exactly
-      val back1 = graft.sinks.ManifestTable.read(spark, path, Some(v1))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(back1 == (0L until 10L).map(i => (i, i * 2)).toSet)
-      val back2 = graft.sinks.ManifestTable.read(spark, path, Some(v2))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(back2 == (0L until 10L).map(i => (i, i * 3)).toSet)
-      // default read = latest
-      val latest = graft.sinks.ManifestTable.read(spark, path)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(latest == back2)
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_tt_spec_"))
+    val path = new java.io.File(tmp, "t").toString
+    val df1 = spark.range(10).select(col("id"), (col("id") * 2).as("x"))
+    val v1 = graft.sinks.ManifestTable.replace(df1, path)
+    val df2 = spark.range(10).select(col("id"), (col("id") * 3).as("x"))
+    val v2 = graft.sinks.ManifestTable.replace(df2, path)
+    assert(v2 > v1)
+    // v1 read AFTER the v2 commit still sees the old rows exactly
+    val back1 = graft.sinks.ManifestTable.read(spark, path, Some(v1))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(back1 == (0L until 10L).map(i => (i, i * 2)).toSet)
+    val back2 = graft.sinks.ManifestTable.read(spark, path, Some(v2))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(back2 == (0L until 10L).map(i => (i, i * 3)).toSet)
+    // default read = latest
+    val latest = graft.sinks.ManifestTable.read(spark, path)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(latest == back2)
   }
 
   test("upsertPruned: non-overlap keeps old files untouched; overlap merges by key; empty commits nothing") {
@@ -1123,87 +1121,85 @@ class ManifestSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     import graft.sinks.ManifestTable
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsp_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      def frame(rows: (Long, Long, String)*) =
-        rows.toDF("k", "t", "v").repartition(1)
-      // first commit: creates the table (replace path)
-      val v1 = ManifestTable.upsertPruned(frame((1L, 10L, "a"), (2L, 20L, "b")),
-        path, Seq("k"), "t")
-      assert(v1.isDefined)
-      val files1 = ManifestTable.snapshotFiles(spark, path).toSet
-      // NON-overlapping batch (t=100 vs committed [10,20]): the fast
-      // path — every old file carries into the new manifest verbatim,
-      // nothing on disk is rewritten
-      val v2 = ManifestTable.upsertPruned(frame((3L, 100L, "c")),
-        path, Seq("k"), "t")
-      assert(v2.exists(_ > v1.get))
-      val files2 = ManifestTable.snapshotFiles(spark, path).toSet
-      assert(files1.subsetOf(files2),
-        s"old files must survive a non-overlapping commit: $files1 vs $files2")
-      assert(ManifestTable.read(spark, path).count() == 3)
-      // OVERLAPPING batch replaces by key: k=1 (t=10) gets a new value;
-      // the t=100 file is outside the batch's range and must survive
-      val file100 = (files2 -- files1)
-      val v3 = ManifestTable.upsertPruned(frame((1L, 10L, "z")),
-        path, Seq("k"), "t")
-      assert(v3.exists(_ > v2.get))
-      val files3 = ManifestTable.snapshotFiles(spark, path).toSet
-      assert(file100.subsetOf(files3),
-        "file outside the batch's key range was rewritten")
-      assert(files1.intersect(files3).isEmpty,
-        "overlapping files must be replaced by the merge")
-      val rows = ManifestTable.read(spark, path)
-        .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
-      assert(rows == Map(1L -> "z", 2L -> "b", 3L -> "c"),
-        s"merge semantics broke: $rows")
-      // EMPTY batch: no commit at all (not a rewritten-identical table)
-      val before = ManifestTable.latestVersion(spark, path)
-      val vEmpty = ManifestTable.upsertPruned(
-        frame((1L, 10L, "a")).filter(lit(false)), path, Seq("k"), "t")
-      assert(vEmpty.isEmpty)
-      assert(ManifestTable.latestVersion(spark, path) == before)
-      assert(ManifestTable.read(spark, path).count() == 3)
-      // PARTIAL-null pruneCol (round-11 advice): a null-t row riding
-      // under a file's recorded bounds would be invisible to every
-      // future prune and never replaced — the contract fails loudly
-      // and the table is untouched (staged file cleaned up)
-      val nullBatch = Seq((4L, Some(50L), "d"), (5L, Option.empty[Long], "e"))
-        .toDF("k", "t", "v").repartition(1)
-      val eNull = intercept[IllegalArgumentException] {
-        ManifestTable.upsertPruned(nullBatch, path, Seq("k"), "t")
-      }
-      assert(eNull.getMessage.contains("NULL"))
-      assert(ManifestTable.latestVersion(spark, path) == before)
-      assert(ManifestTable.read(spark, path).count() == 3)
-      // PARTIAL-null on the FIRST commit (round-12 advice): the old
-      // first-commit shortcut through replace() skipped the probe, so
-      // a mixed batch could seed the table with forever-unreachable
-      // rows — now the same loud failure fires before any table exists
-      val path2 = new java.io.File(tmp, "t2").toString
-      val eFirst = intercept[IllegalArgumentException] {
-        ManifestTable.upsertPruned(nullBatch, path2, Seq("k"), "t")
-      }
-      assert(eFirst.getMessage.contains("NULL"))
-      assert(ManifestTable.latestVersion(spark, path2).isEmpty,
-        "a failed first commit must not create the table")
-      // an ALL-null first batch still commits (conservative, matching
-      // the non-first all-null full-merge semantics: no bounds are
-      // recorded, so nothing is ever wrongly pruned past it)
-      val allNull = Seq((6L, Option.empty[Long], "f"))
-        .toDF("k", "t", "v").repartition(1)
-      val vAllNull = ManifestTable.upsertPruned(allNull, path2, Seq("k"), "t")
-      assert(vAllNull.isDefined)
-      assert(ManifestTable.read(spark, path2).count() == 1)
-      // and an EMPTY first batch creates the (empty) table, matching
-      // the replace-based history the old branch delegated to
-      val path3 = new java.io.File(tmp, "t3").toString
-      val vEmptyFirst = ManifestTable.upsertPruned(
-        frame((1L, 10L, "a")).filter(lit(false)), path3, Seq("k"), "t")
-      assert(vEmptyFirst.isDefined)
-      assert(ManifestTable.read(spark, path3).count() == 0)
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_upsp_"))
+    val path = new java.io.File(tmp, "t").toString
+    def frame(rows: (Long, Long, String)*) =
+      rows.toDF("k", "t", "v").repartition(1)
+    // first commit: creates the table (replace path)
+    val v1 = ManifestTable.upsertPruned(frame((1L, 10L, "a"), (2L, 20L, "b")),
+      path, Seq("k"), "t")
+    assert(v1.isDefined)
+    val files1 = ManifestTable.snapshotFiles(spark, path).toSet
+    // NON-overlapping batch (t=100 vs committed [10,20]): the fast
+    // path — every old file carries into the new manifest verbatim,
+    // nothing on disk is rewritten
+    val v2 = ManifestTable.upsertPruned(frame((3L, 100L, "c")),
+      path, Seq("k"), "t")
+    assert(v2.exists(_ > v1.get))
+    val files2 = ManifestTable.snapshotFiles(spark, path).toSet
+    assert(files1.subsetOf(files2),
+      s"old files must survive a non-overlapping commit: $files1 vs $files2")
+    assert(ManifestTable.read(spark, path).count() == 3)
+    // OVERLAPPING batch replaces by key: k=1 (t=10) gets a new value;
+    // the t=100 file is outside the batch's range and must survive
+    val file100 = (files2 -- files1)
+    val v3 = ManifestTable.upsertPruned(frame((1L, 10L, "z")),
+      path, Seq("k"), "t")
+    assert(v3.exists(_ > v2.get))
+    val files3 = ManifestTable.snapshotFiles(spark, path).toSet
+    assert(file100.subsetOf(files3),
+      "file outside the batch's key range was rewritten")
+    assert(files1.intersect(files3).isEmpty,
+      "overlapping files must be replaced by the merge")
+    val rows = ManifestTable.read(spark, path)
+      .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+    assert(rows == Map(1L -> "z", 2L -> "b", 3L -> "c"),
+      s"merge semantics broke: $rows")
+    // EMPTY batch: no commit at all (not a rewritten-identical table)
+    val before = ManifestTable.latestVersion(spark, path)
+    val vEmpty = ManifestTable.upsertPruned(
+      frame((1L, 10L, "a")).filter(lit(false)), path, Seq("k"), "t")
+    assert(vEmpty.isEmpty)
+    assert(ManifestTable.latestVersion(spark, path) == before)
+    assert(ManifestTable.read(spark, path).count() == 3)
+    // PARTIAL-null pruneCol (round-11 advice): a null-t row riding
+    // under a file's recorded bounds would be invisible to every
+    // future prune and never replaced — the contract fails loudly
+    // and the table is untouched (staged file cleaned up)
+    val nullBatch = Seq((4L, Some(50L), "d"), (5L, Option.empty[Long], "e"))
+      .toDF("k", "t", "v").repartition(1)
+    val eNull = intercept[IllegalArgumentException] {
+      ManifestTable.upsertPruned(nullBatch, path, Seq("k"), "t")
+    }
+    assert(eNull.getMessage.contains("NULL"))
+    assert(ManifestTable.latestVersion(spark, path) == before)
+    assert(ManifestTable.read(spark, path).count() == 3)
+    // PARTIAL-null on the FIRST commit (round-12 advice): the old
+    // first-commit shortcut through replace() skipped the probe, so
+    // a mixed batch could seed the table with forever-unreachable
+    // rows — now the same loud failure fires before any table exists
+    val path2 = new java.io.File(tmp, "t2").toString
+    val eFirst = intercept[IllegalArgumentException] {
+      ManifestTable.upsertPruned(nullBatch, path2, Seq("k"), "t")
+    }
+    assert(eFirst.getMessage.contains("NULL"))
+    assert(ManifestTable.latestVersion(spark, path2).isEmpty,
+      "a failed first commit must not create the table")
+    // an ALL-null first batch still commits (conservative, matching
+    // the non-first all-null full-merge semantics: no bounds are
+    // recorded, so nothing is ever wrongly pruned past it)
+    val allNull = Seq((6L, Option.empty[Long], "f"))
+      .toDF("k", "t", "v").repartition(1)
+    val vAllNull = ManifestTable.upsertPruned(allNull, path2, Seq("k"), "t")
+    assert(vAllNull.isDefined)
+    assert(ManifestTable.read(spark, path2).count() == 1)
+    // and an EMPTY first batch creates the (empty) table, matching
+    // the replace-based history the old branch delegated to
+    val path3 = new java.io.File(tmp, "t3").toString
+    val vEmptyFirst = ManifestTable.upsertPruned(
+      frame((1L, 10L, "a")).filter(lit(false)), path3, Seq("k"), "t")
+    assert(vEmptyFirst.isDefined)
+    assert(ManifestTable.read(spark, path3).count() == 0)
   }
 
   test("concurrent appends serialize: every tranche survives the race (r13 advice/directive)") {
@@ -1215,69 +1211,65 @@ class ManifestSpec extends SparkSpec {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_apprace_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      ManifestTable.replace(Seq(0L).toDF("id").repartition(1), path)
-      val n = 4
-      val barrier = new java.util.concurrent.CyclicBarrier(n)
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val threads = (1 to n).map { i =>
-        new Thread(() => {
-          try {
-            val df = Seq(i.toLong).toDF("id").repartition(1)
-            // all four stage+commit sequences start together
-            barrier.await()
-            ManifestTable.append(df, path): Unit
-          } catch { case t: Throwable => errs.add(t): Unit }
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join(60000))
-      assert(errs.isEmpty, s"append racer failed: ${errs.peek()}")
-      val got = ManifestTable.read(spark, path)
-        .collect().map(_.getLong(0)).toSet
-      assert(got == (0L to n.toLong).toSet,
-        s"a racing append's tranche was dropped: $got")
-      // one version per append, plus the seed replace
-      assert(ManifestTable.versions(spark, path).size == n + 1)
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_apprace_"))
+    val path = new java.io.File(tmp, "t").toString
+    ManifestTable.replace(Seq(0L).toDF("id").repartition(1), path)
+    val n = 4
+    val barrier = new java.util.concurrent.CyclicBarrier(n)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to n).map { i =>
+      new Thread(() => {
+        try {
+          val df = Seq(i.toLong).toDF("id").repartition(1)
+          // all four stage+commit sequences start together
+          barrier.await()
+          ManifestTable.append(df, path): Unit
+        } catch { case t: Throwable => errs.add(t): Unit }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join(60000))
+    assert(errs.isEmpty, s"append racer failed: ${errs.peek()}")
+    val got = ManifestTable.read(spark, path)
+      .collect().map(_.getLong(0)).toSet
+    assert(got == (0L to n.toLong).toSet,
+      s"a racing append's tranche was dropped: $got")
+    // one version per append, plus the seed replace
+    assert(ManifestTable.versions(spark, path).size == n + 1)
   }
 
   test("appendOnce: a replayed txn is a detected no-op; distinct txns commit") {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_apponce_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      // creates the table
-      val v0 = ManifestTable.appendOnce(Seq(1L).toDF("id").repartition(1),
-        path, "b0")
-      assert(v0.contains(0L))
-      // replay of the SAME txn (foreachBatch crash-replay): no-op
-      val replay = ManifestTable.appendOnce(
-        Seq(99L).toDF("id").repartition(1), path, "b0")
-      assert(replay.isEmpty, "replayed txn must not re-append")
-      assert(ManifestTable.read(spark, path)
-        .collect().map(_.getLong(0)).toSeq == Seq(1L))
-      // next batch's txn commits alongside
-      val v1 = ManifestTable.appendOnce(Seq(2L).toDF("id").repartition(1),
-        path, "b1")
-      assert(v1.contains(1L))
-      assert(ManifestTable.read(spark, path)
-        .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-      // marker rides the manifest itself: file names carry the txn
-      val names = ManifestTable.snapshotFiles(spark, path)
-      assert(names.exists(_.startsWith("txn-b0-")) &&
-        names.exists(_.startsWith("txn-b1-")))
-      // txn ids that could collide as prefixes must not ("b1" vs "b10")
-      assert(ManifestTable.appendOnce(Seq(3L).toDF("id").repartition(1),
-        path, "b10").isDefined)
-      // and an unsafe txn id is refused, not mangled
-      intercept[IllegalArgumentException] {
-        ManifestTable.appendOnce(Seq(4L).toDF("id"), path, "a/b")
-      }
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_apponce_"))
+    val path = new java.io.File(tmp, "t").toString
+    // creates the table
+    val v0 = ManifestTable.appendOnce(Seq(1L).toDF("id").repartition(1),
+      path, "b0")
+    assert(v0.contains(0L))
+    // replay of the SAME txn (foreachBatch crash-replay): no-op
+    val replay = ManifestTable.appendOnce(
+      Seq(99L).toDF("id").repartition(1), path, "b0")
+    assert(replay.isEmpty, "replayed txn must not re-append")
+    assert(ManifestTable.read(spark, path)
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // next batch's txn commits alongside
+    val v1 = ManifestTable.appendOnce(Seq(2L).toDF("id").repartition(1),
+      path, "b1")
+    assert(v1.contains(1L))
+    assert(ManifestTable.read(spark, path)
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    // marker rides the manifest itself: file names carry the txn
+    val names = ManifestTable.snapshotFiles(spark, path)
+    assert(names.exists(_.startsWith("txn-b0-")) &&
+      names.exists(_.startsWith("txn-b1-")))
+    // txn ids that could collide as prefixes must not ("b1" vs "b10")
+    assert(ManifestTable.appendOnce(Seq(3L).toDF("id").repartition(1),
+      path, "b10").isDefined)
+    // and an unsafe txn id is refused, not mangled
+    intercept[IllegalArgumentException] {
+      ManifestTable.appendOnce(Seq(4L).toDF("id"), path, "a/b")
+    }
   }
 
   test("upsertPruned fails LOUD when a commit lands inside its read-merge window") {
@@ -1290,40 +1282,38 @@ class ManifestSpec extends SparkSpec {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsrace_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      ManifestTable.replace(
-        Seq((1L, 10L, "a")).toDF("k", "t", "v").repartition(1), path)
-      SinksSpec.gate = new java.util.concurrent.CountDownLatch(1)
-      val gated = org.apache.spark.sql.functions.udf { (k: Long) =>
-        SinksSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS); k
-      }
-      val batch = Seq((2L, 20L, "b")).toDF("k", "t", "v")
-        .withColumn("k", gated(col("k"))).repartition(1)
-      val result = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, Option[Long]]]()
-      val t = new Thread(() =>
-        result.set(
-          try Right(ManifestTable.upsertPruned(batch, path, Seq("k"), "t"))
-          catch { case e: Throwable => Left(e) }))
-      t.start()
-      Thread.sleep(500) // let the upsert capture its base version
-      ManifestTable.replace(
-        Seq((9L, 90L, "z")).toDF("k", "t", "v").repartition(1), path)
-      SinksSpec.gate.countDown()
-      t.join(60000)
-      result.get() match {
-        case Left(e) =>
-          assert(e.getMessage != null &&
-            e.getMessage.contains("concurrent commit"),
-            s"expected the concurrent-commit refusal, got: $e")
-          // the competing commit survives untouched
-          assert(ManifestTable.read(spark, path)
-            .collect().map(_.getLong(0)).toSeq == Seq(9L))
-        case Right(_) =>
-          fail("upsertPruned published a merge built from a stale snapshot")
-      }
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_upsrace_"))
+    val path = new java.io.File(tmp, "t").toString
+    ManifestTable.replace(
+      Seq((1L, 10L, "a")).toDF("k", "t", "v").repartition(1), path)
+    SinksSpec.gate = new java.util.concurrent.CountDownLatch(1)
+    val gated = org.apache.spark.sql.functions.udf { (k: Long) =>
+      SinksSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS); k
+    }
+    val batch = Seq((2L, 20L, "b")).toDF("k", "t", "v")
+      .withColumn("k", gated(col("k"))).repartition(1)
+    val result = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, Option[Long]]]()
+    val t = new Thread(() =>
+      result.set(
+        try Right(ManifestTable.upsertPruned(batch, path, Seq("k"), "t"))
+        catch { case e: Throwable => Left(e) }))
+    t.start()
+    Thread.sleep(500) // let the upsert capture its base version
+    ManifestTable.replace(
+      Seq((9L, 90L, "z")).toDF("k", "t", "v").repartition(1), path)
+    SinksSpec.gate.countDown()
+    t.join(60000)
+    result.get() match {
+      case Left(e) =>
+        assert(e.getMessage != null &&
+          e.getMessage.contains("concurrent commit"),
+          s"expected the concurrent-commit refusal, got: $e")
+        // the competing commit survives untouched
+        assert(ManifestTable.read(spark, path)
+          .collect().map(_.getLong(0)).toSeq == Seq(9L))
+      case Right(_) =>
+        fail("upsertPruned published a merge built from a stale snapshot")
+    }
   }
 
   test("change data feed: file-level diff carries rewrite noise; netChanges cancels it exactly") {
@@ -1331,56 +1321,54 @@ class ManifestSpec extends SparkSpec {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdf_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      def frame(rows: (Long, Long, String)*) =
-        rows.toDF("k", "t", "v").repartition(1)
-      val v0 = ManifestTable.replace(frame((1L, 10L, "a"), (2L, 20L, "b")), path)
-      // pure append: the feed is inserts only, no deletes, no noise
-      val v1 = ManifestTable.append(frame((3L, 30L, "c")), path)
-      val feed1 = ManifestTable.netChanges(spark, path, v0, v1).collect()
-      assert(feed1.map(r => (r.getAs[Long]("k"),
-        r.getAs[String]("_change_type"))).toSet == Set((3L, "insert")))
-      // copy-on-write update of k=1: its file (holding k=1 AND k=2) is
-      // rewritten, so the FILE-level feed carries k=2 as both insert
-      // and delete (rewrite noise)...
-      val v2 = ManifestTable.upsertPruned(frame((1L, 10L, "z")),
-        path, Seq("k"), "t").get
-      val fileLevel = ManifestTable.changes(spark, path, v1, v2)
-        .select(col("k"), col("v"), col("_change_type")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      assert(fileLevel.contains((2L, "b", "insert")) &&
-        fileLevel.contains((2L, "b", "delete")),
-        s"expected carried-row noise in the file-level feed: $fileLevel")
-      // ...and the NET feed cancels it: exactly one insert + one
-      // delete, both for the updated key
-      val net = ManifestTable.netChanges(spark, path, v1, v2)
-        .select(col("k"), col("v"), col("_change_type")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      assert(net == Set((1L, "z", "insert"), (1L, "a", "delete")),
-        s"net feed must be exactly the updated key's pair: $net")
-      // untouched files contribute nothing to the scan: the feed's
-      // file set is the manifest diff, not the table
-      val f1 = ManifestTable.snapshotFiles(spark, path, Some(v1)).toSet
-      val f2 = ManifestTable.snapshotFiles(spark, path, Some(v2)).toSet
-      assert((f1 intersect f2).nonEmpty,
-        "the appended file should have been carried verbatim")
-      // same-version window: empty feed, schema preserved
-      val same = ManifestTable.changes(spark, path, v2, v2)
-      assert(same.count() == 0 &&
-        same.columns.contains("_change_type"))
-      // a multi-commit window nets at file level too: v0→v2 never
-      // surfaces a file added and removed inside the window
-      val wide = ManifestTable.netChanges(spark, path, v0, v2)
-        .select(col("k"), col("v"), col("_change_type")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      assert(wide == Set((3L, "c", "insert"),
-        (1L, "z", "insert"), (1L, "a", "delete")), s"window net: $wide")
-      intercept[IllegalArgumentException] {
-        ManifestTable.changes(spark, path, v2, v0)
-      }
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_cdf_"))
+    val path = new java.io.File(tmp, "t").toString
+    def frame(rows: (Long, Long, String)*) =
+      rows.toDF("k", "t", "v").repartition(1)
+    val v0 = ManifestTable.replace(frame((1L, 10L, "a"), (2L, 20L, "b")), path)
+    // pure append: the feed is inserts only, no deletes, no noise
+    val v1 = ManifestTable.append(frame((3L, 30L, "c")), path)
+    val feed1 = ManifestTable.netChanges(spark, path, v0, v1).collect()
+    assert(feed1.map(r => (r.getAs[Long]("k"),
+      r.getAs[String]("_change_type"))).toSet == Set((3L, "insert")))
+    // copy-on-write update of k=1: its file (holding k=1 AND k=2) is
+    // rewritten, so the FILE-level feed carries k=2 as both insert
+    // and delete (rewrite noise)...
+    val v2 = ManifestTable.upsertPruned(frame((1L, 10L, "z")),
+      path, Seq("k"), "t").get
+    val fileLevel = ManifestTable.changes(spark, path, v1, v2)
+      .select(col("k"), col("v"), col("_change_type")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    assert(fileLevel.contains((2L, "b", "insert")) &&
+      fileLevel.contains((2L, "b", "delete")),
+      s"expected carried-row noise in the file-level feed: $fileLevel")
+    // ...and the NET feed cancels it: exactly one insert + one
+    // delete, both for the updated key
+    val net = ManifestTable.netChanges(spark, path, v1, v2)
+      .select(col("k"), col("v"), col("_change_type")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    assert(net == Set((1L, "z", "insert"), (1L, "a", "delete")),
+      s"net feed must be exactly the updated key's pair: $net")
+    // untouched files contribute nothing to the scan: the feed's
+    // file set is the manifest diff, not the table
+    val f1 = ManifestTable.snapshotFiles(spark, path, Some(v1)).toSet
+    val f2 = ManifestTable.snapshotFiles(spark, path, Some(v2)).toSet
+    assert((f1 intersect f2).nonEmpty,
+      "the appended file should have been carried verbatim")
+    // same-version window: empty feed, schema preserved
+    val same = ManifestTable.changes(spark, path, v2, v2)
+    assert(same.count() == 0 &&
+      same.columns.contains("_change_type"))
+    // a multi-commit window nets at file level too: v0→v2 never
+    // surfaces a file added and removed inside the window
+    val wide = ManifestTable.netChanges(spark, path, v0, v2)
+      .select(col("k"), col("v"), col("_change_type")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    assert(wide == Set((3L, "c", "insert"),
+      (1L, "z", "insert"), (1L, "a", "delete")), s"window net: $wide")
+    intercept[IllegalArgumentException] {
+      ManifestTable.changes(spark, path, v2, v0)
+    }
   }
 
   test("deleteWhere: prunes to intersecting files, keeps null-predicate rows, no-ops commit nothing") {
@@ -1388,48 +1376,46 @@ class ManifestSpec extends SparkSpec {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delw_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      // two range-disjoint files: t in [10,20] and t in [100,110]
-      val lowFile = Seq((1L, Some(10L), "a"), (2L, Some(20L), "b"),
-        (3L, Some(15L), null.asInstanceOf[String]))
-        .toDF("k", "t", "v").repartition(1)
-      ManifestTable.replace(lowFile, path)
-      val hiVer = ManifestTable.append(
-        Seq((4L, Some(100L), "d"), (5L, Some(110L), "e"))
-          .toDF("k", "t", "v").repartition(1), path)
-      val hiFiles = ManifestTable.snapshotFiles(spark, path, Some(hiVer)).toSet --
-        ManifestTable.snapshotFiles(spark, path, Some(0L)).toSet
-      // delete v='a' rows in the low range: only the low file rewrites
-      val v = ManifestTable.deleteWhere(spark, path,
-        col("v") === "a", "t", 0.0, 50.0)
-      assert(v.isDefined)
-      val after = ManifestTable.snapshotFiles(spark, path, Some(v.get)).toSet
-      assert(hiFiles.subsetOf(after),
-        "files outside the prune range must be carried verbatim")
-      val rows = ManifestTable.read(spark, path)
-        .collect().map(r => r.getAs[Long]("k")).toSet
-      // k=1 deleted; k=3 has v=NULL → pred is NULL, not TRUE → SURVIVES
-      // (a plain !pred filter would have silently deleted it)
-      assert(rows == Set(2L, 3L, 4L, 5L),
-        s"null-predicate row must survive a delete: $rows")
-      // envelope false positive: range intersects, no row matches →
-      // no rewrite, no version burned
-      val before = ManifestTable.latestVersion(spark, path)
-      assert(ManifestTable.deleteWhere(spark, path,
-        col("v") === "nope", "t", 0.0, 50.0).isEmpty)
-      // disjoint range: nothing can match → None
-      assert(ManifestTable.deleteWhere(spark, path,
-        col("v") === "b", "t", 500.0, 600.0).isEmpty)
-      assert(ManifestTable.latestVersion(spark, path) == before)
-      // delete EVERYTHING a file holds: the file drops out entirely
-      val vAll = ManifestTable.deleteWhere(spark, path,
-        col("t") >= 100L, "t", 100.0, 110.0)
-      assert(vAll.isDefined)
-      assert(ManifestTable.read(spark, path)
-        .collect().map(_.getAs[Long]("k")).toSet == Set(2L, 3L))
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_delw_"))
+    val path = new java.io.File(tmp, "t").toString
+    // two range-disjoint files: t in [10,20] and t in [100,110]
+    val lowFile = Seq((1L, Some(10L), "a"), (2L, Some(20L), "b"),
+      (3L, Some(15L), null.asInstanceOf[String]))
+      .toDF("k", "t", "v").repartition(1)
+    ManifestTable.replace(lowFile, path)
+    val hiVer = ManifestTable.append(
+      Seq((4L, Some(100L), "d"), (5L, Some(110L), "e"))
+        .toDF("k", "t", "v").repartition(1), path)
+    val hiFiles = ManifestTable.snapshotFiles(spark, path, Some(hiVer)).toSet --
+      ManifestTable.snapshotFiles(spark, path, Some(0L)).toSet
+    // delete v='a' rows in the low range: only the low file rewrites
+    val v = ManifestTable.deleteWhere(spark, path,
+      col("v") === "a", "t", 0.0, 50.0)
+    assert(v.isDefined)
+    val after = ManifestTable.snapshotFiles(spark, path, Some(v.get)).toSet
+    assert(hiFiles.subsetOf(after),
+      "files outside the prune range must be carried verbatim")
+    val rows = ManifestTable.read(spark, path)
+      .collect().map(r => r.getAs[Long]("k")).toSet
+    // k=1 deleted; k=3 has v=NULL → pred is NULL, not TRUE → SURVIVES
+    // (a plain !pred filter would have silently deleted it)
+    assert(rows == Set(2L, 3L, 4L, 5L),
+      s"null-predicate row must survive a delete: $rows")
+    // envelope false positive: range intersects, no row matches →
+    // no rewrite, no version burned
+    val before = ManifestTable.latestVersion(spark, path)
+    assert(ManifestTable.deleteWhere(spark, path,
+      col("v") === "nope", "t", 0.0, 50.0).isEmpty)
+    // disjoint range: nothing can match → None
+    assert(ManifestTable.deleteWhere(spark, path,
+      col("v") === "b", "t", 500.0, 600.0).isEmpty)
+    assert(ManifestTable.latestVersion(spark, path) == before)
+    // delete EVERYTHING a file holds: the file drops out entirely
+    val vAll = ManifestTable.deleteWhere(spark, path,
+      col("t") >= 100L, "t", 100.0, 110.0)
+    assert(vAll.isDefined)
+    assert(ManifestTable.read(spark, path)
+      .collect().map(_.getAs[Long]("k")).toSet == Set(2L, 3L))
   }
 
   test("deleteWhere fails LOUD when a commit lands inside its read-rewrite window") {
@@ -1437,39 +1423,37 @@ class ManifestSpec extends SparkSpec {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delrace_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      ManifestTable.replace(
-        Seq((1L, 10L, "a")).toDF("k", "t", "v").repartition(1), path)
-      SinksSpec.gate = new java.util.concurrent.CountDownLatch(1)
-      val gated = udf { (v: String) =>
-        SinksSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS); v
-      }
-      val result = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, Option[Long]]]()
-      val t = new Thread(() =>
-        result.set(
-          try Right(ManifestTable.deleteWhere(spark, path,
-            gated(col("v")) === "a", "t", 0.0, 50.0))
-          catch { case e: Throwable => Left(e) }))
-      t.start()
-      Thread.sleep(500) // let the delete capture its base version
-      ManifestTable.replace(
-        Seq((9L, 90L, "z")).toDF("k", "t", "v").repartition(1), path)
-      SinksSpec.gate.countDown()
-      t.join(60000)
-      result.get() match {
-        case Left(e) =>
-          assert(e.getMessage != null &&
-            e.getMessage.contains("concurrent commit"),
-            s"expected the concurrent-commit refusal, got: $e")
-          assert(ManifestTable.read(spark, path)
-            .collect().map(_.getLong(0)).toSeq == Seq(9L),
-            "the competing commit must survive untouched")
-        case Right(_) =>
-          fail("deleteWhere published a rewrite built from a stale snapshot")
-      }
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_delrace_"))
+    val path = new java.io.File(tmp, "t").toString
+    ManifestTable.replace(
+      Seq((1L, 10L, "a")).toDF("k", "t", "v").repartition(1), path)
+    SinksSpec.gate = new java.util.concurrent.CountDownLatch(1)
+    val gated = udf { (v: String) =>
+      SinksSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS); v
+    }
+    val result = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, Option[Long]]]()
+    val t = new Thread(() =>
+      result.set(
+        try Right(ManifestTable.deleteWhere(spark, path,
+          gated(col("v")) === "a", "t", 0.0, 50.0))
+        catch { case e: Throwable => Left(e) }))
+    t.start()
+    Thread.sleep(500) // let the delete capture its base version
+    ManifestTable.replace(
+      Seq((9L, 90L, "z")).toDF("k", "t", "v").repartition(1), path)
+    SinksSpec.gate.countDown()
+    t.join(60000)
+    result.get() match {
+      case Left(e) =>
+        assert(e.getMessage != null &&
+          e.getMessage.contains("concurrent commit"),
+          s"expected the concurrent-commit refusal, got: $e")
+        assert(ManifestTable.read(spark, path)
+          .collect().map(_.getLong(0)).toSeq == Seq(9L),
+          "the competing commit must survive untouched")
+      case Right(_) =>
+        fail("deleteWhere published a rewrite built from a stale snapshot")
+    }
   }
 
   test("maintainAgg: net-feed deltas reproduce the full recompute; zero-count groups drop") {
@@ -1502,42 +1486,40 @@ class ManifestSpec extends SparkSpec {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cnt_").toFile
-    try {
-      val path = new java.io.File(tmp, "t").toString
-      def check(expected: Long, clue: String): Unit = {
-        assert(ManifestTable.countRows(spark, path) == expected, clue)
-        assert(ManifestTable.read(spark, path).count() == expected,
-          s"$clue (ground truth)")
-      }
-      val base = (0L until 100L).map(i => (i, i * 10L, s"r$i"))
-        .toDF("k", "t", "v").repartitionByRange(4, col("k"))
-      val v1 = ManifestTable.replace(base, path)
-      check(100L, "after replace")
-      ManifestTable.append((100L until 120L).map(i => (i, i * 10L, s"r$i"))
-        .toDF("k", "t", "v").repartition(1), path)
-      check(120L, "after append")
-      // time travel: the old snapshot's metadata count is preserved
-      assert(ManifestTable.countRows(spark, path, Some(v1)) == 100L)
-      // key-replace upsert: no cardinality change
-      ManifestTable.upsertPruned(Seq((5L, 50L, "z")).toDF("k", "t", "v")
-        .repartition(1), path, Seq("k"), "t")
-      check(120L, "after upsert (replace, not insert)")
-      // copy-on-write delete: rewritten survivors get fresh counts
-      ManifestTable.deleteWhere(spark, path,
-        col("t") < 100L, "t", 0.0, 99.0)
-      check(110L, "after delete")
-      // LEGACY lines (bare names, pre-row-count format): the count
-      // falls back to scanning exactly those files — still exact
-      val names = ManifestTable.snapshotFiles(spark, path)
-      ManifestTable.commit(spark, path, names)
-      check(110L, "legacy manifest")
-      // a data column colliding with the reserved stats name is refused
-      intercept[IllegalArgumentException] {
-        ManifestTable.replace(Seq((1L, 2L)).toDF("k", "_rows"),
-          new java.io.File(tmp, "t2").toString)
-      }
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_cnt_"))
+    val path = new java.io.File(tmp, "t").toString
+    def check(expected: Long, clue: String): Unit = {
+      assert(ManifestTable.countRows(spark, path) == expected, clue)
+      assert(ManifestTable.read(spark, path).count() == expected,
+        s"$clue (ground truth)")
+    }
+    val base = (0L until 100L).map(i => (i, i * 10L, s"r$i"))
+      .toDF("k", "t", "v").repartitionByRange(4, col("k"))
+    val v1 = ManifestTable.replace(base, path)
+    check(100L, "after replace")
+    ManifestTable.append((100L until 120L).map(i => (i, i * 10L, s"r$i"))
+      .toDF("k", "t", "v").repartition(1), path)
+    check(120L, "after append")
+    // time travel: the old snapshot's metadata count is preserved
+    assert(ManifestTable.countRows(spark, path, Some(v1)) == 100L)
+    // key-replace upsert: no cardinality change
+    ManifestTable.upsertPruned(Seq((5L, 50L, "z")).toDF("k", "t", "v")
+      .repartition(1), path, Seq("k"), "t")
+    check(120L, "after upsert (replace, not insert)")
+    // copy-on-write delete: rewritten survivors get fresh counts
+    ManifestTable.deleteWhere(spark, path,
+      col("t") < 100L, "t", 0.0, 99.0)
+    check(110L, "after delete")
+    // LEGACY lines (bare names, pre-row-count format): the count
+    // falls back to scanning exactly those files — still exact
+    val names = ManifestTable.snapshotFiles(spark, path)
+    ManifestTable.commit(spark, path, names)
+    check(110L, "legacy manifest")
+    // a data column colliding with the reserved stats name is refused
+    intercept[IllegalArgumentException] {
+      ManifestTable.replace(Seq((1L, 2L)).toDF("k", "_rows"),
+        new java.io.File(tmp, "t2").toString)
+    }
   }
 
   test("maintainAggTable: watermark rides the gold manifest; replayed ticks no-op; every mutation kind converges to the recompute") {
@@ -1545,48 +1527,46 @@ class ManifestSpec extends SparkSpec {
     import graft.sinks.ManifestTable
     val spark2 = spark
     import spark2.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mgt_").toFile
-    try {
-      val src = new java.io.File(tmp, "src").toString
-      val gold = new java.io.File(tmp, "gold").toString
-      def tick() = Sinks.maintainAggTable(spark, src, gold,
-        Seq("g"), Seq("s"), "n")
-      def goldNow() = ManifestTable.read(spark, gold)
-        .collect().map(r => (r.getAs[String]("g"),
-          r.getAs[Long]("s"), r.getAs[Long]("n"))).toSet
-      def recompute() = ManifestTable.read(spark, src)
-        .groupBy(col("g")).agg(sum(col("s")).as("s"), count(lit(1)).as("n"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      def frame(rows: (Long, String, Long)*) =
-        rows.toDF("k", "g", "s").repartition(1)
-      // seed: full aggregate, watermark = src latest
-      ManifestTable.replace(frame((1L, "x", 10L), (2L, "x", 20L),
-        (3L, "y", 5L)), src)
-      assert(tick().isDefined)
-      assert(goldNow() == recompute())
-      assert(Sinks.appliedVersion(spark, gold) ==
-        ManifestTable.latestVersion(spark, src))
-      // nothing new: replayed tick must not commit (crash-retry path)
-      val vGold = ManifestTable.latestVersion(spark, gold)
-      assert(tick().isEmpty)
-      assert(ManifestTable.latestVersion(spark, gold) == vGold)
-      // append → tick converges
-      ManifestTable.append(frame((4L, "z", 7L)), src)
-      assert(tick().isDefined)
-      assert(goldNow() == recompute())
-      // upsert + delete in one window → ONE tick converges
-      ManifestTable.upsertPruned(frame((1L, "x", 99L)), src, Seq("k"), "k")
-      ManifestTable.deleteWhere(spark, src, col("g") === "y", "k", 3.0, 3.0)
-      assert(tick().isDefined)
-      assert(goldNow() == recompute())
-      assert(goldNow().map(_._1) == Set("x", "z"), "group y must have dropped")
-      // a gold table not created by maintainAggTable fails loud
-      val alien = new java.io.File(tmp, "alien").toString
-      ManifestTable.replace(frame((1L, "x", 1L)), alien)
-      intercept[IllegalArgumentException] {
-        Sinks.appliedVersion(spark, alien)
-      }
-    } finally graft.sinks.Sinks.deleteRecursively(tmp)
+    val tmp = new java.io.File(tempDir("graft_mgt_"))
+    val src = new java.io.File(tmp, "src").toString
+    val gold = new java.io.File(tmp, "gold").toString
+    def tick() = Sinks.maintainAggTable(spark, src, gold,
+      Seq("g"), Seq("s"), "n")
+    def goldNow() = ManifestTable.read(spark, gold)
+      .collect().map(r => (r.getAs[String]("g"),
+        r.getAs[Long]("s"), r.getAs[Long]("n"))).toSet
+    def recompute() = ManifestTable.read(spark, src)
+      .groupBy(col("g")).agg(sum(col("s")).as("s"), count(lit(1)).as("n"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    def frame(rows: (Long, String, Long)*) =
+      rows.toDF("k", "g", "s").repartition(1)
+    // seed: full aggregate, watermark = src latest
+    ManifestTable.replace(frame((1L, "x", 10L), (2L, "x", 20L),
+      (3L, "y", 5L)), src)
+    assert(tick().isDefined)
+    assert(goldNow() == recompute())
+    assert(Sinks.appliedVersion(spark, gold) ==
+      ManifestTable.latestVersion(spark, src))
+    // nothing new: replayed tick must not commit (crash-retry path)
+    val vGold = ManifestTable.latestVersion(spark, gold)
+    assert(tick().isEmpty)
+    assert(ManifestTable.latestVersion(spark, gold) == vGold)
+    // append → tick converges
+    ManifestTable.append(frame((4L, "z", 7L)), src)
+    assert(tick().isDefined)
+    assert(goldNow() == recompute())
+    // upsert + delete in one window → ONE tick converges
+    ManifestTable.upsertPruned(frame((1L, "x", 99L)), src, Seq("k"), "k")
+    ManifestTable.deleteWhere(spark, src, col("g") === "y", "k", 3.0, 3.0)
+    assert(tick().isDefined)
+    assert(goldNow() == recompute())
+    assert(goldNow().map(_._1) == Set("x", "z"), "group y must have dropped")
+    // a gold table not created by maintainAggTable fails loud
+    val alien = new java.io.File(tmp, "alien").toString
+    ManifestTable.replace(frame((1L, "x", 1L)), alien)
+    intercept[IllegalArgumentException] {
+      Sinks.appliedVersion(spark, alien)
+    }
   }
 
   test("streamTableFeed's signed reduce: equals exceptAll on a sub-bag " +

@@ -749,41 +749,39 @@ class StreamingSpec extends SparkSpec {
       (101L, "entirely novel text that matches nothing in the history", "en", "src0"),
       (103L, "completely different historical content about rivers and sensors", "en", "src0"),
       (104L, "another novel document from the second micro batch", "en", "src0"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp_").toFile
+    val dir = new java.io.File(tempDir("graft_dpp_"))
+    val idx = new java.io.File(dir, "idx").toString
+    val gold = new java.io.File(dir, "gold").toString
+    val chk = new java.io.File(dir, "chk").toString
+    graft.analytics.TextOps.dedupIndexWrite(
+      graft.analytics.TextOps.bandIndexOf(history), idx)
+    val input = MemoryStream[(Long, String, String, String)](spark)
+    val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
+    val q = Pipeline.dedupProbePrunedToWarehouse(docs, idx, gold, chk,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     try {
-      val idx = new java.io.File(dir, "idx").toString
-      val gold = new java.io.File(dir, "gold").toString
-      val chk = new java.io.File(dir, "chk").toString
-      graft.analytics.TextOps.dedupIndexWrite(
-        graft.analytics.TextOps.bandIndexOf(history), idx)
-      val input = MemoryStream[(Long, String, String, String)](spark)
-      val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
-      val q = Pipeline.dedupProbePrunedToWarehouse(docs, idx, gold, chk,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      try {
-        input.addData(probeDocs.take(2))
-        q.processAllAvailable()
-        input.addData(probeDocs.drop(2))
-        q.processAllAvailable()
-      } finally q.stop()
-      def key(r: org.apache.spark.sql.Row) =
-        (r.getAs[Long]("doc_id"), r.getAs[Long]("is_dup"),
-          Option(r.get(r.fieldIndex("dup_of"))),
-          Option(r.get(r.fieldIndex("est_jaccard"))))
-      val got = graft.sinks.ManifestTable.read(spark, gold).collect()
-      // exactly one verdict row per probe doc, across both micro-batches
-      assert(got.length == probeDocs.length,
-        s"expected ${probeDocs.length} verdicts, got ${got.length}")
-      // the streaming lane must say exactly what the batch twin says
-      val want = graft.analytics.TextOps.probePrunedBatch(
-        probeDocs.toDF("doc_id", "text", "lang", "source"), idx).collect()
-      assert(got.map(key).toSet == want.map(key).toSet,
-        s"stream verdicts diverged:\n${got.map(key).toSet}\nvs\n${want.map(key).toSet}")
-      // semantic spot checks: the planted copies flag, the novels pass
-      val byId = got.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("is_dup")).toMap
-      assert(byId(100L) == 1L && byId(103L) == 1L)
-      assert(byId(101L) == 0L && byId(104L) == 0L)
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+      input.addData(probeDocs.take(2))
+      q.processAllAvailable()
+      input.addData(probeDocs.drop(2))
+      q.processAllAvailable()
+    } finally q.stop()
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getAs[Long]("doc_id"), r.getAs[Long]("is_dup"),
+        Option(r.get(r.fieldIndex("dup_of"))),
+        Option(r.get(r.fieldIndex("est_jaccard"))))
+    val got = graft.sinks.ManifestTable.read(spark, gold).collect()
+    // exactly one verdict row per probe doc, across both micro-batches
+    assert(got.length == probeDocs.length,
+      s"expected ${probeDocs.length} verdicts, got ${got.length}")
+    // the streaming lane must say exactly what the batch twin says
+    val want = graft.analytics.TextOps.probePrunedBatch(
+      probeDocs.toDF("doc_id", "text", "lang", "source"), idx).collect()
+    assert(got.map(key).toSet == want.map(key).toSet,
+      s"stream verdicts diverged:\n${got.map(key).toSet}\nvs\n${want.map(key).toSet}")
+    // semantic spot checks: the planted copies flag, the novels pass
+    val byId = got.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("is_dup")).toMap
+    assert(byId(100L) == 1L && byId(103L) == 1L)
+    assert(byId(101L) == 0L && byId(104L) == 0L)
   }
 
   test("probe-append stream: cross-batch duplicate flags against the APPENDED tranche") {
@@ -794,50 +792,48 @@ class StreamingSpec extends SparkSpec {
     val history = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again",
         "en", "src0")).toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpa_").toFile
+    val dir = new java.io.File(tempDir("graft_dpa_"))
+    val idx = new java.io.File(dir, "idx").toString
+    val gold = new java.io.File(dir, "gold").toString
+    val chk = new java.io.File(dir, "chk").toString
+    graft.analytics.TextOps.dedupIndexWrite(
+      graft.analytics.TextOps.bandIndexOf(history), idx)
+    val input = MemoryStream[(Long, String, String, String)](spark)
+    val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
+    val q = Pipeline.dedupProbeAppendToWarehouse(docs, idx, gold, chk,
+      Trigger.ProcessingTime(0))
     try {
-      val idx = new java.io.File(dir, "idx").toString
-      val gold = new java.io.File(dir, "gold").toString
-      val chk = new java.io.File(dir, "chk").toString
-      graft.analytics.TextOps.dedupIndexWrite(
-        graft.analytics.TextOps.bandIndexOf(history), idx)
-      val input = MemoryStream[(Long, String, String, String)](spark)
-      val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
-      val q = Pipeline.dedupProbeAppendToWarehouse(docs, idx, gold, chk,
-        Trigger.ProcessingTime(0))
-      try {
-        input.addData(
-          // novel: must be APPENDED
-          (100L, "a brand new never seen document about mountain weather",
-            "en", "src0"),
-          // dup of initial history
-          (101L, "the quick brown fox jumps over the lazy dog again and again",
-            "en", "src0"))
-        q.processAllAvailable()
-        input.addData(
-          // copy of batch-1's APPENDED doc 100 — the accretion claim
-          (200L, "a brand new never seen document about mountain weather",
-            "en", "src0"),
-          (201L, "yet another unrelated novel document entirely",
-            "en", "src0"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = graft.sinks.ManifestTable.read(spark, gold).collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          (r.getAs[Long]("is_dup"),
-            Option(r.get(r.fieldIndex("dup_of"))))).toMap
-      assert(got.size == 4, s"expected 4 verdicts, got $got")
-      assert(got(101L) == ((1L, Some(1L))), s"history dup missed: $got")
-      assert(got(100L) == ((0L, None)))
-      assert(got(201L) == ((0L, None)))
-      assert(got(200L) == ((1L, Some(100L))),
-        s"cross-batch duplicate did not flag against the appended " +
-          s"tranche: ${got(200L)}")
-      // only novel docs accreted
-      val idxIds = graft.sinks.ManifestTable.read(spark, idx)
-        .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
-      assert(idxIds == Set(1L, 100L, 201L), s"index accretion wrong: $idxIds")
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+      input.addData(
+        // novel: must be APPENDED
+        (100L, "a brand new never seen document about mountain weather",
+          "en", "src0"),
+        // dup of initial history
+        (101L, "the quick brown fox jumps over the lazy dog again and again",
+          "en", "src0"))
+      q.processAllAvailable()
+      input.addData(
+        // copy of batch-1's APPENDED doc 100 — the accretion claim
+        (200L, "a brand new never seen document about mountain weather",
+          "en", "src0"),
+        (201L, "yet another unrelated novel document entirely",
+          "en", "src0"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = graft.sinks.ManifestTable.read(spark, gold).collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Long]("is_dup"),
+          Option(r.get(r.fieldIndex("dup_of"))))).toMap
+    assert(got.size == 4, s"expected 4 verdicts, got $got")
+    assert(got(101L) == ((1L, Some(1L))), s"history dup missed: $got")
+    assert(got(100L) == ((0L, None)))
+    assert(got(201L) == ((0L, None)))
+    assert(got(200L) == ((1L, Some(100L))),
+      s"cross-batch duplicate did not flag against the appended " +
+        s"tranche: ${got(200L)}")
+    // only novel docs accreted
+    val idxIds = graft.sinks.ManifestTable.read(spark, idx)
+      .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
+    assert(idxIds == Set(1L, 100L, 201L), s"index accretion wrong: $idxIds")
   }
 
   test("probe-append stream: mid-stream kill, restart — verdicts exactly-once, index appended exactly once") {
@@ -845,125 +841,121 @@ class StreamingSpec extends SparkSpec {
     val history = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again",
         "en", "src0")).toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpak_").toFile
+    val dir = new java.io.File(tempDir("graft_dpak_"))
+    val idx = new java.io.File(dir, "idx").toString
+    val gold = new java.io.File(dir, "gold").toString
+    val chk = new java.io.File(dir, "chk").toString
+    graft.analytics.TextOps.dedupIndexWrite(
+      graft.analytics.TextOps.bandIndexOf(history), idx)
+    val input = MemoryStream[(Long, String, String, String)](spark)
+    val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
+    // mutually DISSIMILAR soak docs (mostly per-doc tokens): sharing
+    // only 2 of ~9 tokens keeps true Jaccard ~0.2, far under the
+    // 0.75 threshold, so accreted soak docs never flag each other
+    def doc(i: Long) =
+      (i, s"soak document alpha$i beta$i gamma$i delta$i epsilon$i " +
+        s"zeta$i eta$i", "en", "src0")
+    // continuous trigger, feed while running, kill mid-stream;
+    // relay DISABLED so the exactly-once-append assertion below
+    // cannot be masked by a compaction's duplicate squeeze
+    val q1 = Pipeline.dedupProbeAppendToWarehouse(docs, idx, gold, chk,
+      Trigger.ProcessingTime("50 milliseconds"), relayDepth = 0)
     try {
-      val idx = new java.io.File(dir, "idx").toString
-      val gold = new java.io.File(dir, "gold").toString
-      val chk = new java.io.File(dir, "chk").toString
-      graft.analytics.TextOps.dedupIndexWrite(
-        graft.analytics.TextOps.bandIndexOf(history), idx)
-      val input = MemoryStream[(Long, String, String, String)](spark)
-      val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
-      // mutually DISSIMILAR soak docs (mostly per-doc tokens): sharing
-      // only 2 of ~9 tokens keeps true Jaccard ~0.2, far under the
-      // 0.75 threshold, so accreted soak docs never flag each other
-      def doc(i: Long) =
-        (i, s"soak document alpha$i beta$i gamma$i delta$i epsilon$i " +
-          s"zeta$i eta$i", "en", "src0")
-      // continuous trigger, feed while running, kill mid-stream;
-      // relay DISABLED so the exactly-once-append assertion below
-      // cannot be masked by a compaction's duplicate squeeze
-      val q1 = Pipeline.dedupProbeAppendToWarehouse(docs, idx, gold, chk,
-        Trigger.ProcessingTime("50 milliseconds"), relayDepth = 0)
-      try {
-        val deadline = System.currentTimeMillis() + 30000
-        var fed = 0L
-        while (fed < 12 && System.currentTimeMillis() < deadline) {
-          input.addData(doc(100 + fed), doc(100 + fed + 1))
-          fed += 2
-          Thread.sleep(120)
-        }
-        assert(fed == 12, "feeder starved")
-        while (graft.sinks.ManifestTable.latestVersion(spark, gold).isEmpty &&
-               System.currentTimeMillis() < deadline) Thread.sleep(50)
-      } finally q1.stop()
-      q1.awaitTermination()
-      // dup of a doc appended BEFORE the kill + one more novel, then
-      // restart from the same checkpoint and drain
-      val d100 = doc(100)
-      input.addData((300L, d100._2, d100._3, d100._4), doc(301))
-      val q2 = Pipeline.dedupProbeAppendToWarehouse(docs, idx, gold, chk,
-        relayDepth = 0)
-      q2.awaitTermination()
-      val gotRows = graft.sinks.ManifestTable.read(spark, gold).collect()
-      // exactly one verdict per doc across the kill/restart
-      assert(gotRows.length == 14,
-        s"exactly-once violated: ${gotRows.length} verdicts for 14 docs")
-      val got = gotRows.map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[Long]("is_dup"),
-          Option(r.get(r.fieldIndex("dup_of"))))).toMap
-      assert(got(300L) == ((1L, Some(100L))),
-        s"post-restart dup must flag against the pre-kill appended " +
-          s"tranche: ${got(300L)}")
-      assert((100L to 111L).forall(i => got(i) == ((0L, None))), s"$got")
-      assert(got(301L) == ((0L, None)))
-      // the index holds each appended doc EXACTLY once (no replayed
-      // double-append): every doc_id has exactly one row per band
-      val bandCounts = graft.sinks.ManifestTable.read(spark, idx)
-        .groupBy(col("doc_id"), col("band")).count()
-        .filter(col("count") > 1).count()
-      assert(bandCounts == 0,
-        "a replayed micro-batch double-appended into the index")
-      val idxIds = graft.sinks.ManifestTable.read(spark, idx)
-        .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
-      assert(idxIds == ((100L to 111L).toSet + 1L + 301L),
-        s"index accretion wrong after kill/restart: $idxIds")
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+      val deadline = System.currentTimeMillis() + 30000
+      var fed = 0L
+      while (fed < 12 && System.currentTimeMillis() < deadline) {
+        input.addData(doc(100 + fed), doc(100 + fed + 1))
+        fed += 2
+        Thread.sleep(120)
+      }
+      assert(fed == 12, "feeder starved")
+      while (graft.sinks.ManifestTable.latestVersion(spark, gold).isEmpty &&
+             System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally q1.stop()
+    q1.awaitTermination()
+    // dup of a doc appended BEFORE the kill + one more novel, then
+    // restart from the same checkpoint and drain
+    val d100 = doc(100)
+    input.addData((300L, d100._2, d100._3, d100._4), doc(301))
+    val q2 = Pipeline.dedupProbeAppendToWarehouse(docs, idx, gold, chk,
+      relayDepth = 0)
+    q2.awaitTermination()
+    val gotRows = graft.sinks.ManifestTable.read(spark, gold).collect()
+    // exactly one verdict per doc across the kill/restart
+    assert(gotRows.length == 14,
+      s"exactly-once violated: ${gotRows.length} verdicts for 14 docs")
+    val got = gotRows.map(r => r.getAs[Long]("doc_id") ->
+      (r.getAs[Long]("is_dup"),
+        Option(r.get(r.fieldIndex("dup_of"))))).toMap
+    assert(got(300L) == ((1L, Some(100L))),
+      s"post-restart dup must flag against the pre-kill appended " +
+        s"tranche: ${got(300L)}")
+    assert((100L to 111L).forall(i => got(i) == ((0L, None))), s"$got")
+    assert(got(301L) == ((0L, None)))
+    // the index holds each appended doc EXACTLY once (no replayed
+    // double-append): every doc_id has exactly one row per band
+    val bandCounts = graft.sinks.ManifestTable.read(spark, idx)
+      .groupBy(col("doc_id"), col("band")).count()
+      .filter(col("count") > 1).count()
+    assert(bandCounts == 0,
+      "a replayed micro-batch double-appended into the index")
+    val idxIds = graft.sinks.ManifestTable.read(spark, idx)
+      .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
+    assert(idxIds == ((100L to 111L).toSet + 1L + 301L),
+      s"index accretion wrong after kill/restart: $idxIds")
   }
 
   test("maintained-gold stream: mid-stream kill, restart — gold equals the recompute, ticks exactly-once") {
     import spark.implicits._
     import graft.sinks.ManifestTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_mgs_").toFile
+    val dir = new java.io.File(tempDir("graft_mgs_"))
+    val src = new java.io.File(dir, "src").toString
+    val gold = new java.io.File(dir, "gold").toString
+    val chk = new java.io.File(dir, "chk").toString
+    val input = MemoryStream[(Long, String, Long)](spark)
+    val facts = input.toDF().toDF("k", "g", "s")
+    def start(trigger: Trigger) = Pipeline.factsToMaintainedGold(
+      facts, src, gold, chk, Seq("k"), "k", Seq("g"), Seq("s"), "n",
+      trigger)
+    // continuous trigger; feed three batches — inserts, more
+    // inserts, then an UPDATE of key 1 — and kill mid-stream
+    val q1 = start(Trigger.ProcessingTime("50 milliseconds"))
     try {
-      val src = new java.io.File(dir, "src").toString
-      val gold = new java.io.File(dir, "gold").toString
-      val chk = new java.io.File(dir, "chk").toString
-      val input = MemoryStream[(Long, String, Long)](spark)
-      val facts = input.toDF().toDF("k", "g", "s")
-      def start(trigger: Trigger) = Pipeline.factsToMaintainedGold(
-        facts, src, gold, chk, Seq("k"), "k", Seq("g"), Seq("s"), "n",
-        trigger)
-      // continuous trigger; feed three batches — inserts, more
-      // inserts, then an UPDATE of key 1 — and kill mid-stream
-      val q1 = start(Trigger.ProcessingTime("50 milliseconds"))
-      try {
-        val deadline = System.currentTimeMillis() + 60000
-        input.addData((1L, "x", 10L), (2L, "y", 5L))
-        // wait for the first tick BEFORE feeding the k=1 update: the
-        // lane requires key-unique rows per micro-batch, and a slow
-        // query start could otherwise fold both k=1 rows into batch 0
-        while (ManifestTable.latestVersion(spark, gold).isEmpty &&
-               System.currentTimeMillis() < deadline) Thread.sleep(50)
-        assert(ManifestTable.latestVersion(spark, gold).isDefined,
-          "gold never ticked before the kill")
-        input.addData((11L, "x", 1L), (12L, "y", 2L))
-        input.addData((1L, "x", 99L)) // key-replace, not a new row
-      } finally q1.stop()
-      q1.awaitTermination()
-      // post-kill: a new group and an update of key 2; restart from
-      // the same checkpoint and drain (replays any in-flight batch)
-      input.addData((3L, "z", 7L), (2L, "y", 50L))
-      val q2 = start(Trigger.AvailableNow())
-      q2.awaitTermination()
-      // source content: every key exactly once, updates won
-      val srcRows = ManifestTable.read(spark, src).collect()
-        .map(r => r.getAs[Long]("k") ->
-          (r.getAs[String]("g"), r.getAs[Long]("s"))).toMap
-      assert(srcRows == Map(1L -> ("x", 99L), 2L -> ("y", 50L),
-        11L -> ("x", 1L), 12L -> ("y", 2L), 3L -> ("z", 7L)),
-        s"source diverged across the kill/restart: $srcRows")
-      // gold equals the full recompute of the final source state
-      val goldRows = ManifestTable.read(spark, gold).collect()
-        .map(r => (r.getAs[String]("g"), r.getAs[Long]("s"),
-          r.getAs[Long]("n"))).toSet
-      assert(goldRows == Set(("x", 100L, 2L), ("y", 52L, 2L),
-        ("z", 7L, 1L)),
-        s"maintained gold diverged from the recompute: $goldRows")
-      // the watermark caught up to the source's latest version
-      assert(graft.sinks.Sinks.appliedVersion(spark, gold) ==
-        ManifestTable.latestVersion(spark, src))
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+      val deadline = System.currentTimeMillis() + 60000
+      input.addData((1L, "x", 10L), (2L, "y", 5L))
+      // wait for the first tick BEFORE feeding the k=1 update: the
+      // lane requires key-unique rows per micro-batch, and a slow
+      // query start could otherwise fold both k=1 rows into batch 0
+      while (ManifestTable.latestVersion(spark, gold).isEmpty &&
+             System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(ManifestTable.latestVersion(spark, gold).isDefined,
+        "gold never ticked before the kill")
+      input.addData((11L, "x", 1L), (12L, "y", 2L))
+      input.addData((1L, "x", 99L)) // key-replace, not a new row
+    } finally q1.stop()
+    q1.awaitTermination()
+    // post-kill: a new group and an update of key 2; restart from
+    // the same checkpoint and drain (replays any in-flight batch)
+    input.addData((3L, "z", 7L), (2L, "y", 50L))
+    val q2 = start(Trigger.AvailableNow())
+    q2.awaitTermination()
+    // source content: every key exactly once, updates won
+    val srcRows = ManifestTable.read(spark, src).collect()
+      .map(r => r.getAs[Long]("k") ->
+        (r.getAs[String]("g"), r.getAs[Long]("s"))).toMap
+    assert(srcRows == Map(1L -> ("x", 99L), 2L -> ("y", 50L),
+      11L -> ("x", 1L), 12L -> ("y", 2L), 3L -> ("z", 7L)),
+      s"source diverged across the kill/restart: $srcRows")
+    // gold equals the full recompute of the final source state
+    val goldRows = ManifestTable.read(spark, gold).collect()
+      .map(r => (r.getAs[String]("g"), r.getAs[Long]("s"),
+        r.getAs[Long]("n"))).toSet
+    assert(goldRows == Set(("x", 100L, 2L), ("y", 52L, 2L),
+      ("z", 7L, 1L)),
+      s"maintained gold diverged from the recompute: $goldRows")
+    // the watermark caught up to the source's latest version
+    assert(graft.sinks.Sinks.appliedVersion(spark, gold) ==
+      ManifestTable.latestVersion(spark, src))
   }
 
   test("rate-paced replay emits the bounded frame's rows progressively in order") {
@@ -1095,7 +1087,7 @@ class StreamingSpec extends SparkSpec {
       }
     }
     // batch 1: the initial load — the whole snapshot as inserts,
-    // timestamps decoded through the row-at-a-time parquet path
+    // timestamps intact through the feed's parquet scan
     val load = drain(s"$dir/chk", "src_run1")
     assert(load.count() == 100)
     assert(load.filter(col("_change_type") =!= "insert").count() == 0)

@@ -554,7 +554,7 @@ class TextOpsSpec extends SparkSpec {
     // doc 1 = tokens 0..99, doc 2 = tokens 50..149 -> J = 50/150 = 1/3
     val d1 = (0 until 100).map(i => s"t$i").mkString(" ")
     val d2 = (50 until 150).map(i => s"t$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh").toString
+    val dir = tempDir("graft_mh")
     Seq((1L, d1, "en", "s0"), (2L, d2, "en", "s0"))
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
@@ -577,7 +577,7 @@ class TextOpsSpec extends SparkSpec {
     val shared = (0 until 12).map(i => s"common$i").mkString(" ")
     val d1 = s"alpha beta gamma $shared delta"
     val d2 = s"omega psi $shared chi phi rho"
-    val dir = java.nio.file.Files.createTempDirectory("graft_win").toString
+    val dir = tempDir("graft_win")
     Seq((1L, d1, "en", "s0"), (2L, d2, "en", "s0"))
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
@@ -683,7 +683,7 @@ class TextOpsSpec extends SparkSpec {
     val shared = (0 until 8).map(i => s"dup$i").mkString(" ")
     val uniqA = (0 until 8).map(i => s"ua$i").mkString(" ")
     val uniqB = (0 until 8).map(i => s"ub$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_chunk").toString
+    val dir = tempDir("graft_chunk")
     val selfRep = (0 until 8).map(i => s"rep$i").mkString(" ")
     Seq(
       (1L, s"$shared $uniqA", "en", "s0"), // chunks: [shared, uniqA]
@@ -848,7 +848,7 @@ class TextOpsSpec extends SparkSpec {
       (3L, "z z z z"),                   // dl=4, no query terms
       (4L, "merge hash merge merge a b") // dl=6, tf: merge 3, hash 1
     )
-    val dir = java.nio.file.Files.createTempDirectory("bm25").toString
+    val dir = tempDir("bm25")
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -935,7 +935,7 @@ class TextOpsSpec extends SparkSpec {
       docs += ((id,
         rng.shuffle(vocab).take(2 + rng.nextInt(30)).mkString(" ")))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_pj").toString
+    val dir = tempDir("graft_pj")
     docs.toSeq.map { case (i, t) => (i, t, "en", "s0") }
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
@@ -1073,27 +1073,25 @@ class TextOpsSpec extends SparkSpec {
     // a 3-doc probe (<= 24 band-bucket keys) must hit well under half
     // of the 32 file envelopes; a conservative regression (stats lost,
     // layout collapsed) shows up here as kept == total.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpf_").toFile
-    try {
-      val path = new java.io.File(dir, "idx").toString
-      val docs = graft.ingest.Sources.documents(spark, sf)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      TextOps.dedupIndexWrite(TextOps.bandIndexOf(docs), path)
-      val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
-      val (kept, total) = TextOps.dedupPrunedFiles(spark, path, probe)
-      assert(total == TextOps.DedupIndexFiles,
-        s"index layout collapsed: $total files")
-      assert(kept.nonEmpty, "probe of indexed docs cannot skip everything")
-      assert(kept.size <= total / 2,
-        s"no real skipping: ${kept.size} of $total files kept")
-      // skipped files really don't matter: the kept set contains every
-      // file holding the probe's own (band, bucket) rows
-      val keptRows = graft.sinks.ManifestTable.readFiles(spark, path, kept)
-      val missing = probe.select(col("band"), col("bucket")).distinct()
-        .join(keptRows.select(col("band"), col("bucket")).distinct(),
-          Seq("band", "bucket"), "left_anti").count()
-      assert(missing == 0, s"$missing probe buckets absent from kept files")
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+    val dir = new java.io.File(tempDir("graft_dpf_"))
+    val path = new java.io.File(dir, "idx").toString
+    val docs = graft.ingest.Sources.documents(spark, sf)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    TextOps.dedupIndexWrite(TextOps.bandIndexOf(docs), path)
+    val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
+    val (kept, total) = TextOps.dedupPrunedFiles(spark, path, probe)
+    assert(total == TextOps.DedupIndexFiles,
+      s"index layout collapsed: $total files")
+    assert(kept.nonEmpty, "probe of indexed docs cannot skip everything")
+    assert(kept.size <= total / 2,
+      s"no real skipping: ${kept.size} of $total files kept")
+    // skipped files really don't matter: the kept set contains every
+    // file holding the probe's own (band, bucket) rows
+    val keptRows = graft.sinks.ManifestTable.readFiles(spark, path, kept)
+    val missing = probe.select(col("band"), col("bucket")).distinct()
+      .join(keptRows.select(col("band"), col("bucket")).distinct(),
+        Seq("band", "bucket"), "left_anti").count()
+    assert(missing == 0, s"$missing probe buckets absent from kept files")
   }
 
   test("appended serving index: identical verdicts through overlapping envelopes") {
@@ -1114,32 +1112,30 @@ class TextOpsSpec extends SparkSpec {
     // overlapping envelopes (else this spec exercises nothing the
     // pruned spec doesn't), and the prune stays conservative through
     // them — every probe bucket is present in the kept files
-    val dir = java.nio.file.Files.createTempDirectory("graft_dapp_").toFile
-    try {
-      val path = new java.io.File(dir, "idx").toString
-      val docs = graft.ingest.Sources.documents(spark, sf)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      val hist = TextOps.bandIndexOf(docs)
-      TextOps.dedupIndexWrite(hist.filter(col("doc_id") % 2 === 0), path)
-      TextOps.dedupIndexAppend(hist.filter(col("doc_id") % 2 =!= 0), path)
-      val stats = graft.sinks.ManifestTable.snapshotStats(spark, path)
-        .flatMap { case (_, st) => st.get("bkey") }.sortBy(_._1)
-      val overlaps = stats.sliding(2).count {
-        case Seq((_, aMax), (bMin, _)) => bMin <= aMax
-        case _ => false
-      }
-      assert(overlaps > 0,
-        "append produced a globally range-laid index — the overlap path is untested")
-      val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
-      val (kept, total) = TextOps.dedupPrunedFiles(spark, path, probe)
-      assert(kept.nonEmpty && kept.size < total,
-        s"prune did nothing through overlap: ${kept.size} of $total")
-      val keptRows = graft.sinks.ManifestTable.readFiles(spark, path, kept)
-      val missing = probe.select(col("band"), col("bucket")).distinct()
-        .join(keptRows.select(col("band"), col("bucket")).distinct(),
-          Seq("band", "bucket"), "left_anti").count()
-      assert(missing == 0, s"$missing probe buckets absent from kept files")
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+    val dir = new java.io.File(tempDir("graft_dapp_"))
+    val path = new java.io.File(dir, "idx").toString
+    val docs = graft.ingest.Sources.documents(spark, sf)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    val hist = TextOps.bandIndexOf(docs)
+    TextOps.dedupIndexWrite(hist.filter(col("doc_id") % 2 === 0), path)
+    TextOps.dedupIndexAppend(hist.filter(col("doc_id") % 2 =!= 0), path)
+    val stats = graft.sinks.ManifestTable.snapshotStats(spark, path)
+      .flatMap { case (_, st) => st.get("bkey") }.sortBy(_._1)
+    val overlaps = stats.sliding(2).count {
+      case Seq((_, aMax), (bMin, _)) => bMin <= aMax
+      case _ => false
+    }
+    assert(overlaps > 0,
+      "append produced a globally range-laid index — the overlap path is untested")
+    val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
+    val (kept, total) = TextOps.dedupPrunedFiles(spark, path, probe)
+    assert(kept.nonEmpty && kept.size < total,
+      s"prune did nothing through overlap: ${kept.size} of $total")
+    val keptRows = graft.sinks.ManifestTable.readFiles(spark, path, kept)
+    val missing = probe.select(col("band"), col("bucket")).distinct()
+      .join(keptRows.select(col("band"), col("bucket")).distinct(),
+        Seq("band", "bucket"), "left_anti").count()
+    assert(missing == 0, s"$missing probe buckets absent from kept files")
   }
 
   test("pruned file set follows the snapshot version (envelope-cache invalidation)") {
@@ -1149,27 +1145,25 @@ class TextOpsSpec extends SparkSpec {
     // replace the index under the same path and the prune must see the
     // new version's files (names change with the staging token, so any
     // old-version name in the kept set is a stale cache)
-    val dir = java.nio.file.Files.createTempDirectory("graft_envinv_").toFile
-    try {
-      val path = new java.io.File(dir, "idx").toString
-      val docs = graft.ingest.Sources.documents(spark, sf)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      TextOps.dedupIndexWrite(TextOps.bandIndexOf(docs), path)
-      val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
-      val (kept1, total1) = TextOps.dedupPrunedFiles(spark, path, probe)
-      val v1Files = graft.sinks.ManifestTable.snapshotFiles(spark, path).toSet
-      assert(kept1.forall(v1Files), "kept names must come from v1's manifest")
-      // commit a NEW snapshot (half the docs) at the same path
-      TextOps.dedupIndexWrite(
-        TextOps.bandIndexOf(docs.filter(col("doc_id") % 2 === 0)), path)
-      val v2Files = graft.sinks.ManifestTable.snapshotFiles(spark, path).toSet
-      assert((v1Files & v2Files).isEmpty, "staging tokens must differ")
-      val (kept2, total2) = TextOps.dedupPrunedFiles(spark, path, probe)
-      assert(total1 == TextOps.DedupIndexFiles && total2 == TextOps.DedupIndexFiles)
-      assert(kept2.nonEmpty && kept2.forall(v2Files),
-        s"stale envelope cache: kept names not from the new snapshot " +
-          s"(${kept2.filterNot(v2Files).take(3)})")
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+    val dir = new java.io.File(tempDir("graft_envinv_"))
+    val path = new java.io.File(dir, "idx").toString
+    val docs = graft.ingest.Sources.documents(spark, sf)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    TextOps.dedupIndexWrite(TextOps.bandIndexOf(docs), path)
+    val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
+    val (kept1, total1) = TextOps.dedupPrunedFiles(spark, path, probe)
+    val v1Files = graft.sinks.ManifestTable.snapshotFiles(spark, path).toSet
+    assert(kept1.forall(v1Files), "kept names must come from v1's manifest")
+    // commit a NEW snapshot (half the docs) at the same path
+    TextOps.dedupIndexWrite(
+      TextOps.bandIndexOf(docs.filter(col("doc_id") % 2 === 0)), path)
+    val v2Files = graft.sinks.ManifestTable.snapshotFiles(spark, path).toSet
+    assert((v1Files & v2Files).isEmpty, "staging tokens must differ")
+    val (kept2, total2) = TextOps.dedupPrunedFiles(spark, path, probe)
+    assert(total1 == TextOps.DedupIndexFiles && total2 == TextOps.DedupIndexFiles)
+    assert(kept2.nonEmpty && kept2.forall(v2Files),
+      s"stale envelope cache: kept names not from the new snapshot " +
+        s"(${kept2.filterNot(v2Files).take(3)})")
   }
 
   test("envelope cache keys on manifest IDENTITY: a recreated index at the same path is re-read") {
@@ -1178,142 +1172,136 @@ class TextOpsSpec extends SparkSpec {
     // version-only cache key would serve the OLD table's envelopes —
     // and a probe falling outside them silently reports zero
     // duplicates. The fix keys on (version, manifest length, mtime).
-    val dir = java.nio.file.Files.createTempDirectory("graft_envid_").toFile
-    try {
-      val path = new java.io.File(dir, "idx").toString
-      val docs = graft.ingest.Sources.documents(spark, sf)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      TextOps.dedupIndexWrite(TextOps.bandIndexOf(docs), path)
-      val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
-      TextOps.dedupPrunedFiles(spark, path, probe): Unit // cache v0
-      assert(graft.sinks.ManifestTable.latestVersion(spark, path)
-        .contains(0L))
-      // delete and RECREATE at the same path: version 0 again, new files
-      graft.sinks.Sinks.deleteRecursively(new java.io.File(path))
-      TextOps.dedupIndexWrite(
-        TextOps.bandIndexOf(docs.filter(col("doc_id") % 2 === 0)), path)
-      assert(graft.sinks.ManifestTable.latestVersion(spark, path)
-        .contains(0L), "fixture: recreation must restart at version 0")
-      val newFiles = graft.sinks.ManifestTable.snapshotFiles(spark, path).toSet
-      val (kept, _) = TextOps.dedupPrunedFiles(spark, path, probe)
-      assert(kept.nonEmpty && kept.forall(newFiles),
-        s"stale envelope cache across a same-path recreation: " +
-          s"${kept.filterNot(newFiles).take(3)}")
-      // and the full probe still answers correctly against the new table
-      val verdict = TextOps.probePrunedBatch(
-        docs.orderBy(col("doc_id")).limit(3), path).collect()
-      assert(verdict.length == 3)
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+    val dir = new java.io.File(tempDir("graft_envid_"))
+    val path = new java.io.File(dir, "idx").toString
+    val docs = graft.ingest.Sources.documents(spark, sf)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    TextOps.dedupIndexWrite(TextOps.bandIndexOf(docs), path)
+    val probe = TextOps.bandIndexOf(docs.orderBy(col("doc_id")).limit(3))
+    TextOps.dedupPrunedFiles(spark, path, probe): Unit // cache v0
+    assert(graft.sinks.ManifestTable.latestVersion(spark, path)
+      .contains(0L))
+    // delete and RECREATE at the same path: version 0 again, new files
+    graft.sinks.Sinks.deleteRecursively(new java.io.File(path))
+    TextOps.dedupIndexWrite(
+      TextOps.bandIndexOf(docs.filter(col("doc_id") % 2 === 0)), path)
+    assert(graft.sinks.ManifestTable.latestVersion(spark, path)
+      .contains(0L), "fixture: recreation must restart at version 0")
+    val newFiles = graft.sinks.ManifestTable.snapshotFiles(spark, path).toSet
+    val (kept, _) = TextOps.dedupPrunedFiles(spark, path, probe)
+    assert(kept.nonEmpty && kept.forall(newFiles),
+      s"stale envelope cache across a same-path recreation: " +
+        s"${kept.filterNot(newFiles).take(3)}")
+    // and the full probe still answers correctly against the new table
+    val verdict = TextOps.probePrunedBatch(
+      docs.orderBy(col("doc_id")).limit(3), path).collect()
+    assert(verdict.length == 3)
   }
 
   test("append re-lay trigger: overlap depth past the threshold compacts, verdicts invariant") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_relay_").toFile
-    try {
-      val path = new java.io.File(dir, "idx").toString
-      val spark2 = spark
-      import spark2.implicits._
-      val docs = graft.ingest.Sources.documents(spark, sf)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      val isBatch = graft.operators.Scale.isBatch(col("doc_id"))
-      val hist = TextOps.bandIndexOf(docs.filter(!isBatch))
-        .localCheckpoint(true)
-      val batch = docs.filter(isBatch)
-      // fresh write: depth is the range-laid floor (1–2: inclusive
-      // endpoints of adjacent envelopes may touch)
-      TextOps.dedupIndexWrite(hist.filter(col("doc_id") % 4 === 0), path)
-      val floor = TextOps.dedupIndexOverlapDepth(spark, path)
-      assert(floor <= 2, s"range-laid depth should be ~1, got $floor")
-      // three appends with the trigger DISABLED (relayDepth=0): each
-      // tranche tiles the key space once more — depth grows
-      (1 to 3).foreach { i =>
-        TextOps.dedupIndexAppend(hist.filter(col("doc_id") % 4 === i),
-          path, files = 4, relayDepth = 0): Unit
-      }
-      val grown = TextOps.dedupIndexOverlapDepth(spark, path)
-      assert(grown > floor && grown >= 3,
-        s"appends should stack envelope depth, got $grown (floor $floor)")
-      val verdictBefore = TextOps.probePrunedBatch(batch, path).collect()
-        .map(_.toString).sorted.toSeq
-      // one more append WITH a threshold the snapshot already exceeds:
-      // the trigger must re-lay the whole index in the same call (the
-      // sentinel doc's unique tokens cannot collide with any probe)
-      val extra = TextOps.bandIndexOf(Seq(
-        (999999L, "zzq unique relay trigger sentinel wwx yyv qqj",
-          "en", "srcZ")).toDF("doc_id", "text", "lang", "source"))
-      TextOps.dedupIndexAppend(extra, path, files = 1,
-        relayDepth = 2): Unit
-      val relaid = TextOps.dedupIndexOverlapDepth(spark, path)
-      assert(relaid <= 2,
-        s"re-lay should restore the range-laid floor, got $relaid")
-      assert(graft.sinks.ManifestTable.snapshotFiles(spark, path).size ==
-        TextOps.DedupIndexFiles,
-        "re-lay should produce the full write layout")
-      // physical-only: the probe answers identically pre/post re-lay
-      val verdictAfter = TextOps.probePrunedBatch(batch, path).collect()
-        .map(_.toString).sorted.toSeq
-      assert(verdictAfter == verdictBefore,
-        "compaction changed verdicts — re-lay must be physically invisible")
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+    val dir = new java.io.File(tempDir("graft_relay_"))
+    val path = new java.io.File(dir, "idx").toString
+    val spark2 = spark
+    import spark2.implicits._
+    val docs = graft.ingest.Sources.documents(spark, sf)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    val isBatch = graft.operators.Scale.isBatch(col("doc_id"))
+    val hist = TextOps.bandIndexOf(docs.filter(!isBatch))
+      .localCheckpoint(true)
+    val batch = docs.filter(isBatch)
+    // fresh write: depth is the range-laid floor (1–2: inclusive
+    // endpoints of adjacent envelopes may touch)
+    TextOps.dedupIndexWrite(hist.filter(col("doc_id") % 4 === 0), path)
+    val floor = TextOps.dedupIndexOverlapDepth(spark, path)
+    assert(floor <= 2, s"range-laid depth should be ~1, got $floor")
+    // three appends with the trigger DISABLED (relayDepth=0): each
+    // tranche tiles the key space once more — depth grows
+    (1 to 3).foreach { i =>
+      TextOps.dedupIndexAppend(hist.filter(col("doc_id") % 4 === i),
+        path, files = 4, relayDepth = 0): Unit
+    }
+    val grown = TextOps.dedupIndexOverlapDepth(spark, path)
+    assert(grown > floor && grown >= 3,
+      s"appends should stack envelope depth, got $grown (floor $floor)")
+    val verdictBefore = TextOps.probePrunedBatch(batch, path).collect()
+      .map(_.toString).sorted.toSeq
+    // one more append WITH a threshold the snapshot already exceeds:
+    // the trigger must re-lay the whole index in the same call (the
+    // sentinel doc's unique tokens cannot collide with any probe)
+    val extra = TextOps.bandIndexOf(Seq(
+      (999999L, "zzq unique relay trigger sentinel wwx yyv qqj",
+        "en", "srcZ")).toDF("doc_id", "text", "lang", "source"))
+    TextOps.dedupIndexAppend(extra, path, files = 1,
+      relayDepth = 2): Unit
+    val relaid = TextOps.dedupIndexOverlapDepth(spark, path)
+    assert(relaid <= 2,
+      s"re-lay should restore the range-laid floor, got $relaid")
+    assert(graft.sinks.ManifestTable.snapshotFiles(spark, path).size ==
+      TextOps.DedupIndexFiles,
+      "re-lay should produce the full write layout")
+    // physical-only: the probe answers identically pre/post re-lay
+    val verdictAfter = TextOps.probePrunedBatch(batch, path).collect()
+      .map(_.toString).sorted.toSeq
+    assert(verdictAfter == verdictBefore,
+      "compaction changed verdicts — re-lay must be physically invisible")
   }
 
   test("probeAppendBatch: accretes novel docs; a crash-replay computes the identical verdict and appends nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pab_").toFile
-    try {
-      val path = new java.io.File(dir, "idx").toString
-      val spark2 = spark
-      import spark2.implicits._
-      val history = Seq(
-        (1L, "the quick brown fox jumps over the lazy dog again and again",
-          "en", "src0"),
-        (2L, "completely different historical content about rivers and sensors",
-          "en", "src0")).toDF("doc_id", "text", "lang", "source")
-      TextOps.dedupIndexWrite(TextOps.bandIndexOf(history), path)
-      val batch = Seq(
-        // dup of history doc 1
-        (100L, "the quick brown fox jumps over the lazy dog again and again",
-          "en", "src0"),
-        // novel
-        (101L, "entirely novel text that matches nothing in the history",
-          "en", "src0"),
-        // within-batch copy of the novel doc: judged against HISTORY
-        // only, so it passes clean this batch and both land in the index
-        (102L, "entirely novel text that matches nothing in the history",
-          "en", "src0")).toDF("doc_id", "text", "lang", "source")
-      def key(r: org.apache.spark.sql.Row) =
-        (r.getLong(0), r.getLong(1),
-          Option(r.get(r.fieldIndex("dup_of"))),
-          Option(r.get(r.fieldIndex("est_jaccard"))))
-      val v1 = TextOps.probeAppendBatch(batch, path, txnId = "b0")
-        .collect().map(key).toSet
-      assert(v1 == Set(
-        (100L, 1L, Some(1L), Some(1.0)),
-        (101L, 0L, None, None),
-        (102L, 0L, None, None)), s"first-run verdict wrong: $v1")
-      // the novel docs (and ONLY they) accreted into the index
-      val idxIds = graft.sinks.ManifestTable.read(spark, path)
-        .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
-      assert(idxIds == Set(1L, 2L, 101L, 102L),
-        s"index accretion wrong: $idxIds")
-      val versionsAfter = graft.sinks.ManifestTable.versions(spark, path)
-      // CRASH-REPLAY: same batch, same txnId, index already appended.
-      // The verdict must be IDENTICAL (batch's own ids are excluded
-      // from the history side — no self-matches, no within-batch
-      // matches through the half-committed tranche) and the append a
-      // detected no-op.
-      val v2 = TextOps.probeAppendBatch(batch, path, txnId = "b0")
-        .collect().map(key).toSet
-      assert(v2 == v1, s"replay verdict diverged:\n$v2\nvs\n$v1")
-      assert(graft.sinks.ManifestTable.versions(spark, path) == versionsAfter,
-        "replay re-appended — txn marker not honored")
-      // a NEXT batch flags against the appended tranche
-      val next = Seq(
-        (200L, "entirely novel text that matches nothing in the history",
-          "en", "src0")).toDF("doc_id", "text", "lang", "source")
-      val v3 = TextOps.probeAppendBatch(next, path, txnId = "b1")
-        .collect().map(key).toSet
-      assert(v3 == Set((200L, 1L, Some(101L), Some(1.0))),
-        s"cross-batch accretion failed: $v3")
-    } finally graft.sinks.Sinks.deleteRecursively(dir)
+    val dir = new java.io.File(tempDir("graft_pab_"))
+    val path = new java.io.File(dir, "idx").toString
+    val spark2 = spark
+    import spark2.implicits._
+    val history = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again",
+        "en", "src0"),
+      (2L, "completely different historical content about rivers and sensors",
+        "en", "src0")).toDF("doc_id", "text", "lang", "source")
+    TextOps.dedupIndexWrite(TextOps.bandIndexOf(history), path)
+    val batch = Seq(
+      // dup of history doc 1
+      (100L, "the quick brown fox jumps over the lazy dog again and again",
+        "en", "src0"),
+      // novel
+      (101L, "entirely novel text that matches nothing in the history",
+        "en", "src0"),
+      // within-batch copy of the novel doc: judged against HISTORY
+      // only, so it passes clean this batch and both land in the index
+      (102L, "entirely novel text that matches nothing in the history",
+        "en", "src0")).toDF("doc_id", "text", "lang", "source")
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1),
+        Option(r.get(r.fieldIndex("dup_of"))),
+        Option(r.get(r.fieldIndex("est_jaccard"))))
+    val v1 = TextOps.probeAppendBatch(batch, path, txnId = "b0")
+      .collect().map(key).toSet
+    assert(v1 == Set(
+      (100L, 1L, Some(1L), Some(1.0)),
+      (101L, 0L, None, None),
+      (102L, 0L, None, None)), s"first-run verdict wrong: $v1")
+    // the novel docs (and ONLY they) accreted into the index
+    val idxIds = graft.sinks.ManifestTable.read(spark, path)
+      .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
+    assert(idxIds == Set(1L, 2L, 101L, 102L),
+      s"index accretion wrong: $idxIds")
+    val versionsAfter = graft.sinks.ManifestTable.versions(spark, path)
+    // CRASH-REPLAY: same batch, same txnId, index already appended.
+    // The verdict must be IDENTICAL (batch's own ids are excluded
+    // from the history side — no self-matches, no within-batch
+    // matches through the half-committed tranche) and the append a
+    // detected no-op.
+    val v2 = TextOps.probeAppendBatch(batch, path, txnId = "b0")
+      .collect().map(key).toSet
+    assert(v2 == v1, s"replay verdict diverged:\n$v2\nvs\n$v1")
+    assert(graft.sinks.ManifestTable.versions(spark, path) == versionsAfter,
+      "replay re-appended — txn marker not honored")
+    // a NEXT batch flags against the appended tranche
+    val next = Seq(
+      (200L, "entirely novel text that matches nothing in the history",
+        "en", "src0")).toDF("doc_id", "text", "lang", "source")
+    val v3 = TextOps.probeAppendBatch(next, path, txnId = "b1")
+      .collect().map(key).toSet
+    assert(v3 == Set((200L, 1L, Some(101L), Some(1.0))),
+      s"cross-batch accretion failed: $v3")
   }
 
   test("bigram LM: NLL bounds and bigram mass per eval doc") {

@@ -319,7 +319,7 @@ class TimeSeriesSpec extends SparkSpec {
         timestamp_micros(col("us")).as("ts"),
         (col("cents") / 100.0).as("value"),
         lit("view").as("event_type"), lit("{}").as("props"))
-    val dir = java.nio.file.Files.createTempDirectory("cusum").toString
+    val dir = tempDir("cusum")
     df.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = TimeSeries.cusumShift(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getAs[Int]("shifted")).toMap
@@ -340,7 +340,7 @@ class TimeSeriesSpec extends SparkSpec {
       .select(col("user_id"), col("event_id"),
         to_timestamp(col("ts_s")).as("ts"), col("value"),
         lit("view").as("event_type"), lit("{}").as("props"))
-    val dir = java.nio.file.Files.createTempDirectory("acf").toString
+    val dir = tempDir("acf")
     df.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val acf = TimeSeries.acfDaily(spark, dir).collect()
       .map(r => r.getAs[Int]("lag") ->
